@@ -1,17 +1,22 @@
-"""Graph / centrality operators (north-star extension; ABSENT in the
-reference, which has no relational surface at all — SURVEY.md §2.4).
+"""Graph operators over an edge relation (north-star extension; ABSENT
+in the reference, which has no relational surface at all — SURVEY.md
+§2.4): PageRank, label propagation and HITS; k-core peeling, the
+triangle and degree census, k-hop BFS and bipartite link prediction.
+Connected components by contraction (the dedup workhorse) lives in
+``dedup.near_duplicate_clusters``.
 
-Connected components (the dedup workhorse) lives in
-``dedup.near_duplicate_clusters``; this module holds the ranking and
-census side: damped random-walk centrality (PageRank) and triangle
-counting over an edge relation.
-
-Scale shape: every iteration is one contribution projection + one
-destination-keyed aggregate + one join back to the node set — all
-edge-/node-sized shuffles, nothing corpus-quadratic, and the iteration
-count is FIXED (power iteration), so the whole computation stays one
-lazy plan: no driver actions, no convergence probes, resumable and
-replayable like any other DataFrame.
+The FIXED-ROUND TIER — :func:`pagerank`, :func:`label_propagation` and
+:func:`hits` — runs a fixed number of rounds, each one edge-sized join
+plus one node-sized aggregate. There are no driver actions and no
+convergence probes, so the whole computation stays one lazy plan,
+resumable and replayable like any other DataFrame, and the DuckDB
+oracle unrolls the same rounds. All three run through
+:func:`_fixed_rounds`, which owns the tier's one truncation rule: the
+state frame is lazily ``localCheckpoint``ed after every ``every``-th
+round except the last. ``every`` is a per-operator constant, not an
+option: PySpark analyzes eagerly per transformation, so plan-build cost
+grows quadratically between truncations, while every truncation pays a
+full physical planning for the df→RDD conversion.
 
 Arithmetic is INTEGER micro-units (rank scaled by ``base``) with
 integer division everywhere: floating-point PageRank is
@@ -30,6 +35,88 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+# Truncation cadences of the fixed-round tier. PageRank: 3 measured ~25%
+# faster end-to-end than 6 at 8 iterations, and 1 slower again (≈ 10 s
+# vs 6.5-7 s on the 8-iteration trade graph); directed mode truncates
+# every round instead (see :func:`pagerank`).
+_PAGERANK_EVERY = 3
+_LABEL_PROPAGATION_EVERY = 2
+_HITS_EVERY = 4
+
+
+def _fixed_rounds(
+    state: DataFrame, rounds: int, every: int, step, receipt=None
+) -> tuple[DataFrame, DataFrame | None]:
+    """Apply ``step`` to the node-keyed ``state`` frame ``rounds`` times,
+    lazily truncating its lineage after every ``every``-th round except
+    the last. Returns ``(final state, receipt frame or None)``.
+
+    ``receipt=(col, name, agg)`` snapshots the penultimate state
+    (checkpointed, so comparing against it does not recompute the
+    shared chain) and builds the one-row ``name`` column
+    ``coalesce(agg(final col, penultimate col), 0)`` over the nodes
+    present in both."""
+    prev = None
+    for it in range(rounds):
+        if receipt is not None and it == rounds - 1:
+            state = prev = state.localCheckpoint(eager=False)
+        state = step(state)
+        if (it + 1) % every == 0 and it + 1 < rounds:
+            state = state.localCheckpoint(eager=False)
+    if receipt is None:
+        return state, None
+    col, name, agg = receipt
+    last = state.join(
+        prev.select(F.col("__node"), F.col(col).alias("__prev")), "__node"
+    ).agg(
+        F.coalesce(agg(F.col(col), F.col("__prev")), F.lit(0))
+        .cast("bigint")
+        .alias(name)
+    )
+    return state, last
+
+
+def _arcs(
+    edges: DataFrame, src_col: str, dst_col: str, symmetric: bool, *extra
+) -> DataFrame:
+    """``(__src, __dst, *extra)`` without self-loops; ``symmetric`` adds
+    every arc reversed, carrying the same ``extra`` columns. Not
+    deduplicated — callers collapse parallel arcs their own way."""
+    e = edges.select(
+        F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst"), *extra
+    )
+    if symmetric:
+        e = e.unionByName(
+            e.select(
+                F.col("__dst").alias("__src"),
+                F.col("__src").alias("__dst"),
+                *e.columns[2:],
+            )
+        )
+    return e.where(F.col("__src") != F.col("__dst"))
+
+
+def _undirected(edges: DataFrame, src_col: str, dst_col: str) -> DataFrame:
+    """Each undirected non-loop edge once, as ``(a, b)`` with ``a < b``."""
+    return (
+        edges.select(
+            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
+            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
+        )
+        .where(F.col("a") != F.col("b"))
+        .distinct()
+    )
+
+
+def _degrees(e: DataFrame) -> DataFrame:
+    """``(n, d)``: the degree of every endpoint of an ``(a, b)`` edge set."""
+    return (
+        e.select(F.col("a").alias("n"))
+        .unionByName(e.select(F.col("b").alias("n")))
+        .groupBy("n")
+        .agg(F.count(F.lit(1)).alias("d"))
+    )
+
 
 def pagerank(
     edges: DataFrame,
@@ -39,237 +126,158 @@ def pagerank(
     damping_pct: int = 85,
     base: int = 1_000_000,
     symmetric: bool = True,
-    checkpoint_every: int | None = 3,
     seeds: DataFrame | None = None,
     delta_receipt: bool = False,
     weight_col: str | None = None,
     init_ranks: DataFrame | None = None,
 ) -> DataFrame:
     """Damped random-walk centrality over an edge relation: fixed
-    ``iterations`` of ``rank'(u) = ((100 - d)·base + d·(Σ_{v→u}
-    (rank(v) div out_deg(v)) + dangling_share)) div 100`` with integer
-    micro-unit arithmetic (see module docstring). ``symmetric=True``
-    unions the reversed edges first — the undirected-graph rendering,
-    which guarantees no dangling nodes (every node that appears has at
-    least one out-edge), so the dangling term is identically zero and
-    is compiled out of the plan.
+    ``iterations`` of the personalization-vector update
 
+        ``rank'(u) = (seed(u)·(tele + d·share) + d·Σ_{v→u}
+        (rank(v)·w(v,u) div out_w(v))) div 100``
+
+    with integer micro-unit arithmetic (see module docstring).
+    ``seed(u)`` is 1 on the restart set and 0 elsewhere, ``tele`` is
+    the per-restart-node teleport mass and ``share`` is the per-restart-
+    node share of the rank sitting on sinks. Every mode below is this
+    one update with different inputs.
+
+    Without ``seeds`` every node is in the restart set and
+    ``tele = (100 - d)·base`` (the uniform teleport). ``seeds`` (a
+    one-column frame of node ids) switches to PERSONALIZED PageRank:
+    the same total teleport mass, ``(100-d)·base·n_nodes``, lands
+    entirely on the seed set (``div n_seeds`` each), so ranks measure
+    proximity TO THE SEEDS along the graph (related-entity retrieval).
+    Seeds not present in the edge set are ignored; an empty or disjoint
+    seed set fails loudly on division by zero.
+
+    ``symmetric=True`` unions the reversed edges first — the
+    undirected-graph rendering, which guarantees no dangling nodes, so
+    ``share`` is the literal 0 and no sink aggregate is planned.
     ``symmetric=False`` is the genuinely directed mode: the node set is
     the union of BOTH endpoints (pure sinks — nodes with only in-edges
-    — get output rows), and the rank mass sitting on sinks each
-    iteration is redistributed uniformly (``dangling_share =
-    Σ_sink rank div n_nodes``, one scalar aggregate per iteration —
-    the standard dangling-node treatment, kept in integer units so the
-    iteration stays bit-exact and oracle-matchable).
+    — get output rows), and the rank mass on sinks each iteration
+    re-enters through the restart set (``share = Σ_sink rank div
+    n_restart``, one scalar aggregate per iteration): uniformly without
+    seeds, on the seeds with them — a random surfer who hits a dead end
+    restarts where it would teleport to.
 
-    ``seeds`` (a one-column frame of node ids) switches to PERSONALIZED
-    PageRank: the teleport mass — ``(100-d)·base·n_nodes`` per
-    iteration, the same total the uniform mode spreads — lands entirely
-    on the seed set (``div n_seeds`` each), so ranks measure proximity
-    TO THE SEEDS along the graph (related-entity retrieval). Seeds not
-    present in the edge set are ignored. With ``symmetric=False``
-    (directed PPR — the link-graph related-page retrieval mode) the
-    dangling mass is TELEPORT-CONSISTENT: rank sitting on pure sinks
-    re-enters on the seed set (``d·Σ_sink rank div n_seeds`` per seed,
-    damped like any other hop), not uniformly — a random surfer who
-    hits a dead end restarts at a seed.
+    ``weight_col``: WEIGHTED random walk — each out-edge receives rank
+    proportional to its (positive integer) weight; parallel edges
+    collapse by summing weights, and ``degree`` in the output becomes
+    the out-STRENGTH (weight sum). Unweighted, parallel edges collapse
+    to one and every weight is 1. Symmetric mode mirrors each edge with
+    its weight.
+
+    ``init_ranks``: WARM START (incremental maintenance) from a previous
+    run's ``(node, rank)`` output instead of the uniform ``base``.
+    Because the iteration is a deterministic pure function of the rank
+    frame, ``pagerank(init=pagerank(edges, k), m)`` is BIT-EQUAL to
+    ``pagerank(edges, k + m)`` on an unchanged graph, and on a mutated
+    graph it converges from the warm point. Nodes new since the snapshot
+    start at ``base``; departed nodes' rows are dropped.
+
+    ``delta_receipt`` appends ``max_delta``: the max absolute rank
+    change between the final two iterations, in micro-units — the
+    fixpoint-proximity receipt that says whether the FIXED iteration
+    count was enough (same scalar on every row, still zero driver
+    actions).
+
+    The rank frame is truncated every 3 iterations; in directed mode it
+    is read TWICE per iteration (the contributions and the sink mass),
+    so there it is truncated every iteration — otherwise the doubled
+    subtree is genuinely recomputed (a before-plan of the directed
+    personalized query carried 168 BroadcastExchanges with zero
+    ReusedExchange; per-iteration truncation measured 8.0→4.3 s).
 
     Node set = all edge endpoints; ranks start at ``base`` each.
-    Returns ``(node, rank, degree)`` — rank in micro-units, degree =
-    out-degree (0 for pure sinks in directed mode).
-
-    ``checkpoint_every`` lazily ``localCheckpoint``s the rank frame
-    every N iterations: the plan stays O(N) deep for Catalyst while
-    still requiring zero driver actions (materialization happens on
-    the caller's first action, like every other operator here). Set
-    None to keep one pure plan (fine to ~10 iterations). Default 3
-    (r12): PySpark analyzes eagerly per transformation, so driver-side
-    plan-build cost is quadratic between truncations — cadence 3
-    measured ~25% faster end-to-end than 6 at 8 iterations, and
-    cadence 1 is slower again (every truncation pays a full physical
-    planning for the df→RDD conversion; re-confirmed r17: cadence 1 ≈
-    10 s vs cadence 3 ≈ 6.5-7 s on the 8-iteration trade graph).
-    In DIRECTED mode (``symmetric=False``) the rank frame is referenced
-    TWICE per iteration — the contribution projection and the dangling
-    scalar — so there the lineage is truncated EVERY iteration
-    regardless of ``checkpoint_every``: without it the duplicated
-    subtree is genuinely recomputed (the r17 before-plan of the
-    directed personalized query carried 168 BroadcastExchanges with
-    zero ReusedExchange; per-iteration truncation measured 8.0→4.3 s).
-
-    ``delta_receipt`` (r9, the k-core certificate's sibling) appends a
-    ``max_delta`` column: the max absolute rank change between the
-    final two iterations, in micro-units — the fixpoint-proximity
-    receipt that says whether the FIXED iteration count was enough
-    (one extra node-sized join + scalar aggregate, still zero driver
-    actions; same scalar on every row).
-
-    ``weight_col`` (r9): WEIGHTED random walk — each out-edge receives
-    rank proportional to its (positive integer) weight: ``contrib(v→u)
-    = rank(v)·w(v,u) div Σ_out w(v)``, computed per edge in the one
-    edge join (parallel edges collapse by summing weights; the
-    unweighted path keeps its original expressions bit-for-bit, so
-    existing oracles are untouched). ``degree`` in the output becomes
-    the out-STRENGTH (weight sum). Symmetric mode mirrors each edge
-    with its weight.
+    Returns ``(node, rank, degree[, max_delta])`` — rank in
+    micro-units, degree = out-degree (0 for pure sinks in directed
+    mode).
     """
     if iterations < 1:
         raise ValueError(f"pagerank: iterations must be >= 1, got {iterations}")
     if not 1 <= damping_pct <= 99:
         raise ValueError(f"pagerank: damping_pct must be in [1, 99], got {damping_pct}")
-    if weight_col is not None:
-        e = edges.select(
-            F.col(src_col).alias("__src"),
-            F.col(dst_col).alias("__dst"),
-            F.col(weight_col).cast("bigint").alias("__w"),
-        )
+    if weight_col is None:
+        e = _arcs(edges, src_col, dst_col, symmetric).distinct()
+        e = e.withColumn("__w", F.lit(1).cast("bigint"))
     else:
-        e = edges.select(
-            F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst")
-        )
-    if symmetric:
-        e = e.unionByName(
-            e.select(
-                F.col("__dst").alias("__src"),
-                F.col("__src").alias("__dst"),
-                *([F.col("__w")] if weight_col is not None else []),
+        # zero/negative weights are rejected in-plan
+        w = F.col(weight_col).cast("bigint").alias("__w")
+        e = (
+            _arcs(edges, src_col, dst_col, symmetric, w)
+            .groupBy("__src", "__dst")
+            .agg(
+                F.sum(
+                    F.when(
+                        F.col("__w") <= 0,
+                        F.raise_error(
+                            F.lit("pagerank: edge weights must be positive")
+                        ).cast("bigint"),
+                    ).otherwise(F.col("__w"))
+                ).alias("__w")
             )
         )
-    # lazy localCheckpoint the iteration's working set ONCE: every
-    # iteration references edges/deg/nodes, and without truncation each
-    # reference re-executes the whole upstream edge derivation (a
-    # fact-fact join in the trade-graph query) — 8 iterations paid the
-    # base join ~16×. Lazy, so the operator still performs no driver
-    # action; blocks are reclaimed by the ContextCleaner when the
-    # result is dropped.
-    # hash-partition the edge relation on the join key BEFORE the
-    # checkpoint: LogicalRDD preserves outputPartitioning, so the
-    # per-iteration contribution join reuses the layout instead of
-    # re-shuffling the (big) edge side every round — only the
-    # node-sized contribution frame moves per iteration
-    e = e.where(F.col("__src") != F.col("__dst"))
-    if weight_col is not None:
-        # parallel edges collapse by SUMMING weights (the natural
-        # multigraph semantics); zero/negative weights rejected in-plan
-        e = e.groupBy("__src", "__dst").agg(
-            F.sum(
-                F.when(
-                    F.col("__w") <= 0,
-                    F.raise_error(
-                        F.lit("pagerank: edge weights must be positive")
-                    ).cast("bigint"),
-                ).otherwise(F.col("__w"))
-            ).alias("__w")
-        )
-    else:
-        e = e.distinct()
-    # STATIC relations (edges, degrees, node set): cache(), not a lazy
-    # localCheckpoint — a checkpoint physically plans its frame at BUILD
-    # time (the r12 recall_report finding), while InMemoryRelation defers
-    # to the first action, is a LEAF to every later optimization pass,
-    # and preserves outputPartitioning the same way. Checkpoints remain
-    # on the ITERATION frames below, where lineage truncation (not just
-    # reuse) is the point. Empirical boundary (r12, measured both ways):
-    # cache wins for MANY-referenced or node-sized frames (pagerank's 8
-    # reads of e amortize the columnar encode), while ops that reference
-    # an edge-sized string-heavy frame only 2-3 times in one heavy job
-    # (triangle census, components-mode label propagation, HITS) measured
-    # 2-3x SLOWER cached — the columnar encode/decode outweighs the
-    # planning saved — and keep lazy checkpoints instead.
+    # Hash-partition the edge relation on the join key before caching:
+    # the cached relation preserves outputPartitioning, so the
+    # per-iteration contribution join reuses the layout and only the
+    # node-sized rank frame moves per iteration.
+    # STATIC relations (edges, degrees, node set) are cache()d, not
+    # lazily checkpointed: a checkpoint physically plans its frame at
+    # BUILD time, while InMemoryRelation defers to the first action and
+    # is a leaf to every later optimization pass. Measured both ways:
+    # cache wins for many-referenced or node-sized frames (PageRank's 8
+    # reads of e amortize the columnar encode), while ops that read an
+    # edge-sized string-heavy frame only 2-3 times in one heavy job
+    # (triangle census, label propagation, HITS) measured 2-3x SLOWER
+    # cached and keep lazy checkpoints instead.
     e = e.repartition(F.col("__src")).cache()
-    if weight_col is not None:
-        deg = (
-            e.groupBy("__src")
-            .agg(F.sum("__w").alias("__deg"))
-            .cache()
-        )
-    else:
-        deg = (
-            e.groupBy("__src")
-            .agg(F.count("*").alias("__deg"))
-            .cache()
-        )
-    if symmetric:
-        # after symmetrization every endpoint appears as a source —
-        # src-only is the complete node set and reads e once
-        nodes = e.select(F.col("__src").alias("__node")).distinct()
-    else:
-        nodes = (
-            e.select(F.col("__src").alias("__node"))
-            .unionByName(e.select(F.col("__dst").alias("__node")))
-            .distinct()
-        )
-    nodes = nodes.cache()
-    # (node, out_degree) carried IN the rank frame for the whole run
-    # (r12): the previous shape re-joined ranks⋈deg every iteration —
-    # checkpointed RDD frames lose their output partitioning, so that
-    # node-sized join re-shuffled BOTH sides each round. With __deg a
-    # rank-frame column, the contribution is a filter+project, sinks
-    # are ``__deg IS NULL`` (no per-iteration semi-join), and the
-    # output degree column is free.
+    deg = e.groupBy("__src").agg(F.sum("__w").alias("__deg")).cache()
+    # after symmetrization every endpoint appears as a source
+    nodes = e.select(F.col("__src").alias("__node"))
+    if not symmetric:
+        nodes = nodes.unionByName(e.select(F.col("__dst").alias("__node")))
+    nodes = nodes.distinct().cache()
+    # (node, out_degree) and the loop-invariant restart columns ride the
+    # rank frame for the whole run: checkpointed frames lose their
+    # output partitioning, so re-joining them every iteration would
+    # re-shuffle both sides each round. Sinks are ``__deg IS NULL``.
     nd = nodes.join(
         deg.select(F.col("__src").alias("__node"), F.col("__deg")),
         "__node",
         "left",
     )
-    if not symmetric:
-        # scalar node count for the per-iteration dangling share —
-        # one row, computed once, broadcast into every iteration
-        n_nodes = (
-            nodes.agg(F.count("*").cast("bigint").alias("__n"))
-            .cache()
+    teleport = (100 - damping_pct) * base
+    n_nodes = nodes.agg(F.count("*").cast("bigint").alias("__n"))
+    if seeds is None:
+        n_restart = n_nodes
+        nd = nd.select(
+            "*",
+            F.lit(1).alias("__is_seed"),
+            F.lit(teleport).cast("bigint").alias("__tele"),
         )
-    if seeds is not None:
+    else:
         seed_nodes = (
             seeds.select(F.col(seeds.columns[0]).alias("__node"))
             .distinct()
             .join(nodes, "__node", "left_semi")
             .cache()
         )
-        # per-seed teleport = (100-d)·base·n_nodes div n_seeds — the
-        # SAME total mass the uniform mode spreads, concentrated on the
-        # seeds. (Empty/disjoint seed sets fail loudly on div-by-zero.)
-        seed_tele = (
-            nodes.agg(F.count("*").cast("bigint").alias("__n"))
-            .crossJoin(
-                F.broadcast(
-                    seed_nodes.agg(F.count("*").cast("bigint").alias("__s"))
-                )
-            )
-            .select(
-                F.expr(
-                    f"cast({(100 - damping_pct) * base} as bigint) * __n div __s"
-                ).alias("__tele")
-            )
+        n_restart = seed_nodes.agg(F.count("*").cast("bigint").alias("__s"))
+        tele = n_nodes.crossJoin(F.broadcast(n_restart)).select(
+            F.expr(f"cast({teleport} as bigint) * __n div __s").alias("__tele")
         )
-        # STATIC per-node iteration inputs ride the cached node frame
-        # (r17): the seed membership flag and the one-row teleport
-        # scalar were previously re-attached EVERY iteration (one
-        # node-sized join + one broadcast crossJoin per round); both
-        # are loop-invariant, so they are folded into ``nd`` once and
-        # the per-iteration plan loses a join and a broadcast.
         nd = nd.join(
             seed_nodes.withColumn("__is_seed", F.lit(1)), "__node", "left"
-        ).crossJoin(F.broadcast(seed_tele))
-        if not symmetric:
-            # directed PPR: the per-iteration sink mass is divided by
-            # the SEED count (teleport-consistent dangling), one scalar
-            n_seeds = (
-                seed_nodes.agg(F.count("*").cast("bigint").alias("__s"))
-                .cache()
-            )
+        ).crossJoin(F.broadcast(tele))
+        n_restart = n_restart.withColumnRenamed("__s", "__n")
+    if not symmetric:
+        # the one-row restart count is broadcast into every iteration
+        n_restart = n_restart.cache()
     nd = nd.cache()
     if init_ranks is not None:
-        # WARM START (incremental maintenance): resume from a previous
-        # run's (node, rank) output instead of the uniform ``base``.
-        # Because the iteration is a deterministic pure function of the
-        # rank frame, pagerank(init=pagerank(edges, k), m) is BIT-EQUAL
-        # to pagerank(edges, k + m) on an unchanged graph — the
-        # equivalence the incremental registry query's oracle exploits —
-        # and on a mutated graph it converges from the warm point
-        # instead of from scratch. Nodes new since the snapshot start at
-        # ``base``; departed nodes' rows are dropped by the node-set
-        # join.
         prev = init_ranks.select(
             F.col(init_ranks.columns[0]).alias("__node"),
             F.col(init_ranks.columns[1]).cast("bigint").alias("__prev_rank"),
@@ -285,150 +293,55 @@ def pagerank(
         )
     else:
         ranks = nd.withColumn("__rank", F.lit(base).cast("bigint"))
-    teleport = (100 - damping_pct) * base
-    prev_ranks = None
-    # loop-invariant per-node columns (__deg, and in seed mode
-    # __is_seed/__tele) ride the rank frame through every iteration's
-    # select, so no per-iteration re-attachment join is needed
+    share = "0" if symmetric else "__share"
+    rank = F.expr(
+        f"(coalesce(__is_seed, 0) * (__tele + {damping_pct} * {share}) + "
+        f"{damping_pct} * coalesce(__incoming, cast(0 as bigint))) div 100"
+    ).alias("__rank")
     static_cols = [c for c in nd.columns if c != "__node"]
-    for it in range(iterations):
-        if delta_receipt and it == iterations - 1:
-            # snapshot the penultimate ranks; checkpointed so the
-            # receipt join doesn't recompute the shared iteration chain
-            prev_ranks = ranks.localCheckpoint(eager=False)
-            ranks = prev_ranks
-        # per-NODE contribution first (node-sized join of two node-keyed
-        # frames), then a single edge join — the edge relation is the
-        # big side and should be touched exactly once per iteration.
-        # (r17 note: fusing this aggregate with the node-set join-back
-        # into one union+groupBy exchange was tried and MEASURED SLOWER
-        # — 7.5→8.6 s on q_graph_pagerank — because it shuffles the
-        # whole node frame per round where the join-back is a
-        # tiny-build broadcast probe; the join-back stays.)
-        if weight_col is not None:
-            # weighted: the per-edge share needs the edge weight, so
-            # carry (rank, strength) to the edge join and split there.
-            # __deg rides in the rank frame — no per-iteration deg join
-            node_side = ranks.where(F.col("__deg").isNotNull()).select(
-                F.col("__node").alias("__src"), F.col("__rank"), F.col("__deg")
-            )
-            incoming = (
-                e.join(node_side, "__src")
-                .groupBy("__dst")
-                .agg(
-                    F.sum(F.expr("(__rank * __w) div __deg")).alias("__incoming")
-                )
-            )
-        else:
-            node_contrib = ranks.where(F.col("__deg").isNotNull()).select(
-                F.col("__node").alias("__src"),
-                F.expr("__rank div __deg").alias("__contrib"),
-            )
-            incoming = (
-                e.join(node_contrib, "__src")
-                .groupBy("__dst")
-                .agg(F.sum("__contrib").alias("__incoming"))
-            )
-        new_ranks = nd.join(incoming, nd["__node"] == incoming["__dst"], "left")
-        keep = [F.col("__node"), *[F.col(c) for c in static_cols]]
-        if symmetric and seeds is not None:
-            ranks = new_ranks.select(
-                *keep,
-                F.expr(
-                    "(coalesce(__is_seed, 0) * __tele + "
-                    f"{damping_pct} * "
-                    "coalesce(__incoming, cast(0 as bigint))) div 100"
-                ).alias("__rank"),
-            )
-        elif symmetric:
-            ranks = new_ranks.select(
-                *keep,
-                F.expr(
-                    f"(cast({teleport} as bigint) + {damping_pct} * "
-                    "coalesce(__incoming, cast(0 as bigint))) div 100"
-                ).alias("__rank"),
-            )
-        elif seeds is not None:
-            # directed PERSONALIZED: teleport AND dangling mass both
-            # land on the seed set — a surfer at a dead end restarts at
-            # a seed (damped like any hop); scalar payloads only
+
+    def step(cur: DataFrame) -> DataFrame:
+        # the edge relation is the big side: touch it exactly once per
+        # iteration, splitting each source's rank in the one edge join
+        src = cur.where(F.col("__deg").isNotNull()).select(
+            F.col("__node").alias("__src"), F.col("__rank"), F.col("__deg")
+        )
+        incoming = (
+            e.join(src, "__src")
+            .groupBy("__dst")
+            .agg(F.sum(F.expr("(__rank * __w) div __deg")).alias("__incoming"))
+        )
+        new = nd.join(incoming, nd["__node"] == incoming["__dst"], "left")
+        if not symmetric:
+            # scalar payloads only (the one-row broadcast crossJoin rule)
             sink_share = (
-                ranks.where(F.col("__deg").isNull())
+                cur.where(F.col("__deg").isNull())
                 .agg(
                     F.coalesce(F.sum("__rank"), F.lit(0))
                     .cast("bigint")
                     .alias("__sink_sum")
                 )
-                .crossJoin(F.broadcast(n_seeds))
-                .select(F.expr("__sink_sum div __s").alias("__sink_share"))
+                .crossJoin(F.broadcast(n_restart))
+                .select(F.expr("__sink_sum div __n").alias("__share"))
             )
-            ranks = new_ranks.crossJoin(F.broadcast(sink_share)).select(
-                *keep,
-                F.expr(
-                    "(coalesce(__is_seed, 0) * "
-                    f"(__tele + {damping_pct} * __sink_share) + "
-                    f"{damping_pct} * "
-                    "coalesce(__incoming, cast(0 as bigint))) div 100"
-                ).alias("__rank"),
-            )
-        else:
-            # dangling mass: ranks sitting on nodes with no out-edge,
-            # redistributed uniformly — scalar payload only (the one-row
-            # broadcast crossJoin rule: scalars yes, arrays never)
-            sink_share = (
-                ranks.where(F.col("__deg").isNull())
-                .agg(
-                    F.coalesce(F.sum("__rank"), F.lit(0))
-                    .cast("bigint")
-                    .alias("__sink_sum")
-                )
-                .crossJoin(F.broadcast(n_nodes))
-                .select(F.expr("__sink_sum div __n").alias("__sink_share"))
-            )
-            ranks = new_ranks.crossJoin(F.broadcast(sink_share)).select(
-                *keep,
-                F.expr(
-                    f"(cast({teleport} as bigint) + {damping_pct} * "
-                    "(coalesce(__incoming, cast(0 as bigint)) + __sink_share)) "
-                    "div 100"
-                ).alias("__rank"),
-            )
-        if not symmetric and it + 1 < iterations:
-            # directed modes reference the rank frame TWICE per
-            # iteration (the contribution projection AND the dangling
-            # scalar) — truncate the lineage every round so the scalar
-            # reads a LogicalRDD instead of re-executing the chain
-            # (r17: the directed_personalized before-plan carried 168
-            # BroadcastExchanges with ZERO ReusedExchange — the doubled
-            # subtree was genuinely recomputed)
-            ranks = ranks.localCheckpoint(eager=False)
-        elif (
-            checkpoint_every
-            and (it + 1) % checkpoint_every == 0
-            and it + 1 < iterations
-        ):
-            ranks = ranks.localCheckpoint(eager=False)
+            new = new.crossJoin(F.broadcast(sink_share))
+        return new.select(F.col("__node"), *static_cols, rank)
+
+    ranks, delta = _fixed_rounds(
+        ranks,
+        iterations,
+        _PAGERANK_EVERY if symmetric else 1,
+        step,
+        ("__rank", "max_delta", lambda cur, prev: F.max(F.abs(cur - prev)))
+        if delta_receipt
+        else None,
+    )
     out = ranks.select(
         F.col("__node").alias("node"),
         F.col("__rank").alias("rank"),
         F.coalesce(F.col("__deg"), F.lit(0)).cast("bigint").alias("degree"),
     )
-    if delta_receipt:
-        delta = (
-            ranks.join(
-                prev_ranks.select(
-                    F.col("__node"), F.col("__rank").alias("__prev")
-                ),
-                "__node",
-            )
-            .agg(
-                F.coalesce(
-                    F.max(F.abs(F.col("__rank") - F.col("__prev"))), F.lit(0)
-                )
-                .cast("bigint")
-                .alias("max_delta")
-            )
-        )
+    if delta is not None:
         out = out.crossJoin(F.broadcast(delta))
     return out
 
@@ -439,12 +352,11 @@ def label_propagation(
     dst_col: str = "dst",
     iterations: int = 6,
     mode: str = "components",
-    checkpoint_every: int | None = 2,
     change_receipt: bool = False,
 ) -> DataFrame:
     """Fixed-round label propagation over an undirected edge relation
-    — the third member of the fixed-iteration graph tier (PageRank's
-    and k-core's sibling; no reference counterpart, SURVEY.md §2.4).
+    — a member of the fixed-round graph tier (PageRank's and HITS'
+    sibling; no reference counterpart, SURVEY.md §2.4).
 
     ``mode='components'`` is min-label propagation: each round every
     node takes the minimum of its own label and its neighbors' labels,
@@ -473,9 +385,7 @@ def label_propagation(
     localCheckpoint, so each round re-shuffles only the node-sized
     label frame) + one destination-keyed aggregate (components: MIN —
     map-side combinable; communities: per-(node,label) counts + one
-    row_number window). Fixed round count, zero driver actions, no
-    convergence probes — one lazy plan, same contract as
-    :func:`pagerank`.
+    row_number window). The label frame is truncated every 2 rounds.
 
     ``change_receipt`` appends ``n_changed``: how many labels the
     FINAL round changed (same scalar every row, broadcast crossJoin —
@@ -496,12 +406,8 @@ def label_propagation(
         )
     from pyspark.sql import Window
 
-    e = edges.select(F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst"))
-    e = e.unionByName(
-        e.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
-    )
     e = (
-        e.where(F.col("__src") != F.col("__dst"))
+        _arcs(edges, src_col, dst_col, True)
         .distinct()
         .repartition(F.col("__src"))
         .localCheckpoint(eager=False)
@@ -510,12 +416,8 @@ def label_propagation(
     nodes = (
         e.select(F.col("__src").alias("__node")).distinct().localCheckpoint(eager=False)
     )
-    labels = nodes.withColumn("__label", F.col("__node"))
-    prev_labels = None
-    for it in range(iterations):
-        if change_receipt and it == iterations - 1:
-            prev_labels = labels.localCheckpoint(eager=False)
-            labels = prev_labels
+
+    def step(labels: DataFrame) -> DataFrame:
         lab_src = labels.select(F.col("__node").alias("__src"), F.col("__label"))
         if mode == "components":
             nbr = (
@@ -523,15 +425,7 @@ def label_propagation(
                 .groupBy("__dst")
                 .agg(F.min("__label").alias("__nbr"))
             )
-            labels = (
-                labels.join(nbr, labels["__node"] == nbr["__dst"], "left")
-                .select(
-                    F.col("__node"),
-                    F.least(
-                        F.col("__label"), F.coalesce(F.col("__nbr"), F.col("__label"))
-                    ).alias("__label"),
-                )
-            )
+            new = F.least(F.col("__label"), F.coalesce(F.col("__nbr"), F.col("__label")))
         else:
             cnt = (
                 e.join(lab_src, "__src")
@@ -541,38 +435,27 @@ def label_propagation(
             w = Window.partitionBy("__dst").orderBy(
                 F.col("__c").desc(), F.col("__label").asc()
             )
-            win = (
+            nbr = (
                 cnt.withColumn("__rn", F.row_number().over(w))
                 .where(F.col("__rn") == 1)
-                .select(F.col("__dst"), F.col("__label").alias("__win"))
+                .select(F.col("__dst"), F.col("__label").alias("__nbr"))
             )
-            labels = (
-                labels.join(win, labels["__node"] == win["__dst"], "left")
-                .select(
-                    F.col("__node"),
-                    F.coalesce(F.col("__win"), F.col("__label")).alias("__label"),
-                )
-            )
-        if checkpoint_every and (it + 1) % checkpoint_every == 0 and it + 1 < iterations:
-            labels = labels.localCheckpoint(eager=False)
-    out = labels.select(F.col("__node").alias("node"), F.col("__label").alias("label"))
-    if change_receipt:
-        changed = (
-            labels.join(
-                prev_labels.select(
-                    F.col("__node"), F.col("__label").alias("__prev")
-                ),
-                "__node",
-            )
-            .agg(
-                F.coalesce(
-                    F.sum((F.col("__label") != F.col("__prev")).cast("bigint")),
-                    F.lit(0),
-                )
-                .cast("bigint")
-                .alias("n_changed")
-            )
+            new = F.coalesce(F.col("__nbr"), F.col("__label"))
+        return labels.join(nbr, labels["__node"] == nbr["__dst"], "left").select(
+            F.col("__node"), new.alias("__label")
         )
+
+    labels, changed = _fixed_rounds(
+        nodes.withColumn("__label", F.col("__node")),
+        iterations,
+        _LABEL_PROPAGATION_EVERY,
+        step,
+        ("__label", "n_changed", lambda cur, prev: F.sum((cur != prev).cast("bigint")))
+        if change_receipt
+        else None,
+    )
+    out = labels.select(F.col("__node").alias("node"), F.col("__label").alias("label"))
+    if changed is not None:
         out = out.crossJoin(F.broadcast(changed))
     return out
 
@@ -611,54 +494,32 @@ def k_core(
         raise ValueError(f"k_core: k must be >= 1, got {k}")
     if iterations < 1:
         raise ValueError(f"k_core: iterations must be >= 1, got {iterations}")
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
+
+    def peel(alive: DataFrame) -> DataFrame:
+        keep = _degrees(alive).where(F.col("d") >= k).select("n")
+        keep = keep.localCheckpoint(eager=False)
+        return alive.join(keep.withColumnRenamed("n", "a"), "a", "left_semi").join(
+            keep.withColumnRenamed("n", "b"), "b", "left_semi"
         )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .cache()
-    )
-    alive_e = e
+
+    alive_e = _undirected(edges, src_col, dst_col).cache()
     for _ in range(iterations):
-        deg = (
-            alive_e.select(F.col("a").alias("n"))
-            .unionByName(alive_e.select(F.col("b").alias("n")))
-            .groupBy("n")
-            .agg(F.count(F.lit(1)).alias("d"))
-        )
-        keep = deg.where(F.col("d") >= k).select("n").localCheckpoint(eager=False)
-        alive_e = (
-            alive_e.join(keep.withColumnRenamed("n", "a"), "a", "left_semi")
-            .join(keep.withColumnRenamed("n", "b"), "b", "left_semi")
-            .localCheckpoint(eager=False)
-        )
+        alive_e = peel(alive_e).localCheckpoint(eager=False)
     # convergence certificate: one extra peel round — the peel is a
     # monotone contraction (next_e ⊆ alive_e), so equal EDGE COUNTS
     # prove the fixpoint; one scalar-only broadcast crossJoin
-    deg_x = (
-        alive_e.select(F.col("a").alias("n"))
-        .unionByName(alive_e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-    )
-    keep_x = deg_x.where(F.col("d") >= k).select("n").localCheckpoint(eager=False)
-    next_e = alive_e.join(keep_x.withColumnRenamed("n", "a"), "a", "left_semi").join(
-        keep_x.withColumnRenamed("n", "b"), "b", "left_semi"
-    )
+    next_e = peel(alive_e)
     converged = (
         alive_e.agg(F.count(F.lit(1)).alias("__before"))
         .crossJoin(F.broadcast(next_e.agg(F.count(F.lit(1)).alias("__after"))))
         .select((F.col("__before") == F.col("__after")).alias("is_converged"))
     )
-    final_deg = (
-        alive_e.select(F.col("a").alias("node"))
-        .unionByName(alive_e.select(F.col("b").alias("node")))
-        .groupBy("node")
-        .agg(F.count(F.lit(1)).alias("degree"))
+    return (
+        _degrees(alive_e)
+        .where(F.col("d") >= k)
+        .select(F.col("n").alias("node"), F.col("d").alias("degree"))
+        .crossJoin(F.broadcast(converged))
     )
-    return final_deg.where(F.col("degree") >= k).crossJoin(F.broadcast(converged))
 
 
 def triangle_count(
@@ -685,22 +546,8 @@ def triangle_count(
     # truncation each reference re-executes the whole upstream pair
     # generator (minhash pipeline in the near-dup query — measured 7 s
     # for a 2 s graph)
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-        .localCheckpoint(eager=False)
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionByName(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).alias("d"))
-        .localCheckpoint(eager=False)
-    )
+    e = _undirected(edges, src_col, dst_col).localCheckpoint(eager=False)
+    deg = _degrees(e).localCheckpoint(eager=False)
     ed = e.join(
         deg.select(F.col("n").alias("a"), F.col("d").alias("__da")), "a"
     ).join(deg.select(F.col("n").alias("b"), F.col("d").alias("__db")), "b")
@@ -739,7 +586,6 @@ def hits(
     dst_col: str = "dst",
     iterations: int = 6,
     base: int = 1_000_000,
-    checkpoint_every: int | None = 4,
 ) -> DataFrame:
     """Hubs-and-authorities (HITS / Kleinberg) over a directed edge
     relation: fixed ``iterations`` of the coupled power iteration
@@ -764,10 +610,9 @@ def hits(
     only the node-sized score frame moves per iteration. The L1 total
     is one scalar aggregate per half-step (broadcast as a scalar —
     the one-row crossJoin rule), there are no driver actions, and the
-    periodic lazy checkpoint truncates the lineage like
-    :func:`pagerank`. The renormalization product (≈ n²·base²) runs in
-    exact decimal(38,0) — wide enough past a quadrillion nodes — and
-    the quotient drops back to bigint.
+    hub frame is truncated every 4 rounds. The renormalization product
+    (≈ n²·base²) runs in exact decimal(38,0) — wide enough past a
+    quadrillion nodes — and the quotient drops back to bigint.
 
     An empty edge set (after self-loop removal) has an empty node set
     and returns an EMPTY frame — zero rows, not silent zero scores.
@@ -777,12 +622,12 @@ def hits(
     """
     if iterations < 1:
         raise ValueError(f"hits: iterations must be >= 1, got {iterations}")
-    e = (
-        edges.select(F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst"))
-        .where(F.col("__src") != F.col("__dst"))
+    e_src = (
+        _arcs(edges, src_col, dst_col, False)
         .distinct()
+        .repartition(F.col("__src"))
+        .localCheckpoint(eager=False)
     )
-    e_src = e.repartition(F.col("__src")).localCheckpoint(eager=False)
     e_dst = e_src.repartition(F.col("__dst")).localCheckpoint(eager=False)
     nodes = (
         e_src.select(F.col("__src").alias("__node"))
@@ -795,14 +640,22 @@ def hits(
         F.expr(f"count(*) * cast({base} as bigint)").alias("__total")
     ).localCheckpoint(eager=False)
 
-    def _normalize(raw: DataFrame, score: str) -> DataFrame:
-        # raw is node-keyed (__node, score) with absent nodes missing;
-        # rescale to Σ = n·base and re-attach the zero-score nodes.
-        # raw is referenced TWICE (the scalar sum + the values) — lazily
-        # checkpoint so the plan is truncated to a LogicalRDD instead of
-        # DOUBLING per half-step (2^(2·iterations) leaf expansion
-        # otherwise; planning alone dominated the wall time)
-        raw = raw.localCheckpoint(eager=False)
+    def half_step(
+        e: DataFrame, scores: DataFrame, frm: str, to: str, score_in: str, score: str
+    ) -> DataFrame:
+        # sum ``score_in`` along the arcs frm→to, rescale to Σ = n·base
+        # and re-attach the zero-score nodes. raw is referenced TWICE
+        # (the scalar sum + the values) — lazily checkpoint so the plan
+        # is truncated to a LogicalRDD instead of DOUBLING per half-step
+        # (2^(2·iterations) leaf expansion otherwise; planning alone
+        # dominated the wall time)
+        raw = (
+            e.join(scores, e[frm] == scores["__node"])
+            .groupBy(to)
+            .agg(F.sum(score_in).alias(score))
+            .select(F.col(to).alias("__node"), F.col(score))
+            .localCheckpoint(eager=False)
+        )
         s = raw.agg(F.sum(score).cast("bigint").alias("__sum"))
         return (
             nodes.join(raw, "__node", "left")
@@ -810,11 +663,9 @@ def hits(
             .crossJoin(F.broadcast(total))
             .select(
                 F.col("__node"),
-                # the rescale product needs ~2× the bits of the scores:
                 # score ≤ total = n·base, so score·total ≈ n²·base² —
-                # overflowed int64 at 8M nodes in the scale bench. The
-                # multiply runs in exact decimal(38,0) (good to 1e38);
-                # the quotient is back ≤ total and fits bigint
+                # overflowed int64 at 8M nodes in the scale bench; the
+                # quotient is back ≤ total and fits bigint
                 F.expr(
                     f"cast(cast(coalesce({score}, 0) as decimal(38, 0)) "
                     "* __total div __sum as bigint)"
@@ -822,26 +673,19 @@ def hits(
             )
         )
 
-    hubs = nodes.withColumn("__hub", F.lit(base).cast("bigint"))
     auths = None
-    for it in range(iterations):
-        auth_raw = (
-            e_src.join(hubs, e_src["__src"] == hubs["__node"])
-            .groupBy("__dst")
-            .agg(F.sum("__hub").alias("__auth"))
-            .select(F.col("__dst").alias("__node"), F.col("__auth"))
-        )
-        auths = _normalize(auth_raw, "__auth")
-        hub_raw = (
-            e_dst.join(auths, e_dst["__dst"] == auths["__node"])
-            .groupBy("__src")
-            .agg(F.sum("__auth").alias("__hub"))
-            .select(F.col("__src").alias("__node"), F.col("__hub"))
-        )
-        hubs = _normalize(hub_raw, "__hub")
-        if checkpoint_every and (it + 1) % checkpoint_every == 0 and it + 1 < iterations:
-            hubs = hubs.localCheckpoint(eager=False)
-            auths = auths.localCheckpoint(eager=False)
+
+    def step(hubs: DataFrame) -> DataFrame:
+        nonlocal auths
+        auths = half_step(e_src, hubs, "__src", "__dst", "__hub", "__auth")
+        return half_step(e_dst, auths, "__dst", "__src", "__auth", "__hub")
+
+    hubs, _ = _fixed_rounds(
+        nodes.withColumn("__hub", F.lit(base).cast("bigint")),
+        iterations,
+        _HITS_EVERY,
+        step,
+    )
     return hubs.join(auths, "__node").select(
         F.col("__node").alias("node"),
         F.col("__hub").alias("hub"),
@@ -873,14 +717,11 @@ def k_hop_distances(
     weights make this exact: a node's distance is final the moment it
     is first reached (BFS level order), so settled nodes can never
     propagate a smaller distance later and re-relaxing them is pure
-    waste — the r16 optimization replaced the relax-everything shape
-    (which re-joined ALL settled nodes against the edge relation every
-    hop, ~4 full edge passes at depth 4 even after the reachable set
-    saturates) with textbook frontier BFS: the edge join touches only
-    frontier-adjacent edges and the per-hop aggregate is
-    frontier-sized. Result rows are identical (asserted against the
-    driver-side BFS property test). ``symmetric=True`` unions reversed
-    edges (undirected reach).
+    waste (re-joining ALL settled nodes costs ~4 full edge passes at
+    depth 4 even after the reachable set saturates): the edge join
+    touches only frontier-adjacent edges and the per-hop aggregate is
+    frontier-sized (asserted against the driver-side BFS property
+    test). ``symmetric=True`` unions reversed edges (undirected reach).
 
     Returns ``(node, dist)``, one row per reached node, ``dist`` in
     ``[0, max_hops]`` with seeds at 0.
@@ -888,15 +729,11 @@ def k_hop_distances(
     if max_hops < 1:
         raise ValueError(f"k_hop_distances: max_hops must be >= 1, got {max_hops}")
     e = (
-        edges.select(F.col(src_col).alias("__src"), F.col(dst_col).alias("__dst"))
-        .where(F.col("__src") != F.col("__dst"))
+        _arcs(edges, src_col, dst_col, symmetric)
         .distinct()
+        .repartition(F.col("__src"))
+        .cache()
     )
-    if symmetric:
-        e = e.unionByName(
-            e.select(F.col("__dst").alias("__src"), F.col("__src").alias("__dst"))
-        ).distinct()
-    e = e.repartition(F.col("__src")).cache()
     dist = (
         seeds.select(F.col(seeds.columns[0]).alias("__node"))
         .distinct()
@@ -1022,22 +859,9 @@ def degree_distribution(
 
     Returns ``(bucket, n_nodes, min_degree, max_degree)`` where bucket
     b covers degrees in [2^b, 2^(b+1))."""
-    e = (
-        edges.select(
-            F.least(F.col(src_col), F.col(dst_col)).alias("a"),
-            F.greatest(F.col(src_col), F.col(dst_col)).alias("b"),
-        )
-        .where(F.col("a") != F.col("b"))
-        .distinct()
-    )
-    deg = (
-        e.select(F.col("a").alias("n"))
-        .unionByName(e.select(F.col("b").alias("n")))
-        .groupBy("n")
-        .agg(F.count(F.lit(1)).cast("bigint").alias("d"))
-    )
     return (
-        deg.select(
+        _degrees(_undirected(edges, src_col, dst_col))
+        .select(
             F.expr("cast(floor(log2(cast(d as double))) as int)").alias("bucket"),
             "d",
         )

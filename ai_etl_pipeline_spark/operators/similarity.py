@@ -1593,29 +1593,6 @@ def pq_encode(
     )
 
 
-def pq_reconstruct_expr(
-    codebooks: list[list[tuple[int, list[float]]]], codes_col: str = "pq_codes"
-) -> Column:
-    """Decode a PQ code array back to its approximate vector: concat of
-    the m codebook entries, inlined as literal nested arrays — pure
-    codegen lookup, SQL-replayable (the oracle does the same with
-    ``c1_j`` joins)."""
-    parts = []
-    for j, book in enumerate(codebooks):
-        arr = "array({})".format(
-            ",".join(
-                "array({})".format(
-                    ",".join(f"cast({x!r} as double)" for x in vec)
-                )
-                for _, vec in sorted(book)
-            )
-        )
-        parts.append(
-            F.expr(f"element_at({arr}, element_at({codes_col}, {j + 1}) + 1)")
-        )
-    return F.concat(*parts)
-
-
 def pq_knn(
     corpus: DataFrame,
     queries: DataFrame,

@@ -94,7 +94,14 @@ def versioned_upsert(
        under ``data/v{N}``;
     3. commit: new manifest = untouched files + new files. Readers of
        older versions are untouched (their manifests still list the
-       old files, which are never deleted)."""
+       old files, which are never deleted).
+
+    File-count contract: the rewrite ``coalesce``s to ``len(touched)``
+    partitions, and coalesce cannot add partitions or balance rows, so
+    it may write FEWER than ``len(touched)`` new files (at least one),
+    with uneven row counts. No reader may depend on the file count or
+    on which file a row lands in; ``snapshot_read`` and ``change_feed``
+    read the manifest's actual files and are placement-invariant."""
     versions = list_versions(base)
     if not versions:
         raise ValueError(f"no committed versions at {base}")

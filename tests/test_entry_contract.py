@@ -1,19 +1,19 @@
 """Driver-contract smoke: entry() runs on a bare-config session, every
 queries() entry has a callable signature, oracle keys are a subset, and a
-representative sample hash-matches DuckDB (the FULL sweep lives in
+representative sample — plus every graph query — hash-matches DuckDB
+under the parity tool's canonicalizer (the FULL sweep lives in
 tools/check_parity.py — this keeps CI fast)."""
 
-import math
+import os
+import sys
 
 import duckdb
 import pytest
 
 import __spark_entry__ as entrymod
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part",
-    "orders", "lineitem", "events", "documents", "embeddings",
-]
+sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+from check_parity import TABLES, frame_signature  # noqa: E402
 
 SAMPLE = [
     "q_pricing_summary",
@@ -24,7 +24,7 @@ SAMPLE = [
     "q_dedup_docs_exact",
     "q_text_tokens",
     "q_events_tumbling",
-]
+] + sorted(q for q in entrymod.queries() if q.startswith("q_graph_"))
 
 
 def test_entry_smoke(spark):
@@ -51,25 +51,7 @@ def duck(sf_dir):
     return con
 
 
-def _norm(v):
-    if v is None:
-        return "NULL"
-    if isinstance(v, float):
-        return "NULL" if math.isnan(v) else repr(float(v))
-    if hasattr(v, "isoformat"):
-        return v.isoformat()
-    return str(v)
-
-
 @pytest.mark.parametrize("name", SAMPLE)
 def test_sample_oracle_parity(spark, sf_dir, duck, name):
-    sdf = entrymod.queries()[name](spark, sf_dir)
-    rel = duck.sql(entrymod.oracle_sql()[name])
-    scols, srows = list(sdf.columns), [tuple(r) for r in sdf.collect()]
-    dcols, drows = list(rel.columns), rel.fetchall()
-    assert sorted(scols) == sorted(dcols)
-    sidx = sorted(range(len(scols)), key=lambda i: scols[i])
-    didx = sorted(range(len(dcols)), key=lambda i: dcols[i])
-    a = sorted(tuple(_norm(r[i]) for i in sidx) for r in srows)
-    b = sorted(tuple(_norm(r[i]) for i in didx) for r in drows)
-    assert a == b
+    got = frame_signature(entrymod.queries()[name](spark, sf_dir).toPandas())
+    assert got == frame_signature(duck.sql(entrymod.oracle_sql()[name]).df())
