@@ -29,13 +29,20 @@ def _dbl(vec_col: str) -> str:
 
 def dot_expr(a: str, b: str) -> Column:
     """Sequential-order fold => deterministic, oracle-reproducible."""
-    return F.expr(
-        f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 as double), (acc, v) -> acc + v)"
-    )
+    return F.expr(_dot_sql(a, b))
+
+
+def _dot_sql(a: str, b: str) -> str:
+    return f"aggregate(zip_with({a}, {b}, (x, y) -> x * y), cast(0.0 as double), (acc, v) -> acc + v)"
+
+
+def _sq_sql(a: str) -> str:
+    """||a||² as the same sequential fold."""
+    return f"aggregate(transform({a}, x -> x * x), cast(0.0 as double), (acc, v) -> acc + v)"
 
 
 def norm_expr(a: str) -> Column:
-    return F.sqrt(F.expr(f"aggregate(transform({a}, x -> x * x), cast(0.0 as double), (acc, v) -> acc + v)"))
+    return F.sqrt(F.expr(_sq_sql(a)))
 
 
 def cosine_expr(a: str, b: str) -> Column:
@@ -863,7 +870,6 @@ def kmeans_lloyd(
     vec_col: str = "embedding",
     k: int = 8,
     iterations: int = 2,
-    assignment: str = "auto",
 ) -> DataFrame:
     """Deterministic Lloyd k-means over the embedding column — the
     clustering primitive behind semantic dedup (SemDeDup: drop
@@ -890,39 +896,19 @@ def kmeans_lloyd(
     assignment is a MAP-ONLY pass over the corpus; each update is one
     (cluster, dim) aggregate (k×d rows out) — the corpus shuffles only
     for the update aggregate, and the centroid table lands on the driver
-    (k×d doubles, dimension-sized by contract). Two assignment
-    renderings, selected by ``assignment``:
-
-    - ``"literal"`` — the k×d centroid table is inlined as codegen'd
-      array literals. Fastest plan, but a codegen'd expression only
-      tolerates ~10^4 literals (``LITERAL_ASSIGN_BOUND``).
-    - ``"broadcast"`` — the centroid table travels as broadcast DATA:
-      one single-row frame holding array<struct<c, v, cc>>, cross-joined
-      (BroadcastNestedLoopJoin over exactly one row — still map-only, no
-      shuffle) and folded with the same transform/array_min expression.
-      Identical arithmetic (same sequential fold, same 6-dp round, same
-      (d, label) tiebreak), so both paths return bit-identical labels —
-      asserted in tests.
-    - ``"auto"`` (default) — ``"literal"`` while k×d stays under the
-      bound, ``"broadcast"`` beyond it (the SemDeDup regime: k in the
-      tens of thousands).
+    (k×d doubles, dimension-sized by contract). While k×d ≤
+    ``LITERAL_ASSIGN_BOUND`` the argmin inlines the centroid table as
+    literal SQL, so it stays inside the aggregate's stage; past the bound
+    (the SemDeDup regime: k in the tens of thousands) the table travels
+    as one broadcast data row (BroadcastNestedLoopJoin over one row —
+    still map-only). Both renderings fold, round and tie-break
+    identically, so the choice never changes a label.
 
     Returns (id_col, cluster, sq_dist).
     """
-    return _kmeans_assign_frame(
-        corpus, id_col, vec_col, k, iterations, assignment
-    ).select(F.col(id_col), "cluster", "sq_dist")
-
-
-def _resolve_assignment_mode(
-    assignment: str, k: int, cents: list[tuple[int, list[float]]]
-) -> str:
-    if assignment not in ("auto", "literal", "broadcast"):
-        raise ValueError(f"unknown assignment mode: {assignment!r}")
-    if assignment != "auto":
-        return assignment
-    dim = len(cents[0][1]) if cents else 0
-    return "literal" if k * dim <= LITERAL_ASSIGN_BOUND else "broadcast"
+    return _kmeans_assign_frame(corpus, id_col, vec_col, k, iterations).select(
+        F.col(id_col), "cluster", "sq_dist"
+    )
 
 
 def _assign_literal_sql(
@@ -933,26 +919,45 @@ def _assign_literal_sql(
     with every centroid inlined. Built as a single parse instead of a
     per-centroid ``F.expr`` tree (r12): k×(d literals + 3 folds) of
     Column-object construction cost hundreds of py4j round-trips per
-    assignment — the same algebra as _assign_broadcast, value-identical
+    assignment — the same algebra as _argmin_data_sql, value-identical
     either way."""
-    vv = (
-        f"aggregate(transform({vec_alias}, x -> x * x),"
-        " cast(0.0 as double), (acc, v) -> acc + v)"
-    )
+    vv = _sq_sql(vec_alias)
     choices = []
     for label, vec in cents:
         arr = "array({})".format(
             ",".join(f"cast({x!r} as double)" for x in vec)
         )
-        vc = (
-            f"aggregate(zip_with({vec_alias}, {arr}, (x, y) -> x * y),"
-            " cast(0.0 as double), (acc, v) -> acc + v)"
-        )
+        vc = _dot_sql(vec_alias, arr)
         cc = f"cast({_seq_dot(vec, vec)!r} as double)"
         choices.append(
             f"struct(round({vv} - 2.0 * {vc} + {cc}, 6) AS d, {label} AS c)"
         )
     return f"array_min(array({', '.join(choices)}))"
+
+
+def _argmin_data_sql(book: str, vv: str, vec_alias: str) -> str:
+    """The same argmin with the centroid table as DATA: ``book`` is an
+    array<struct<c, v, cc>> column and ``vv`` the projected ||v||² (a
+    separate projection: referenced inside the transform lambda it
+    would be re-folded once per centroid)."""
+    return (
+        f"array_min(transform({book}, s -> struct("
+        f"round({vv} - 2 * {_dot_sql(vec_alias, 's.v')} + s.cc, 6) AS d,"
+        " s.c AS c)))"
+    )
+
+
+def _packed_books(spark, books: list[list[tuple[int, list[float]]]]) -> DataFrame:
+    """One row, one ``__b{j}`` array<struct<c, v, cc>> column per
+    centroid table, ||c||² precomputed driver-side exactly like the
+    literal path's inlined ``cc``."""
+    return spark.createDataFrame(
+        [tuple([(label, vec, _seq_dot(vec, vec)) for label, vec in b] for b in books)],
+        ", ".join(
+            f"__b{j} array<struct<c:int,v:array<double>,cc:double>>"
+            for j in range(len(books))
+        ),
+    )
 
 
 def _assign_literal(
@@ -965,54 +970,23 @@ def _assign_literal(
 def _assign_broadcast(
     frame: DataFrame, cents: list[tuple[int, list[float]]], vec_alias: str = "__v"
 ) -> DataFrame:
-    # centroids as DATA: one row, array<struct>, broadcast to every
-    # task. ||c||² is precomputed driver-side exactly like the
-    # literal path's F.lit(_seq_dot(...)), so the arithmetic per
-    # (vector, centroid) is identical expression-for-expression.
-    spark = frame.sparkSession
-    cent_rows = [(label, vec, _seq_dot(vec, vec)) for label, vec in cents]
-    packed = spark.createDataFrame(
-        [(cent_rows,)],
-        "cents array<struct<c:int,v:array<double>,cc:double>>",
-    )
-    # __vv is its own projection: referencing it inside the transform
-    # lambda would re-fold ||v||² once per centroid
+    # centroids as broadcast DATA: the one-row crossJoin is map-only
     out = (
-        frame.withColumn(
-            "__vv",
-            F.expr(
-                f"aggregate(transform({vec_alias}, x -> x * x), cast(0.0 as double),"
-                " (acc, v) -> acc + v)"
-            ),
-        )
-        .crossJoin(F.broadcast(packed))
-        .withColumn(
-            "__best",
-            F.array_min(
-                F.expr(
-                    "transform(cents, s -> struct("
-                    f"round(__vv - 2 * aggregate(zip_with({vec_alias}, s.v, (x, y) -> x * y),"
-                    " cast(0.0 as double), (acc, v) -> acc + v) + s.cc, 6) AS d,"
-                    " s.c AS c))"
-                )
-            ),
-        )
+        frame.withColumn("__vv", F.expr(_sq_sql(vec_alias)))
+        .crossJoin(F.broadcast(_packed_books(frame.sparkSession, [cents])))
+        .withColumn("__best", F.expr(_argmin_data_sql("__b0", "__vv", vec_alias)))
     )
     return (
         out.withColumn("sq_dist", F.col("__best")["d"])
         .withColumn("cluster", F.col("__best")["c"])
-        .drop("cents", "__vv", "__best")
+        .drop("__b0", "__vv", "__best")
     )
 
 
-def _assign_with(
-    frame: DataFrame,
-    cents: list[tuple[int, list[float]]],
-    mode: str,
-    vec_alias: str = "__v",
-) -> DataFrame:
-    fn = _assign_literal if mode == "literal" else _assign_broadcast
-    return fn(frame, cents, vec_alias)
+def _literal_fits(k: int, dim: int) -> bool:
+    """The one literal-vs-broadcast rule: a codegen'd expression
+    tolerates ~10^4 inlined literals."""
+    return k * dim <= LITERAL_ASSIGN_BOUND
 
 
 def kmeans_centroids(
@@ -1021,7 +995,6 @@ def kmeans_centroids(
     vec_col: str = "embedding",
     k: int = 8,
     iterations: int = 2,
-    assignment: str = "auto",
 ) -> list[tuple[int, list[float]]]:
     """The TRAINING half of :func:`kmeans_lloyd`: deterministic init
     (smallest ``(md5(id), id)``) plus ``iterations - 1`` assign/update
@@ -1029,43 +1002,11 @@ def kmeans_centroids(
     pass of ``kmeans_lloyd(iterations=...)`` would score against.
     This is what a trained coarse quantizer (IVF) or a PQ codebook
     needs — the centroids themselves, not the corpus assignment. k×d
-    doubles on the driver, dimension-sized by contract."""
-    from ..functions.portable import md5_i64_py
+    doubles on the driver, dimension-sized by contract.
 
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    emb = corpus.select(F.col(id_col), F.expr(_dbl(vec_col)).alias("__v"))
-    init = ivf_centroids(corpus, id_col, vec_col, k).collect()
-    ordered = sorted(
-        ((md5_i64_py(str(r["centroid_id"])), r["centroid_id"], r["centroid_vec"]) for r in init)
-    )
-    cents: list[tuple[int, list[float]]] = [
-        (pos, [float(x) for x in vec]) for pos, (_, _, vec) in enumerate(ordered)
-    ]
-    mode = _resolve_assignment_mode(assignment, k, cents)
-    for _ in range(iterations - 1):
-        assigned = _assign_with(emb, cents, mode)
-        means = (
-            assigned.select("cluster", F.posexplode("__v").alias("pos", "x"))
-            .groupBy("cluster", "pos")
-            .agg(F.round(F.avg("x"), 6).alias("m"))
-            .collect()
-        )
-        by_cluster: dict[int, dict[int, float]] = {}
-        for r in means:
-            by_cluster.setdefault(r["cluster"], {})[r["pos"]] = r["m"]
-        cents = [
-            (
-                label,
-                [by_cluster[label][p] for p in range(len(vec))]
-                if label in by_cluster
-                else vec,  # empty cluster keeps its previous centroid
-            )
-            for label, vec in cents
-        ]
-    return cents
+    Runs :func:`pq_train`'s Lloyd loop with one subspace (m = 1), so an
+    empty corpus raises pq_train's ValueError."""
+    return pq_train(corpus, id_col, vec_col, 1, k, iterations)[0]
 
 
 def _round6(x: float) -> float:
@@ -1077,6 +1018,29 @@ def _round6(x: float) -> float:
     from decimal import ROUND_HALF_UP, Decimal
 
     return float(Decimal(x).quantize(Decimal("0.000001"), rounding=ROUND_HALF_UP))
+
+
+def _hash_ranked_init(
+    rows: list[tuple], k: int, iterations: int, op: str
+) -> tuple[list[tuple], list[list[float]]]:
+    """The driver-side trainers' shared prologue: argument checks, the
+    ``(id, vector)`` rows as doubles in id order (the update's sum
+    order), and the ``k`` init vectors — the smallest ``(md5(id), id)``
+    rank, the distributed init's order (md5_i64_py)."""
+    from ..functions.portable import md5_i64_py
+
+    if iterations < 1:
+        raise ValueError(f"iterations must be >= 1, got {iterations}")
+    if k < 1:
+        raise ValueError(f"k must be >= 1, got {k}")
+    data = sorted(
+        ((rid, [float(x) for x in vec]) for rid, vec in rows),
+        key=lambda r: r[0],
+    )
+    if not data:
+        raise ValueError(f"{op}: empty training input (no rows)")
+    ranked = sorted(data, key=lambda r: (md5_i64_py(str(r[0])), r[0]))
+    return data, [list(vec) for _rid, vec in ranked[:k]]
 
 
 def kmeans_centroids_local(
@@ -1099,20 +1063,8 @@ def kmeans_centroids_local(
     order is fixed by id; the distributed avg's partial-sum order is
     already masked by the 6-dp round on both engines). Empty clusters
     keep their previous centroid."""
-    from ..functions.portable import md5_i64_py
-
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    data = sorted(
-        ((rid, [float(x) for x in vec]) for rid, vec in rows),
-        key=lambda r: r[0],
-    )
-    ranked = sorted(data, key=lambda r: (md5_i64_py(str(r[0])), r[0]))
-    cents: list[tuple[int, list[float]]] = [
-        (pos, list(vec)) for pos, (_rid, vec) in enumerate(ranked[:k])
-    ]
+    data, init = _hash_ranked_init(rows, k, iterations, "kmeans_centroids_local")
+    cents = list(enumerate(init))
     for _ in range(iterations - 1):
         sums: dict[int, list[float]] = {}
         counts: dict[int, int] = {}
@@ -1173,19 +1125,9 @@ def kmeans_centroids_local_np(
     :func:`kmeans_centroids_local`; scale paths train here."""
     import numpy as np
 
-    from ..functions.portable import md5_i64_py
-
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    if k < 1:
-        raise ValueError(f"k must be >= 1, got {k}")
-    data = sorted(
-        ((rid, [float(v) for v in vec]) for rid, vec in rows),
-        key=lambda r: r[0],
-    )
-    ranked = sorted(data, key=lambda r: (md5_i64_py(str(r[0])), r[0]))
+    data, init = _hash_ranked_init(rows, k, iterations, "kmeans_centroids_local_np")
     x = np.asarray([v for _, v in data], dtype="float64")
-    cents = np.asarray([vec for _, vec in ranked[:k]], dtype="float64")
+    cents = np.asarray(init, dtype="float64")
     kk = cents.shape[0]
     for _ in range(iterations - 1):
         d2 = np.round(
@@ -1308,61 +1250,29 @@ def pq_train_local(
     rows: list[tuple], m: int = 4, codebook_k: int = 16, iterations: int = 2
 ) -> list[list[tuple[int, list[float]]]]:
     """Driver-side twin of :func:`pq_train` over collected ``(id,
-    vector)`` rows (see :func:`kmeans_centroids_local` for the
-    bounded-input contract and the exact-arithmetic guarantees): the
-    shared full-vector init sliced into ``m`` sub-books, then
-    ``iterations − 1`` Lloyd rounds run independently per subspace —
-    the same per-subspace assignment/update the one-pass distributed
-    shape computes."""
-    from ..functions.portable import md5_i64_py
-
+    vector)`` rows: one :func:`kmeans_centroids_local` per subspace, on
+    the ``(id, vec[j·d/m : (j+1)·d/m])`` slices (see it for the
+    bounded-input contract and the exact-arithmetic guarantees). Exact
+    against the one-pass distributed shape: the init rank
+    ``(md5(id), id)`` ignores the vector, so every subspace starts from
+    the slices of the same init vectors, and rounds never mix
+    subspaces."""
     if m < 1:
         raise ValueError(f"m must be >= 1, got {m}")
-    if iterations < 1:
-        raise ValueError(f"iterations must be >= 1, got {iterations}")
-    data = sorted(
-        ((rid, [float(x) for x in vec]) for rid, vec in rows),
-        key=lambda r: r[0],
-    )
-    dim = len(data[0][1])
+    if not rows:
+        raise ValueError("pq_train_local: empty training input (no rows)")
+    dim = len(rows[0][1])
     if dim % m != 0:
         raise ValueError(f"vector dim {dim} not divisible by m={m} sub-vectors")
     sub = dim // m
-    ranked = sorted(data, key=lambda r: (md5_i64_py(str(r[0])), r[0]))
-    books: list[list[tuple[int, list[float]]]] = [
-        [
-            (pos, vec[j * sub : (j + 1) * sub])
-            for pos, (_rid, vec) in enumerate(ranked[:codebook_k])
-        ]
+    return [
+        kmeans_centroids_local(
+            [(rid, vec[j * sub : (j + 1) * sub]) for rid, vec in rows],
+            codebook_k,
+            iterations,
+        )
         for j in range(m)
     ]
-    for _ in range(iterations - 1):
-        for j in range(m):
-            sums: dict[int, list[float]] = {}
-            counts: dict[int, int] = {}
-            for _rid, v in data:
-                s = v[j * sub : (j + 1) * sub]
-                vv = _seq_dot(s, s)
-                best = None
-                for label, c in books[j]:
-                    d = _round6(vv - 2.0 * _seq_dot(s, c) + _seq_dot(c, c))
-                    if best is None or (d, label) < best:
-                        best = (d, label)
-                lbl = best[1]
-                counts[lbl] = counts.get(lbl, 0) + 1
-                acc = sums.setdefault(lbl, [0.0] * sub)
-                for i, x in enumerate(s):
-                    acc[i] += x
-            books[j] = [
-                (
-                    label,
-                    [_round6(sv / counts[label]) for sv in sums[label]]
-                    if label in sums
-                    else vec,
-                )
-                for label, vec in books[j]
-            ]
-    return books
 
 
 def _kmeans_assign_frame(
@@ -1371,7 +1281,6 @@ def _kmeans_assign_frame(
     vec_col: str,
     k: int,
     iterations: int,
-    assignment: str,
     keep_all_cols: bool = False,
 ) -> DataFrame:
     """kmeans_lloyd's body, returning the full assigned frame: the
@@ -1380,11 +1289,11 @@ def _kmeans_assign_frame(
     semantic_dedup consumes this directly — re-joining the (id,
     cluster) result back to the corpus would add a corpus-scale hash
     join for columns the assignment pass already carried."""
-    cents = kmeans_centroids(corpus, id_col, vec_col, k, iterations, assignment)
-    mode = _resolve_assignment_mode(assignment, k, cents)
+    cents = kmeans_centroids(corpus, id_col, vec_col, k, iterations)
     keep = corpus.columns if keep_all_cols else [id_col]
     emb = corpus.select(*keep, F.expr(_dbl(vec_col)).alias("__v"))
-    return _assign_with(emb, cents, mode)
+    assign = _assign_literal if _literal_fits(k, len(cents[0][1])) else _assign_broadcast
+    return assign(emb, cents)
 
 
 def _seq_dot(a: list[float], b: list[float]) -> float:
@@ -1416,11 +1325,12 @@ def pq_train(
 ) -> list[list[tuple[int, list[float]]]]:
     """Product-quantization codebooks (Jégou et al. 2011): split each
     d-dim vector into ``m`` contiguous sub-vectors of d/m dims and
-    train an independent ``codebook_k``-centroid k-means
-    (:func:`kmeans_centroids` — deterministic init, Lloyd updates) per
-    sub-space. Returns ``m`` (label, centroid) tables, m × k × d/m
-    doubles on the driver — dimension-sized by contract, like every
-    centroid table in this module.
+    train an independent ``codebook_k``-centroid k-means per sub-space
+    (:func:`kmeans_lloyd`'s init, assignment and update rules). Returns
+    ``m`` (label, centroid) tables, m × k × d/m doubles on the driver —
+    dimension-sized by contract, like every centroid table in this
+    module. This is the engine's one distributed Lloyd loop;
+    :func:`kmeans_centroids` is its m = 1 case.
 
     Scale: training cost is (iterations-1) corpus aggregates at
     index-build time — ONE pass per Lloyd round covers all m subspaces
@@ -1432,14 +1342,18 @@ def pq_train(
         raise ValueError(f"m must be >= 1, got {m}")
     if iterations < 1:
         raise ValueError(f"iterations must be >= 1, got {iterations}")
+    if codebook_k < 1:
+        raise ValueError(f"k must be >= 1, got {codebook_k}")
     from ..functions.portable import md5_i64_py
 
     # ONE init job for all m subspaces: the codebook_k vectors with the
     # smallest (md5(id), id). Slicing doesn't change row identity and
     # cast-to-double commutes with F.slice, so slicing the full init
-    # vectors driver-side is bit-identical to the old per-subspace
+    # vectors driver-side is bit-identical to a per-subspace
     # ivf_centroids(sliced) init at 1/m the corpus scans.
     init = ivf_centroids(corpus, id_col, vec_col, codebook_k).collect()
+    if not init:
+        raise ValueError("pq_train: empty training input (no rows)")
     ordered = sorted(
         (md5_i64_py(str(r["centroid_id"])), r["centroid_id"], r["centroid_vec"])
         for r in init
@@ -1456,60 +1370,39 @@ def pq_train(
         for j in range(m)
     ]
     # Lloyd rounds, ONE corpus aggregate per round covering every
-    # subspace. Per subspace the arithmetic is unchanged vs
-    # kmeans_centroids: the same argmin over ``(round(v·v − 2 v·c +
-    # c·c, 6), label)``, the same round(avg, 6) update keyed by (sub,
-    # cluster, pos), and an empty cluster keeps its previous centroid.
-    # The codebooks enter as one BROADCAST DATA row (the
-    # _assign_broadcast idiom) rather than m × k inlined literal
-    # arrays: an m·k·(d/m)-literal tree costs seconds of driver
-    # parse/analyze PER ROUND (r12 — the receipt queries paid it
-    # twice per tier), while the generic transform is a constant-size
-    # plan. The one-row payload copy the crossJoin implies is bounded
-    # by the TRAINING relation (sample-sized by contract — receipts
-    # pass hash_ranked_sample), never the corpus.
-    spark = corpus.sparkSession
+    # subspace: argmin over ``(round(v·v − 2 v·c + c·c, 6), label)``,
+    # round(avg, 6) update keyed by (sub, cluster, pos), and an empty
+    # cluster keeps its previous centroid. The argmin inlines the k×d
+    # literals while they fit (_literal_fits) — it then stays inside the
+    # aggregate's stage with no extra job; past the bound the codebooks
+    # enter as one BROADCAST DATA row, a constant-size plan. The one-row
+    # payload copy the crossJoin implies is bounded by the TRAINING
+    # relation (sample-sized by contract — receipts pass
+    # hash_ranked_sample), never the corpus.
+    literal = _literal_fits(codebook_k, dim)
     for _ in range(iterations - 1):
-        packed = spark.createDataFrame(
-            [
-                (
-                    [
-                        [
-                            (label, vec, _seq_dot(vec, vec))
-                            for label, vec in books[j]
-                        ]
-                        for j in range(m)
-                    ],
-                )
-            ],
-            "books array<array<struct<c:int,v:array<double>,cc:double>>>",
-        )
         frame = corpus.select(
             *[
                 F.slice(F.expr(_dbl(vec_col)), j * sub + 1, sub).alias(f"__v{j}")
                 for j in range(m)
             ]
-        ).crossJoin(F.broadcast(packed))
-        # ||v_j||² projected once per subspace, then the argmin — both
-        # OUTSIDE generator lambdas (lambda-inlining rule)
-        for j in range(m):
-            frame = frame.withColumn(
-                f"__vv{j}",
-                F.expr(
-                    f"aggregate(transform(__v{j}, x -> x * x),"
-                    " cast(0.0 as double), (acc, v) -> acc + v)"
-                ),
+        )
+        if literal:
+            codes = [_argmin_code(f"__v{j}", books[j]) for j in range(m)]
+        else:
+            # ||v_j||² projected once per subspace, OUTSIDE the lambdas
+            frame = frame.crossJoin(
+                F.broadcast(_packed_books(corpus.sparkSession, books))
+            ).select(
+                "*", *[F.expr(_sq_sql(f"__v{j}")).alias(f"__vv{j}") for j in range(m)]
             )
-        for j in range(m):
-            frame = frame.withColumn(
-                f"__c{j}",
-                F.expr(
-                    f"array_min(transform(element_at(books, {j + 1}), s -> struct("
-                    f"round(__vv{j} - 2 * aggregate(zip_with(__v{j}, s.v,"
-                    " (x, y) -> x * y), cast(0.0 as double), (acc, v) -> acc + v)"
-                    " + s.cc, 6) AS d, s.c AS c)))['c']"
-                ),
-            )
+            codes = [
+                F.expr(_argmin_data_sql(f"__b{j}", f"__vv{j}", f"__v{j}"))["c"]
+                for j in range(m)
+            ]
+        # one projection per step: every DataFrame call re-analyzes the
+        # plan, k·d inlined literals included
+        frame = frame.select("*", *[c.alias(f"__c{j}") for j, c in enumerate(codes)])
         # the flattened (sub, pos, x) structs carry NO cluster label —
         # attaching __c{j} inside the transform lambda would let
         # CollapseProject inline the argmin into a per-element body
@@ -2130,7 +2023,7 @@ def semantic_dedup(
     # directly saves the two corpus-scale id joins the r5 plan paid
     # (assigned-to-vectors and assigned-to-corpus)
     full = _kmeans_assign_frame(
-        corpus, id_col, vec_col, k, iterations, "auto", keep_all_cols=True
+        corpus, id_col, vec_col, k, iterations, keep_all_cols=True
     )
     # norms are computed ONCE per vector before the pair join — inside
     # the join condition they would be re-folded for every candidate

@@ -747,28 +747,36 @@ def test_kmeans_broadcast_assignment_matches_literal(spark, sf_dir):
     """The broadcast-join assignment (centroids as data) must be
     bit-identical to the literal rendering — same fold order, same
     rounding, same tiebreak."""
-    from ai_etl_pipeline_spark.operators.similarity import kmeans_lloyd
+    from ai_etl_pipeline_spark.operators.similarity import (
+        _assign_broadcast,
+        _assign_literal,
+        _dbl,
+        kmeans_centroids,
+    )
 
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
-    lit = {
-        (r.vec_id, r.cluster, r.sq_dist)
-        for r in kmeans_lloyd(emb, k=8, iterations=2, assignment="literal").collect()
-    }
-    bc = {
-        (r.vec_id, r.cluster, r.sq_dist)
-        for r in kmeans_lloyd(emb, k=8, iterations=2, assignment="broadcast").collect()
-    }
-    assert lit == bc and len(lit) > 0
+    cents = kmeans_centroids(emb, k=8, iterations=2)
+    frame = emb.select("vec_id", F.expr(_dbl("embedding")).alias("__v"))
+
+    def labels(assign):
+        return {
+            (r.vec_id, r.cluster, r.sq_dist)
+            for r in assign(frame, cents).select("vec_id", "cluster", "sq_dist").collect()
+        }
+
+    lit = labels(_assign_literal)
+    assert lit == labels(_assign_broadcast) and len(lit) > 0
 
 
 def test_kmeans_auto_uses_broadcast_join_beyond_literal_bound(spark):
     """k×d > LITERAL_ASSIGN_BOUND must auto-select the broadcast-join
     assignment (map-only: BroadcastNestedLoopJoin over one row, no
     hash-partition shuffle) and agree with the literal path exactly."""
-    from pyspark.sql import functions as F
-
     from ai_etl_pipeline_spark.operators.similarity import (
         LITERAL_ASSIGN_BOUND,
+        _assign_literal,
+        _dbl,
+        kmeans_centroids,
         kmeans_lloyd,
     )
 
@@ -786,11 +794,11 @@ def test_kmeans_auto_uses_broadcast_join_beyond_literal_bound(spark):
     assert "BroadcastNestedLoopJoin" in plan
     assert "Exchange hashpartitioning" not in plan  # assignment is map-only
     got = {(r.vec_id, r.cluster, r.sq_dist) for r in auto.collect()}
+    cents = kmeans_centroids(vecs, "vec_id", "embedding", k=k, iterations=1)
+    frame = vecs.select("vec_id", F.expr(_dbl("embedding")).alias("__v"))
     want = {
         (r.vec_id, r.cluster, r.sq_dist)
-        for r in kmeans_lloyd(
-            vecs, "vec_id", "embedding", k=k, iterations=1, assignment="literal"
-        ).collect()
+        for r in _assign_literal(frame, cents).collect()
     }
     assert got == want and len(got) == 1500
 

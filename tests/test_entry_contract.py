@@ -1,8 +1,8 @@
 """Driver-contract smoke: entry() runs on a bare-config session, every
 queries() entry has a callable signature, oracle keys are a subset, and a
-representative sample — plus every graph query — hash-matches DuckDB
-under the parity tool's canonicalizer (the FULL sweep lives in
-tools/check_parity.py — this keeps CI fast)."""
+representative sample — plus every graph, k-NN and k-means query —
+hash-matches DuckDB under the parity tool's canonicalizer (the FULL sweep
+lives in tools/check_parity.py — this keeps CI fast)."""
 
 import os
 import sys
@@ -24,7 +24,9 @@ SAMPLE = [
     "q_dedup_docs_exact",
     "q_text_tokens",
     "q_events_tumbling",
-] + sorted(q for q in entrymod.queries() if q.startswith("q_graph_"))
+] + sorted(q for q in entrymod.queries() if q.startswith("q_graph_")) + sorted(
+    q for q in entrymod.queries() if q.startswith("q_knn_")
+) + ["q_embed_kmeans", "q_semantic_dedup"]
 
 
 def test_entry_smoke(spark):

@@ -122,7 +122,8 @@ def test_retrieval_eval_mrr_honors_k_cutoff(spark):
 # driver-side quantizer training: bit-identical to the distributed path
 # ---------------------------------------------------------------------------
 
-def test_local_quantizer_training_matches_distributed(spark, sf_dir):
+@pytest.mark.parametrize("iterations", [2, 3])
+def test_local_quantizer_training_matches_distributed(spark, sf_dir, iterations):
     emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
     train = similarity.hash_ranked_sample(emb, "vec_id", 64).localCheckpoint()
     rows = [
@@ -130,11 +131,51 @@ def test_local_quantizer_training_matches_distributed(spark, sf_dir):
         for r in train.collect()
     ]
     assert similarity.kmeans_centroids_local(
-        rows, k=8, iterations=2
-    ) == similarity.kmeans_centroids(train, "vec_id", "embedding", 8, 2)
+        rows, k=8, iterations=iterations
+    ) == similarity.kmeans_centroids(train, "vec_id", "embedding", 8, iterations)
     assert similarity.pq_train_local(
-        rows, m=4, codebook_k=16, iterations=2
-    ) == similarity.pq_train(train, "vec_id", "embedding", 4, 16, 2)
+        rows, m=4, codebook_k=16, iterations=iterations
+    ) == similarity.pq_train(train, "vec_id", "embedding", 4, 16, iterations)
+
+
+def test_training_loop_argmin_branches_agree(spark, sf_dir, monkeypatch):
+    """pq_train's Lloyd loop inlines the codebooks as literals while
+    k·d fits LITERAL_ASSIGN_BOUND and ships them as broadcast data past
+    it; both branches must train the same books."""
+    emb = spark.read.parquet(f"{sf_dir}/embeddings.parquet")
+    train = similarity.hash_ranked_sample(emb, "vec_id", 64).localCheckpoint()
+    literal = (
+        similarity.kmeans_centroids(train, "vec_id", "embedding", 8, 3),
+        similarity.pq_train(train, "vec_id", "embedding", 4, 16, 3),
+    )
+    monkeypatch.setattr(similarity, "LITERAL_ASSIGN_BOUND", 0)
+    assert not similarity._literal_fits(1, 1)
+    broadcast = (
+        similarity.kmeans_centroids(train, "vec_id", "embedding", 8, 3),
+        similarity.pq_train(train, "vec_id", "embedding", 4, 16, 3),
+    )
+    assert broadcast == literal
+
+
+# (entry point, trains on collected rows, operator the error names): the
+# two distributed k-means entry points run pq_train's loop
+EMPTY_INPUT_TRAINERS = [
+    ("kmeans_lloyd", False, "pq_train"),
+    ("kmeans_centroids", False, "pq_train"),
+    ("pq_train", False, "pq_train"),
+    ("kmeans_centroids_local", True, "kmeans_centroids_local"),
+    ("kmeans_centroids_local_np", True, "kmeans_centroids_local_np"),
+    ("pq_train_local", True, "pq_train_local"),
+]
+
+
+@pytest.mark.parametrize(
+    "op, local, reported", EMPTY_INPUT_TRAINERS, ids=[t[0] for t in EMPTY_INPUT_TRAINERS]
+)
+def test_trainers_reject_empty_training_input(spark, op, local, reported):
+    empty = [] if local else spark.createDataFrame([], "vec_id long, embedding array<double>")
+    with pytest.raises(ValueError, match=f"^{reported}: empty training input"):
+        getattr(similarity, op)(empty)
 
 
 def test_round6_matches_spark_half_up():
