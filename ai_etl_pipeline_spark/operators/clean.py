@@ -19,8 +19,10 @@ from __future__ import annotations
 
 import re
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Row
 from pyspark.sql import functions as F
+
+from .distinct import string_columns
 
 # Placeholder tokens replaced with NULL, exactly the reference list
 # (``preprocess.py:60-61``). Matching is case-sensitive and post-strip
@@ -75,20 +77,8 @@ def drop_unnamed_columns(df: DataFrame, prefix: str = "unnamed", log: list[str] 
     return df.drop(*doomed) if doomed else df
 
 
-def drop_empty_columns(df: DataFrame, log: list[str] | None = None) -> DataFrame:
-    """P2 (``preprocess.py:42-45``): drop fully-null columns.
-
-    ONE aggregate job over all columns (``F.count`` skips nulls), instead
-    of the per-column ``isnull().all()`` loop — the single-pass idiom that
-    survives a 100× scale-up.
-    """
-    if not df.columns:
-        return df
-    counts = df.select([F.count(F.col(f"`{c}`")).alias(c) for c in df.columns]).first()
-    doomed = [c for c in df.columns if counts[c] == 0]
-    if doomed and log is not None:
-        log.append(f"dropped empty columns: {doomed}")
-    return df.drop(*doomed) if doomed else df
+def _placeholder_null(col: Column, placeholders: list[str] = PLACEHOLDER_VALUES) -> Column:
+    return F.when(col.isin(placeholders), F.lit(None)).otherwise(col)
 
 
 def replace_placeholders_with_null(
@@ -99,20 +89,16 @@ def replace_placeholders_with_null(
     """P5 (``preprocess.py:60-62``): placeholder tokens → NULL.
 
     Applied to string columns only (the reference's replace hits every
-    dtype but can only match strings). Stays in codegen via ``when/isin``;
-    ``na.replace`` is avoided because it is type-strict about None.
+    dtype but can only match strings), or to exactly ``columns`` when
+    given. Stays in codegen via ``when/isin``; ``na.replace`` is avoided
+    because it is type-strict about None.
     """
     placeholders = PLACEHOLDER_VALUES if placeholders is None else placeholders
-    targets = columns or [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
-    exprs = []
-    for c in df.columns:
-        if c in targets:
-            exprs.append(
-                F.when(F.col(f"`{c}`").isin(placeholders), F.lit(None)).otherwise(F.col(f"`{c}`")).alias(c)
-            )
-        else:
-            exprs.append(F.col(f"`{c}`"))
-    return df.select(*exprs)
+    targets = string_columns(df) if columns is None else columns
+    return df.select(*[
+        _placeholder_null(F.col(f"`{c}`"), placeholders).alias(c) if c in targets else F.col(f"`{c}`")
+        for c in df.columns
+    ])
 
 
 def trim_string_columns(df: DataFrame) -> DataFrame:
@@ -129,6 +115,32 @@ def trim_string_columns(df: DataFrame) -> DataFrame:
     return df.select(*exprs)
 
 
+def _numeric_probe(c: str, value: Column) -> list[Column]:
+    """P7's three counts for one candidate column: non-null values,
+    values that ``try_cast(trim(v) as double)`` parses, integral ones."""
+    parsed = F.trim(value).try_cast("double")
+    integral = F.when(parsed == F.floor(parsed), 1)
+    return [F.count(value).alias(f"__n_{c}"), F.count(parsed).alias(f"__ok_{c}"),
+            F.count(integral).alias(f"__int_{c}")]
+
+
+def _cast_numeric(df: DataFrame, probe: Row, candidates: list[str], log: list[str] | None) -> DataFrame:
+    """P7's projection: cast each candidate whose every non-null value
+    parsed — to bigint when all are integral, else to double."""
+    to: dict[str, list[str]] = {"double": [], "bigint": []}
+    for c in candidates:
+        n, ok, integral = probe[f"__n_{c}"], probe[f"__ok_{c}"], probe[f"__int_{c}"]
+        if n > 0 and ok == n:
+            to["bigint" if integral == n else "double"].append(c)
+    if log is not None and (to["double"] or to["bigint"]):
+        log.append(f"numeric-cast columns: double={to['double']} bigint={to['bigint']}")
+    cast = {c: t for t, cs in to.items() for c in cs}
+    return df.select(*[
+        F.expr(f"cast(cast(trim(`{c}`) as double) as {cast[c]})").alias(c) if c in cast else F.col(f"`{c}`")
+        for c in df.columns
+    ])
+
+
 def cast_numeric_columns_all_or_nothing(
     df: DataFrame, columns: list[str] | None = None, log: list[str] | None = None
 ) -> DataFrame:
@@ -136,8 +148,9 @@ def cast_numeric_columns_all_or_nothing(
     converts a column only if EVERY value parses.
 
     Catalyst has no all-or-nothing cast, so this is a two-job idiom:
-    1. one aggregate pass computing, per candidate column, the non-null
-       count and the count of values surviving ``try_cast(double)``;
+    1. one aggregate pass computing, per candidate column (every string
+       column, or exactly ``columns`` when given), the non-null count and
+       the count of values surviving ``try_cast(double)``;
     2. a single projection casting exactly the columns where the counts
        match (i.e. no value failed to parse).
     ``try_cast`` accepts the same forms pandas does for the fixture data
@@ -145,34 +158,11 @@ def cast_numeric_columns_all_or_nothing(
     Columns whose doubles are all integral are cast to bigint, matching
     pandas' int64-vs-float64 choice.
     """
-    candidates = columns or [f.name for f in df.schema.fields if f.dataType.simpleString() == "string"]
+    candidates = string_columns(df) if columns is None else columns
     if not candidates:
         return df
-    aggs = []
-    for c in candidates:
-        q = f"`{c}`"
-        parsed = F.expr(f"try_cast(trim({q}) as double)")
-        aggs.append(F.count(F.col(q)).alias(f"{c}__n"))
-        aggs.append(F.count(parsed).alias(f"{c}__ok"))
-        aggs.append(F.count(F.when(parsed == F.floor(parsed), 1)).alias(f"{c}__int"))
-    row = df.select(*aggs).first()
-    to_double, to_long = [], []
-    for c in candidates:
-        n, ok, integral = row[f"{c}__n"], row[f"{c}__ok"], row[f"{c}__int"]
-        if n > 0 and ok == n:
-            (to_long if integral == n else to_double).append(c)
-    if log is not None and (to_double or to_long):
-        log.append(f"numeric-cast columns: double={to_double} bigint={to_long}")
-    exprs = []
-    for c in df.columns:
-        q = f"`{c}`"
-        if c in to_double:
-            exprs.append(F.expr(f"cast(trim({q}) as double)").alias(c))
-        elif c in to_long:
-            exprs.append(F.expr(f"cast(cast(trim({q}) as double) as bigint)").alias(c))
-        else:
-            exprs.append(F.col(q))
-    return df.select(*exprs)
+    probe = df.select(*[p for c in candidates for p in _numeric_probe(c, F.col(f"`{c}`"))]).first()
+    return _cast_numeric(df, probe, candidates, log)
 
 
 def cast_datetime_columns(
@@ -236,34 +226,25 @@ def preprocess_data(
     log = [] if log is None else log
     df = normalize_column_names(df, log)
     df = drop_duplicate_named_columns(df, log)  # before name-keyed ops
-    df = drop_empty_columns(df, log)
-    df = drop_unnamed_columns(df, log=log)
-    df = replace_placeholders_with_null(df)
-    df = trim_string_columns(df)
-    # re-apply placeholder nulling post-trim: the reference strips AFTER
-    # replacing, so "  n/a " survives there; we additionally catch it,
-    # which is strictly cleaner and covered by golden tests.
-    df = replace_placeholders_with_null(df)
-    df = cast_numeric_columns_all_or_nothing(df, log=log)
+    # P5 → P6 → P5 as one expression per string column. Re-applying P5
+    # after the trim catches "  n/a ", which the reference (strip AFTER
+    # replace) keeps: strictly cleaner, and covered by golden tests.
+    staged = {c: _placeholder_null(F.trim(_placeholder_null(F.col(f"`{c}`")))) for c in string_columns(df)}
+    # ONE aggregate decides P2 (raw non-null counts) and P7 (the numeric
+    # probe over the staged values).
+    probe = df.select(
+        *[F.count(F.col(f"`{c}`")).alias(f"__e_{c}") for c in df.columns],
+        *[p for c, v in staged.items() for p in _numeric_probe(c, v)],
+    ).first()
+    empty = [c for c in df.columns if probe[f"__e_{c}"] == 0]  # P2, preprocess.py:42-45
+    if empty:
+        log.append(f"dropped empty columns: {empty}")
+    df = drop_unnamed_columns(df.drop(*empty), log=log)
+    df = df.select(*[staged[c].alias(c) if c in staged else F.col(f"`{c}`") for c in df.columns])
+    df = _cast_numeric(df, probe, [c for c in staged if c in df.columns], log)
     df = cast_datetime_columns(df, log=log)
     df = drop_duplicate_rows(df, log=log, collect_counts=collect_counts)
     return df, log
-
-
-def preprocess_sheets(
-    sheets: dict[str, DataFrame], collect_counts: bool = False
-) -> tuple[dict[str, DataFrame], dict[str, list[str]]]:
-    """Multi-sheet cleaning — the function the reference references but
-    never wrote (``preprocess.py:119`` calls an undefined
-    ``preprocess_multiple_sheets``; SURVEY.md §3). Mapping the chain over
-    the dict makes it exist."""
-    out: dict[str, DataFrame] = {}
-    logs: dict[str, list[str]] = {}
-    for name, df in sheets.items():
-        cleaned, log = preprocess_data(df, collect_counts=collect_counts)
-        out[name] = cleaned
-        logs[name] = log
-    return out, logs
 
 
 def winsorize(

@@ -16,7 +16,7 @@ semi-join-reduction argument the reference itself exploits).
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -58,22 +58,37 @@ def distinct_column_values(df: DataFrame, column: str) -> DataFrame:
     """A2 kernel for ONE column: trimmed, non-null, distinct values as a
     single-column DataFrame named ``value``. Stays distributed — collect
     only happens at the external-API boundary (see enrich.py)."""
-    return (
-        df.select(F.trim(F.col(f"`{column}`").cast("string")).alias("value"))
-        .where(F.col("value").isNotNull() & (F.col("value") != ""))
-        .distinct()
-    )
+    return distinct_values_long(df, [column]).select("value")
+
+
+def distinct_values_long(df: DataFrame, columns: list[str]) -> DataFrame:
+    """A2 for many columns as ONE ``(column, value)`` relation of each
+    column's trimmed, non-empty, distinct values, stringified: one scan
+    and one shuffle whatever the column count."""
+    cells = F.array(*[
+        F.struct(F.lit(c).alias("column"), F.trim(F.col(f"`{c}`").cast("string")).alias("value"))
+        for c in columns
+    ])
+    return df.select(F.inline(cells)).where(F.col("value").isNotNull() & (F.col("value") != "")).distinct()
+
+
+def _by_column(rows: list, columns: list[str]) -> dict[str, list[str]]:
+    out: dict[str, list[str]] = {c: [] for c in columns}
+    for r in rows:
+        out[r["column"]].append(r["value"])
+    return {c: sorted(v) for c, v in out.items()}
 
 
 def extract_unique_text_values(df: DataFrame, columns: list[str] | None = None) -> dict[str, list[str]]:
-    """A2 end-to-end (``translate.py:11-34``): ``{column: [unique values]}``.
+    """A2 end-to-end (``translate.py:11-34``): ``{column: [unique values]}``,
+    sorted, from one driver collect of :func:`distinct_values_long`.
 
     Driver-collected BY DESIGN: these dicts feed external translation/LLM
     APIs, so they must reach the driver; the distinct() has already
     crushed data-scale → distinct-scale (33k values at reference scale).
     """
     cols = columns if columns is not None else string_columns(df)
-    return {c: [r["value"] for r in distinct_column_values(df, c).collect()] for c in cols}
+    return _by_column(distinct_values_long(df, cols).collect() if cols else [], cols)
 
 
 def head_sample(df: DataFrame, n: int = 2) -> dict[str, list]:
@@ -82,14 +97,15 @@ def head_sample(df: DataFrame, n: int = 2) -> dict[str, list]:
     return {c: [r[c] for r in rows] for c in df.columns}
 
 
-def column_value_samples(df: DataFrame, column: str, n: int = 5) -> list[str]:
-    """P12 (``mapper.py:47-49``): up to n distinct non-null values,
-    stringified — the prompt-sample bound that keeps LLM cost O(1) in
-    table size."""
-    return [
-        r["value"]
-        for r in distinct_column_values(df, column).limit(n).collect()
-    ]
+def column_samples(df: DataFrame, columns: list[str], n: int = 5) -> dict[str, list[str]]:
+    """P12 (``mapper.py:47-49``) for every column from one driver collect:
+    each column's ``n`` smallest :func:`distinct_values_long` values —
+    deterministic, and the bound that keeps LLM cost O(1) in table size."""
+    if not columns:
+        return {}
+    rank = F.row_number().over(Window.partitionBy("column").orderBy("value"))
+    ranked = distinct_values_long(df, columns).withColumn("rank", rank).where(F.col("rank") <= n)
+    return _by_column(ranked.collect(), columns)
 
 
 def random_value_sample(df: DataFrame, column: str, n: int = 10, seed: int = 42) -> list[str]:

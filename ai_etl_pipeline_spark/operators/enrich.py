@@ -23,6 +23,8 @@ from typing import Callable, Iterator
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .distinct import distinct_column_values, extract_unique_text_values
+
 LITERAL_MAP_MAX = 128  # below this, inline as a create_map literal
 
 
@@ -77,8 +79,8 @@ def translate_distinct_values(
     translate_batch,
     batch_size: int = 100,
 ) -> dict[str, dict[str, str]]:
-    """T3's shape (``translate.py:78-123``): per column, collect the
-    DISTINCT values (semi-join reduction — the reference's one real
+    """T3's shape (``translate.py:78-123``): collect every column's DISTINCT
+    values in one job (semi-join reduction — the reference's one real
     optimization) and push them through ``translate_batch(list[str]) ->
     list[str]`` in batches, building ``{col: {orig: translated}}``.
 
@@ -87,11 +89,8 @@ def translate_distinct_values(
     throttling live in the provider, mirroring batch_size=100 / 0.15 s
     (``translate.py:98-118``). Identity fallback on provider failure.
     """
-    from .distinct import distinct_column_values
-
     out: dict[str, dict[str, str]] = {}
-    for c in columns:
-        values = [r["value"] for r in distinct_column_values(df, c).collect()]
+    for c, values in extract_unique_text_values(df, columns).items():
         mapping: dict[str, str] = {}
         for i in range(0, len(values), batch_size):
             batch = values[i : i + batch_size]
@@ -133,11 +132,7 @@ def translate_distinct_values_distributed(
     semantic/providers.py are plain dataclasses / functions)."""
     import pandas as pd
 
-    distinct = (
-        df.select(F.trim(F.col(column).cast("string")).alias("original"))
-        .where(F.col("original").isNotNull() & (F.col("original") != ""))
-        .distinct()
-    )
+    distinct = distinct_column_values(df, column).withColumnRenamed("value", "original")
     if num_partitions is not None:
         distinct = distinct.repartition(num_partitions)
 

@@ -78,9 +78,3 @@ def extract_table_structure(tables: dict[str, DataFrame]) -> dict[str, list[str]
     metadata, no jobs."""
     return {name: list(df.columns) for name, df in tables.items()}
 
-
-def extract_table_samples(tables: dict[str, DataFrame], max_rows: int = 2) -> dict[str, dict[str, list]]:
-    """P11 applied per table (``mapper.py:139-166``)."""
-    from .distinct import head_sample
-
-    return {name: head_sample(df, max_rows) for name, df in tables.items()}

@@ -22,7 +22,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.clean import preprocess_data
-from ..operators.distinct import column_value_samples, string_columns
+from ..operators.distinct import column_samples, string_columns
 from ..operators.enrich import apply_value_maps, translate_distinct_values
 from ..operators.mapping import clean_column_mapping, extract_table_structure, split_into_tables
 from ..semantic.providers import (
@@ -33,25 +33,6 @@ from ..semantic.providers import (
     detect_column_languages,
     propose_column_mapping,
 )
-
-
-def _column_samples_concurrent(
-    df: DataFrame, cols: list[str], n: int
-) -> dict[str, list[str]]:
-    """P12 value samples for many columns with the per-column jobs
-    OVERLAPPED from a small driver thread pool (each is an independent
-    distinct+limit action; sequentially they serialize ~one scheduling
-    round trip per column — the guide's back-fill idiom). Every
-    per-column job is byte-identical to the sequential call, so the
-    sample lists — and everything the provider derives from them — are
-    unchanged (r16 optimization)."""
-    if not cols:
-        return {}
-    from concurrent.futures import ThreadPoolExecutor
-
-    with ThreadPoolExecutor(max_workers=min(4, len(cols))) as pool:
-        lists = list(pool.map(lambda c: column_value_samples(df, c, n), cols))
-    return dict(zip(cols, lists))
 
 
 def _checkpoint(payload, checkpoint_dir: str | None, name: str) -> None:
@@ -185,14 +166,22 @@ def run_translation_pipeline(
 ) -> tuple[DataFrame, dict]:
     """Stage 1: returns (translated_df, artifacts). Row count is
     preserved exactly; only TEXT ∩ NON-ENGLISH columns are translated
-    (the reference's column-pruning, ``translate.py:184-204``)."""
+    (the reference's column-pruning, ``translate.py:184-204``).
+
+    The cleaned frame is cached for its two driver reads, the prompt
+    samples and the distinct values sent to the translator, and released
+    before this returns; the returned frame is lazy over the uncached chain."""
     cleaned, log = preprocess_data(df)
-    samples = _column_samples_concurrent(cleaned, string_columns(cleaned), 10)
-    labels = classify_text_columns(samples, provider)
-    text_cols = [c for c, lab in labels.items() if lab == TEXT]
-    langs = detect_column_languages({c: samples[c] for c in text_cols}, provider)
-    target_cols = [c for c in text_cols if langs.get(c) == NON_ENGLISH]
-    maps = translate_distinct_values(cleaned, target_cols, provider.translate_batch)
+    cleaned.cache()
+    try:
+        samples = column_samples(cleaned, string_columns(cleaned), 10)
+        labels = classify_text_columns(samples, provider)
+        text_cols = [c for c, lab in labels.items() if lab == TEXT]
+        langs = detect_column_languages({c: samples[c] for c in text_cols}, provider)
+        target_cols = [c for c in text_cols if langs.get(c) == NON_ENGLISH]
+        maps = translate_distinct_values(cleaned, target_cols, provider.translate_batch)
+    finally:
+        cleaned.unpersist()
     _checkpoint(maps, checkpoint_dir, "translated-map.json")
     translated = apply_value_maps(cleaned, maps)
     artifacts = {
@@ -212,14 +201,23 @@ def run_mapping_pipeline(
     provider: SemanticProvider,
     checkpoint_dir: str | None = None,
 ) -> tuple[dict[str, DataFrame], dict]:
-    """Stage 2: returns ({table: DataFrame}, artifacts)."""
+    """Stage 2: returns ({table: DataFrame}, artifacts).
+
+    The re-cleaned frame is cached: the prompt samples materialize it and
+    every table projects from it, so each table's sink is one scan. It is
+    ``artifacts["cleaned"]``; the caller unpersists it after the writes."""
     cleaned, log = preprocess_data(df)  # idempotent re-clean, mapper.py:207
     structure = extract_table_structure(destination_tables)
     _checkpoint(structure, checkpoint_dir, "table-structure.json")
-    samples = _column_samples_concurrent(cleaned, list(cleaned.columns), 5)
-    raw_mapping = propose_column_mapping(schema_description, structure, samples, provider)
-    _checkpoint(raw_mapping, checkpoint_dir, "raw-mapping.json")
-    mapping = clean_column_mapping(raw_mapping)
-    _checkpoint(mapping, checkpoint_dir, "clean-mapping.json")
+    cleaned.cache()
+    try:
+        samples = column_samples(cleaned, list(cleaned.columns), 5)
+        raw_mapping = propose_column_mapping(schema_description, structure, samples, provider)
+        _checkpoint(raw_mapping, checkpoint_dir, "raw-mapping.json")
+        mapping = clean_column_mapping(raw_mapping)
+        _checkpoint(mapping, checkpoint_dir, "clean-mapping.json")
+    except BaseException:
+        cleaned.unpersist()
+        raise
     tables = split_into_tables(cleaned, mapping)
-    return tables, {"log": log, "structure": structure, "mapping": mapping}
+    return tables, {"log": log, "structure": structure, "mapping": mapping, "cleaned": cleaned}

@@ -1,6 +1,7 @@
 """Cleaning chain P1-P8 + A1 (SURVEY.md §2.2/§2.3) — golden tests on the
 FIXTURES.md A1-shaped dirty table plus property checks."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from ai_etl_pipeline_spark.operators import clean
@@ -71,3 +72,14 @@ def test_placeholder_case_sensitivity(spark):
     out = clean.replace_placeholders_with_null(df)
     vals = [r["v"] for r in out.collect()]
     assert None in vals and "N/A" in vals
+
+
+@pytest.mark.parametrize(
+    "op", [clean.replace_placeholders_with_null, clean.cast_numeric_columns_all_or_nothing]
+)
+def test_explicit_empty_column_list_changes_nothing(spark, op):
+    # columns=[] names no column; only columns=None means "every string column"
+    df = spark.createDataFrame([(" 1 ", "n/a")], "a string, b string")
+    out = op(df, columns=[])
+    assert out.dtypes == df.dtypes
+    assert out.collect() == df.collect()

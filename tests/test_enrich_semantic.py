@@ -170,5 +170,5 @@ def test_distinct_profiles_single_pass(documents):
     assert prof["doc_id"]["non_null"] == prof["doc_id"]["total"]
     nulls = distinct.null_counts(documents)
     assert nulls["doc_id"] == 0
-    samples = distinct.column_value_samples(documents, "lang", 3)
+    samples = distinct.column_samples(documents, ["lang"], 3)["lang"]
     assert len(samples) == 3

@@ -1,8 +1,9 @@
 """Driver-contract smoke: entry() runs on a bare-config session, every
 queries() entry has a callable signature, oracle keys are a subset, and a
-representative sample — plus every graph, k-NN and k-means query —
-hash-matches DuckDB under the parity tool's canonicalizer (the FULL sweep
-lives in tools/check_parity.py — this keeps CI fast)."""
+representative sample — plus the paper's pipeline queries and every
+graph, k-NN and k-means query — hash-matches DuckDB under the parity
+tool's canonicalizer (the FULL sweep lives in tools/check_parity.py —
+this keeps CI fast)."""
 
 import os
 import sys
@@ -24,6 +25,11 @@ SAMPLE = [
     "q_dedup_docs_exact",
     "q_text_tokens",
     "q_events_tumbling",
+    "q_pipeline_translation",
+    "q_pipeline_translation_golden",
+    "q_pipeline_mapping",
+    "q_translate_distributed",
+    "q_clean_placeholders",
 ] + sorted(q for q in entrymod.queries() if q.startswith("q_graph_")) + sorted(
     q for q in entrymod.queries() if q.startswith("q_knn_")
 ) + ["q_embed_kmeans", "q_semantic_dedup"]

@@ -1,0 +1,119 @@
+"""The paper's pipeline makes each column-level decision in one pass.
+
+- ``distinct.column_samples``: one ``(column, value)`` distinct relation
+  yields every column's prompt samples, the n smallest trimmed non-empty
+  values, whatever the partitioning.
+- Job budget: load → translation pipeline → mapping pipeline → five
+  parquet sinks runs a fixed number of Spark jobs, the same for a 4- and
+  a 12-string-column file.
+- Cache lifecycle: the translation pipeline releases what it caches; the
+  mapping pipeline hands its one cached frame to the caller.
+"""
+
+from __future__ import annotations
+
+from ai_etl_pipeline_spark import plans
+from ai_etl_pipeline_spark.operators import distinct
+from ai_etl_pipeline_spark.semantic import HeuristicProvider
+from ai_etl_pipeline_spark.sources import readers, writers
+
+JOB_BUDGET = 30
+
+
+def test_column_samples_are_smallest_n_per_column(spark):
+    rows = [
+        (i, i / 4, f"  v{i % 9} " if i % 5 else "", ["Ä", "z", "a b", "  ", None][i % 5])
+        for i in range(60)
+    ]
+    df = spark.createDataFrame(rows, "id long, ratio double, s string, t string")
+
+    def expected(n):
+        return {
+            c: sorted({str(r[i]).strip(" ") for r in rows if r[i] is not None} - {""})[:n]
+            for i, c in enumerate(df.columns)
+        }
+
+    assert expected(3)["ratio"] == ["0.0", "0.25", "0.5"]  # non-string columns stringified
+    assert expected(3)["t"] == ["a b", "z", "Ä"]
+    for n in (1, 3, 100):
+        for frame in (df, df.repartition(1), df.repartition(7)):
+            assert distinct.column_samples(frame, list(df.columns), n) == expected(n)
+    assert distinct.column_samples(df, [], 5) == {}
+
+
+_GERMAN = ["Bäckerei Köln", "Tankstelle München", "Gasthof Nürnberg", "Apotheke Würzburg"]
+_TRIPS = ["Kundentermin Göttingen", "Messebesuch Lübeck", "Schulung Düsseldorf"]
+
+
+def _expense_csv(path: str, extra: int) -> dict[str, list[str]]:
+    """An expense CSV with 4 + ``extra`` string columns, an amount and a
+    date; returns the five-table star it maps onto."""
+    notes = [f"note_{k}" for k in range(extra)]
+    header = ["Merchant", "Trip Name", "Status", "Code", *notes, "Amount", "Transaction Date"]
+    lines = [",".join(header)]
+    for i in range(120):
+        row = [
+            _GERMAN[i % 4], _TRIPS[i % 3], ["approved and paid", "rejected by the manager"][i % 2],
+            f"C{i % 5:02d}", *[f"the note {k} of row {i % 7}" for k in range(extra)],
+            f"{1 + i / 4:.2f}", f"2024-01-{1 + i % 28:02d}",
+        ]
+        lines.append(",".join(row))
+    with open(path, "w", encoding="utf-8") as fh:
+        fh.write("\n".join(lines) + "\n")
+    return {
+        "DIM_Merchant": ["merchant"],
+        "DIM_Trip": ["trip_name"],
+        "DIM_Status": ["status", *notes],
+        "DIM_Code": ["code", "transaction_date"],
+        "FACT_Expense": ["amount"],
+    }
+
+
+def _inputs(spark, tmp_path, extra: int):
+    """(loaded CSV, empty destination tables, star) for ``_expense_csv``."""
+    tmp_path.mkdir(exist_ok=True)
+    path = str(tmp_path / "expense.csv")
+    star = _expense_csv(path, extra)
+    dest = {t: spark.createDataFrame([], ", ".join(f"{c} string" for c in cols))
+            for t, cols in star.items()}
+    return readers.load_source_file(spark, path), dest, star
+
+
+def test_pipeline_jobs_do_not_grow_with_columns(spark, tmp_path):
+    sc = spark.sparkContext
+    provider = HeuristicProvider(translation_overlay={v: f"EN {v}" for v in _GERMAN + _TRIPS})
+    counts = {}
+    try:
+        for extra in (0, 8):  # 4 and 12 string columns
+            group = f"pipeline-budget-{extra}"
+            sc.setJobGroup(group, group)
+            df, dest, star = _inputs(spark, tmp_path / str(extra), extra)
+            translated, stage1 = plans.run_translation_pipeline(df, provider)
+            tables, stage2 = plans.run_mapping_pipeline(translated, dest, "expense star", provider)
+            for t, frame in tables.items():
+                writers.write_parquet(frame, str(tmp_path / str(extra) / "star" / t))
+            stage2["cleaned"].unpersist()
+            counts[4 + extra] = len(sc.statusTracker().getJobIdsForGroup(group))
+            assert stage1["translated_columns"] == ["merchant", "trip_name"]
+            assert {t: sorted(f.columns) for t, f in tables.items()} == {
+                t: sorted(cols) for t, cols in star.items()
+            }
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert counts[4] == counts[12], counts
+    assert counts[4] <= JOB_BUDGET, counts
+
+
+def test_pipeline_cache_lifecycle(spark, tmp_path):
+    def persisted() -> set[int]:
+        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+
+    before = persisted()
+    df, dest, _ = _inputs(spark, tmp_path, 2)
+    translated, _ = plans.run_translation_pipeline(df, HeuristicProvider())
+    assert persisted() == before
+    _, artifacts = plans.run_mapping_pipeline(translated, dest, "expense star", HeuristicProvider())
+    assert len(persisted() - before) == 1
+    artifacts["cleaned"].unpersist()
+    assert persisted() == before

@@ -14,8 +14,6 @@ registry's oracle gate:
   tail) and under multi-seed min-distance competition.
 - clean.mad_outliers: the lazily-checkpointed medians row must produce
   the same flags/residuals as a hand-computed median/MAD.
-- plans.pipeline._column_samples_concurrent: the thread-pooled P12
-  sampling must return exactly the sequential per-column lists.
 """
 
 from __future__ import annotations
@@ -104,17 +102,3 @@ def test_mad_outliers_checkpointed_medians_exact(spark):
     assert (100.0, 97.0, True) in rows
     assert (1.0, 2.0, False) in rows
     assert (None, None, False) in rows
-
-
-def test_column_samples_concurrent_equals_sequential(spark):
-    from ai_etl_pipeline_spark.operators.distinct import column_value_samples
-    from ai_etl_pipeline_spark.plans.pipeline import _column_samples_concurrent
-
-    df = spark.createDataFrame(
-        [(i, f"v{i % 7}", f"w{i % 3}") for i in range(50)],
-        "id long, a string, b string",
-    )
-    seq = {c: column_value_samples(df, c, 5) for c in df.columns}
-    conc = _column_samples_concurrent(df, list(df.columns), 5)
-    assert conc == seq
-    assert _column_samples_concurrent(df, [], 5) == {}
