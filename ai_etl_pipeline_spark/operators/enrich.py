@@ -5,27 +5,33 @@ The reference applies ``{original: translated}`` dicts per column with
 — semantically a broadcast LEFT OUTER equi-join with identity fallback.
 That is exactly how it is expressed here:
 
-    df JOIN broadcast(map_df) ON trim(df[c]) == orig
+    df JOIN broadcast(map_df) ON trim(df[c]) == original
     c := coalesce(translated, c)
+
+One key contract on both sides: maps are keyed by TRIMMED values (both
+translators read the distinct trimmed values of
+``distinct.distinct_values_long``), every applier probes ``trim(c)``, and
+an unmapped value, ``NULL`` or ``""`` passes through unchanged.
 
 21,775 entries max at reference scale (``cache/translated-map.json``) ≪
 any broadcast threshold; at 100 TB the fact side streams through the
-broadcast hash join with zero shuffle. Tiny maps (≤ ~100 entries) go
-through a ``create_map`` literal instead — no join at all, pure codegen.
+broadcast hash join with zero shuffle. Maps of at most
+``LITERAL_MAP_MAX`` entries go through a ``create_map`` literal instead —
+no join at all, pure codegen.
 """
 
 from __future__ import annotations
 
-import time
 from itertools import chain
 from typing import Callable, Iterator
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..semantic.providers import translate_in_batches
 from .distinct import distinct_column_values, extract_unique_text_values
 
-LITERAL_MAP_MAX = 128  # below this, inline as a create_map literal
+LITERAL_MAP_MAX = 128  # up to this size, inline as a create_map literal
 
 
 def value_map_to_df(spark: SparkSession, value_map: dict[str, str]) -> DataFrame:
@@ -34,75 +40,47 @@ def value_map_to_df(spark: SparkSession, value_map: dict[str, str]) -> DataFrame
     )
 
 
-def apply_value_map(
-    df: DataFrame, column: str, value_map: dict[str, str], spark: SparkSession | None = None
-) -> DataFrame:
+def apply_value_map(df: DataFrame, column: str, value_map: dict[str, str]) -> DataFrame:
     """T5: translate one column through a mapping with identity fallback.
 
-    Row count is preserved exactly (left join on a key that is unique on
-    the build side — uniqueness holds by construction of dict keys).
-
-    Key contract: probes the RAW column value, because its companion
-    builder ``translate_distinct_values`` keys the dict by raw distinct
-    values. The distributed pair (``apply_value_map_df`` +
-    ``translate_distinct_values_distributed``) trims on BOTH sides
-    instead — each pair is internally consistent; don't mix a builder
-    from one pair with the applier from the other.
-    """
-    if column not in df.columns:  # skip-if-missing guard, translate.py:223-224
+    Row count is preserved exactly. Maps larger than ``LITERAL_MAP_MAX``
+    go through :func:`apply_value_map_df`'s broadcast join."""
+    if column not in df.columns or not value_map:  # skip-if-missing guard, translate.py:223-224
         return df
-    if not value_map:
-        return df
-    if len(value_map) <= LITERAL_MAP_MAX:
-        mapping = F.create_map([F.lit(x) for x in chain(*value_map.items())])
-        return df.withColumn(column, F.coalesce(mapping[F.col(column)], F.col(column)))
-    spark = spark or df.sparkSession
-    map_df = value_map_to_df(spark, value_map)
-    joined = df.join(F.broadcast(map_df), on=df[column] == map_df["original"], how="left")
-    return joined.withColumn(column, F.coalesce(map_df["translated"], df[column])).drop(
-        "original", "translated"
-    )
+    if len(value_map) > LITERAL_MAP_MAX:
+        return apply_value_map_df(df, column, value_map_to_df(df.sparkSession, value_map))
+    col = F.col(f"`{column}`")
+    mapping = F.create_map([F.lit(x) for x in chain(*value_map.items())])
+    return df.withColumn(column, F.coalesce(mapping[F.trim(col)], col))
 
 
-def apply_value_maps(
-    df: DataFrame, maps: dict[str, dict[str, str]], spark: SparkSession | None = None
-) -> DataFrame:
+def apply_value_maps(df: DataFrame, maps: dict[str, dict[str, str]]) -> DataFrame:
     """T5 over all columns (``translate.py:219-224`` loop)."""
     for column, value_map in maps.items():
-        df = apply_value_map(df, column, value_map, spark=spark)
+        df = apply_value_map(df, column, value_map)
     return df
 
 
 def translate_distinct_values(
     df: DataFrame,
     columns: list[str],
-    translate_batch,
+    translate_batch: Callable[[list[str]], list[str]],
     batch_size: int = 100,
 ) -> dict[str, dict[str, str]]:
     """T3's shape (``translate.py:78-123``): collect every column's DISTINCT
     values in one job (semi-join reduction — the reference's one real
     optimization) and push them through ``translate_batch(list[str]) ->
-    list[str]`` in batches, building ``{col: {orig: translated}}``.
+    list[str]`` with ``semantic.providers.translate_in_batches``,
+    building ``{col: {orig: translated}}``.
 
     ``translate_batch`` is a provider callable (network, LLM, or the
-    deterministic offline provider in semantic/providers.py). Batching +
-    throttling live in the provider, mirroring batch_size=100 / 0.15 s
-    (``translate.py:98-118``). Identity fallback on provider failure.
-    """
-    out: dict[str, dict[str, str]] = {}
-    for c, values in extract_unique_text_values(df, columns).items():
-        mapping: dict[str, str] = {}
-        for i in range(0, len(values), batch_size):
-            batch = values[i : i + batch_size]
-            try:
-                translated = translate_batch(batch)
-                if len(translated) != len(batch):
-                    raise ValueError("provider returned wrong batch size")
-            except Exception:
-                translated = batch  # identity fallback, translate.py:111-116
-            mapping.update(dict(zip(batch, translated)))
-        out[c] = mapping
-    return out
+    deterministic offline provider in semantic/providers.py); the
+    reference's 0.15 s throttle lives in the transport
+    (``RestTranslatorClient.throttle_s``)."""
+    return {
+        c: dict(zip(values, translate_in_batches(values, translate_batch, batch_size)))
+        for c, values in extract_unique_text_values(df, columns).items()
+    }
 
 
 def translate_distinct_values_distributed(
@@ -110,7 +88,6 @@ def translate_distinct_values_distributed(
     column: str,
     translate_batch: Callable[[list[str]], list[str]],
     batch_size: int = 100,
-    throttle_s: float = 0.0,
     num_partitions: int | None = None,
 ) -> DataFrame:
     """S7's scale path (SURVEY §2.1): the ``mapInPandas`` variant of
@@ -121,12 +98,10 @@ def translate_distinct_values_distributed(
     reference's 33k values, ``translate.py:85``); when the distinct set
     itself is large, this version keeps it distributed: distinct →
     (optional) repartition to bound per-task call volume → each Arrow
-    batch is sliced into ``batch_size`` chunks (``translate.py:98``),
-    pushed through the provider with the reference's inter-call throttle
-    (0.15 s, ``translate.py:118``) and per-batch identity fallback
-    (``translate.py:111-116``), yielding an ``(original, translated)``
-    mapping relation. Feed it straight into a broadcast
-    ``apply_value_map`` join — the mapping never lands on the driver.
+    batch goes through the same ``translate_in_batches`` as the driver
+    path, yielding an ``(original, translated)`` mapping relation. Feed
+    it straight into :func:`apply_value_map_df` — the mapping never
+    lands on the driver.
 
     ``translate_batch`` must be picklable (providers in
     semantic/providers.py are plain dataclasses / functions)."""
@@ -137,44 +112,25 @@ def translate_distinct_values_distributed(
         distinct = distinct.repartition(num_partitions)
 
     def run(batches: Iterator["pd.DataFrame"]) -> Iterator["pd.DataFrame"]:
-        first = True
         for pdf in batches:
             vals = pdf["original"].tolist()
-            translated: list[str] = []
-            for i in range(0, len(vals), batch_size):
-                batch = vals[i : i + batch_size]
-                if throttle_s and not first:
-                    time.sleep(throttle_s)
-                first = False
-                try:
-                    out = translate_batch(batch)
-                    if len(out) != len(batch):
-                        raise ValueError("provider returned wrong batch size")
-                except Exception:
-                    out = batch  # identity fallback, translate.py:111-116
-                translated.extend(out)
-            yield pd.DataFrame({"original": vals, "translated": translated})
+            yield pd.DataFrame(
+                {"original": vals, "translated": translate_in_batches(vals, translate_batch, batch_size)}
+            )
 
     return distinct.mapInPandas(run, schema="original string, translated string")
 
 
-def apply_value_map_df(
-    df: DataFrame, column: str, map_df: DataFrame, broadcast_map: bool = True
-) -> DataFrame:
-    """T5 with a mapping RELATION instead of a driver-side dict — the
-    closing half of the distributed path: the mapping produced by
+def apply_value_map_df(df: DataFrame, column: str, map_df: DataFrame) -> DataFrame:
+    """T5 with a mapping RELATION ``(original, translated)`` instead of a
+    driver-side dict: one broadcast left join, so a mapping produced by
     ``translate_distinct_values_distributed`` joins onto the corpus
-    without ever being collected. ``broadcast_map=False`` falls back to
-    a shuffle join for mappings too large to broadcast.
-
-    Key contract: probes ``trim(column)`` because the distributed
-    builder trims values before distinct-ing (see ``apply_value_map``
-    for the raw-key driver-side pair — don't mix the pairs)."""
+    without ever being collected."""
     if column not in df.columns:
         return df
-    build = F.broadcast(map_df) if broadcast_map else map_df
-    joined = df.join(build, on=F.trim(df[column]) == map_df["original"], how="left")
-    return joined.withColumn(column, F.coalesce(map_df["translated"], df[column])).drop(
+    col = df[f"`{column}`"]
+    joined = df.join(F.broadcast(map_df), on=F.trim(col) == map_df["original"], how="left")
+    return joined.withColumn(column, F.coalesce(map_df["translated"], col)).drop(
         "original", "translated"
     )
 

@@ -20,7 +20,9 @@ OFFLINE-SAFE:
   the pipelines consume, so swapping HeuristicProvider → NetworkProvider
   is a one-line config change and no pipeline code moves.
 
-None of this is imported by the query/bench path.
+``semantic/__init__.py`` imports this module, so every importer of
+``ai_etl_pipeline_spark.semantic`` loads it, but nothing here runs and
+nothing touches the network until a caller builds one of these clients.
 """
 
 from __future__ import annotations
@@ -63,7 +65,9 @@ class RestTranslatorClient:
     ``translate_batch`` is the provider callable the engine consumes —
     pass it to ``translate_distinct_values`` (driver path) or
     ``translate_distinct_values_distributed`` (mapInPandas path; the
-    dataclass pickles to python workers).
+    dataclass pickles to python workers). ``throttle_s`` is the package's
+    one inter-call throttle (``translate.py:118``): it sleeps before every
+    POST, whichever path makes the call.
     """
 
     api_key: str
@@ -87,9 +91,9 @@ class RestTranslatorClient:
         )
 
     def translate_batch(self, values: list[str]) -> list[str]:
-        """One POST per call; raises on failure so callers' per-batch
-        identity fallback (enrich.py) engages — the same net behavior as
-        ``translate.py:105-116``."""
+        """One POST per call; raises on failure so the per-batch identity
+        fallback of ``providers.translate_in_batches`` engages — the same
+        net behavior as ``translate.py:105-116``."""
         url = f"{self.endpoint.rstrip('/')}/translate?api-version=3.0&to={self.to_lang}"
         headers = {
             "Ocp-Apim-Subscription-Key": self.api_key,
@@ -162,7 +166,8 @@ class NetworkProvider:
     failure semantics: label kernels answer UNKNOWN on malformed output
     and ERROR on transport failure (``translate.py:51-54``, ``:72-75``);
     ``map_schema`` falls back to the heuristic matcher; translation
-    raises per batch so enrich.py's identity fallback engages."""
+    raises per batch so ``providers.translate_in_batches``' identity
+    fallback engages."""
 
     chat: OpenAIChatClient
     translator: RestTranslatorClient

@@ -22,7 +22,6 @@ from __future__ import annotations
 
 import difflib
 import re
-import time
 from dataclasses import dataclass, field
 from typing import Callable, Protocol
 
@@ -144,41 +143,31 @@ class HeuristicProvider:
         return [self.translation_overlay.get(v, v) for v in values]
 
 
-@dataclass
-class ThrottledBatchTranslator:
-    """S7's operational shape (``translate.py:78-123``): batches of
-    ``batch_size`` through ``call`` with ``throttle_s`` sleep between
-    batches and identity fallback per batch on failure. Wraps any
-    transport (HTTP POST in the reference)."""
-
-    call: Callable[[list[str]], list[str]]
-    batch_size: int = 100  # translate.py:78
-    throttle_s: float = 0.15  # translate.py:118
-
-    def translate_batch(self, values: list[str]) -> list[str]:
-        out: list[str] = []
-        for i in range(0, len(values), self.batch_size):
-            batch = values[i : i + self.batch_size]
-            try:
-                res = self.call(batch)
-                if len(res) != len(batch):
-                    raise ValueError("bad batch size")
-                out.extend(res)
-            except Exception:
-                out.extend(batch)  # translate.py:111-116
-            if i + self.batch_size < len(values):
-                time.sleep(self.throttle_s)
-        return out
+def translate_in_batches(
+    values: list[str],
+    translate_batch: Callable[[list[str]], list[str]],
+    batch_size: int = 100,  # translate.py:78
+) -> list[str]:
+    """S7/T3's batching (``translate.py:98-116``): ``values`` in slices of
+    ``batch_size`` through ``translate_batch``; a slice whose call raises
+    or returns the wrong count falls back to identity on its own. The
+    0.15 s throttle (``translate.py:118``) belongs to the transport
+    (``adapters.RestTranslatorClient.throttle_s``)."""
+    out: list[str] = []
+    for i in range(0, len(values), batch_size):
+        batch = values[i : i + batch_size]
+        try:
+            translated = list(translate_batch(batch))
+        except Exception:
+            translated = batch
+        out.extend(translated if len(translated) == len(batch) else batch)
+    return out
 
 
 def translate_one(value: str, provider: SemanticProvider) -> str:
     """T4 (``translate.py:125-149``): single-string translation with
     identity fallback on any failure."""
-    try:
-        out = provider.translate_batch([value])
-        return out[0] if out else value
-    except Exception:
-        return value
+    return translate_in_batches([value], provider.translate_batch)[0]
 
 
 def classify_text_columns(

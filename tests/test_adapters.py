@@ -9,6 +9,7 @@ Wire-shape parity targets in the reference:
 """
 
 import json
+import time
 
 import pytest
 
@@ -75,6 +76,32 @@ def test_translator_feeds_driver_side_enrich_path(spark):
     )
     maps = enrich.translate_distinct_values(df, ["v"], client.translate_batch)
     assert maps["v"] == {"Hallo": "EN:Hallo", "Welt": "EN:Welt"}
+
+
+def _stamping_transport():
+    # a closure, shipped by value to python workers (see _translate_ok in
+    # tests/test_enrich_distributed.py): each translation carries the
+    # monotonic time its POST reached the transport
+    def transport(url, headers, body, timeout):
+        t = time.monotonic()
+        out = [{"translations": [{"text": f"{item['text']}|t{t:.4f}"}]} for item in json.loads(body)]
+        return 200, json.dumps(out).encode()
+
+    return transport
+
+
+def test_translator_throttle_spaces_distributed_calls(spark):
+    # the transport holds the package's one throttle (translate.py:118),
+    # so the mapInPandas path's provider calls are spaced by it too
+    df = spark.createDataFrame([(f"v{i:02d}",) for i in range(30)], "v string")
+    client = RestTranslatorClient(api_key="k", throttle_s=0.12, transport=_stamping_transport())
+    mapping = enrich.translate_distinct_values_distributed(
+        df, "v", client.translate_batch, batch_size=10, num_partitions=1
+    )
+    stamps = sorted({float(r["translated"].rsplit("|t", 1)[1]) for r in mapping.collect()})
+    assert len(stamps) == 3  # 30 values / batch_size 10
+    gaps = [b - a for a, b in zip(stamps, stamps[1:])]
+    assert all(g >= 0.1 for g in gaps)
 
 
 def test_translator_from_env_mirrors_reference_config():

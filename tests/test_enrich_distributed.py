@@ -2,12 +2,11 @@
 
 Parity contract with the reference's batch translator
 (``/root/reference/translate.py:98-118``): ≤ batch_size values per
-provider call, inter-call throttle, identity fallback for a failing
-batch only (``:111-116``), and the mapping applies back with identity
-for unmapped values (``:219-224``).
+provider call, identity fallback for a failing batch only
+(``:111-116``), and the mapping applies back with identity for unmapped
+values (``:219-224``). The inter-call throttle (``:118``) belongs to the
+transport; ``tests/test_adapters.py`` checks it on this path.
 """
-
-import time
 
 import pytest
 from pyspark.sql import functions as F
@@ -57,24 +56,6 @@ def test_distributed_identity_fallback_is_per_batch(spark):
     identity = {k for k, v in rows.items() if k == v}
     assert "v013" in identity and len(identity) <= 7  # only that one batch
     assert rows["v000"] == "T:v000" or "v000" in identity
-
-
-def test_distributed_throttle_spaces_provider_calls(spark):
-    df = _corpus(spark, n=30)
-
-    def stamped(batch):
-        t = time.monotonic()
-        return [f"{v}|t{t:.4f}" for v in batch]
-
-    mapping = enrich.translate_distinct_values_distributed(
-        df, "v", stamped, batch_size=10, throttle_s=0.12, num_partitions=1
-    )
-    stamps = sorted(
-        {float(r["translated"].rsplit("|t", 1)[1]) for r in mapping.collect()}
-    )
-    assert len(stamps) == 3  # 30 values / batch_size 10
-    gaps = [b - a for a, b in zip(stamps, stamps[1:])]
-    assert all(g >= 0.1 for g in gaps)  # translate.py:118 inter-call sleep
 
 
 def test_apply_value_map_df_roundtrip_preserves_rows(spark):

@@ -1,6 +1,8 @@
 """Enrichment (T3/T5), semantic providers (T1/T2/M1/M2), mapping split
 (P9/P10) — SURVEY.md §2.8."""
 
+import pytest
+
 from ai_etl_pipeline_spark.operators import distinct, enrich, mapping
 from ai_etl_pipeline_spark.semantic.providers import (
     ENGLISH,
@@ -8,9 +10,9 @@ from ai_etl_pipeline_spark.semantic.providers import (
     NON_TEXT,
     TEXT,
     HeuristicProvider,
-    ThrottledBatchTranslator,
     classify_text_columns,
     detect_column_languages,
+    translate_in_batches,
 )
 
 
@@ -19,7 +21,7 @@ def test_value_map_literal_and_broadcast_agree(spark):
     small = {"v0": "zero", "v1": "one"}
     big = {f"v{i}": f"t{i}" for i in range(200)}  # > LITERAL_MAP_MAX -> join path
     out_small = enrich.apply_value_map(df, "v", small)
-    out_big = enrich.apply_value_map(df, "v", big, spark=spark)
+    out_big = enrich.apply_value_map(df, "v", big)
     assert out_small.count() == 300  # row count preserved exactly
     assert out_big.count() == 300
     got = {r["id"]: r["v"] for r in out_small.collect()}
@@ -31,6 +33,51 @@ def test_value_map_literal_and_broadcast_agree(spark):
 def test_value_map_missing_column_skipped(spark):
     df = spark.createDataFrame([(1,)], "id long")
     assert enrich.apply_value_map(df, "nope", {"a": "b"}) is df  # translate.py:223-224 guard
+
+
+APPLY_PATHS = ["literal", "join", "relation"]
+
+
+def _apply(spark, df, column, value_map, path):
+    """One value map through the applier ``path`` names: the create_map
+    literal, the dict above LITERAL_MAP_MAX (broadcast join), or the
+    mapping relation. Filler keys that match no row lift the map past
+    the literal size without changing what it translates."""
+    if path == "literal":
+        assert len(value_map) <= enrich.LITERAL_MAP_MAX
+        return enrich.apply_value_map(df, column, value_map)
+    big = {**value_map, **{f"filler{i}": "F" for i in range(enrich.LITERAL_MAP_MAX)}}
+    if path == "join":
+        return enrich.apply_value_map(df, column, big)
+    return enrich.apply_value_map_df(df, column, enrich.value_map_to_df(spark, big))
+
+
+@pytest.mark.parametrize("path", APPLY_PATHS)
+def test_value_map_one_key_contract(spark, path):
+    # every applier probes trim(v): a padded value is translated, while an
+    # unmapped value (padded or not), NULL and "" pass through unchanged
+    rows = [(1, "v000"), (2, "  v000  "), (3, "v001"), (4, "zz"), (5, " zz "), (6, None), (7, "")]
+    df = spark.createDataFrame(rows, "id long, v string")
+    value_map = enrich.translate_distinct_values(
+        df.where("id <= 3"), ["v"], lambda batch: [f"T:{v}" for v in batch]
+    )["v"]
+    assert value_map == {"v000": "T:v000", "v001": "T:v001"}
+    out = _apply(spark, df, "v", value_map, path)
+    assert out.columns == ["id", "v"]
+    assert dict(out.collect()) == {
+        1: "T:v000", 2: "T:v000", 3: "T:v001", 4: "zz", 5: " zz ", 6: None, 7: "",
+    }
+
+
+@pytest.mark.parametrize("path", APPLY_PATHS)
+def test_value_map_dotted_column_name(spark, path):
+    df = spark.createDataFrame([("a",), (" b ",), ("c",)], "`x.y` string")
+    value_map = enrich.translate_distinct_values(
+        df, ["x.y"], lambda batch: [v.upper() for v in batch]
+    )["x.y"]
+    out = _apply(spark, df, "x.y", value_map, path)
+    assert out.columns == ["x.y"]
+    assert sorted(r[0] for r in out.collect()) == ["A", "B", "C"]
 
 
 def test_translate_distinct_semi_join_reduction(spark):
@@ -57,11 +104,23 @@ def test_translate_identity_fallback_on_failure(spark):
     assert maps["v"] == {"a": "a", "b": "b"}  # translate.py:111-116
 
 
-def test_throttled_batch_translator_batches():
+def test_translate_in_batches_slices_and_falls_back_per_slice():
+    values = [f"v{i:02d}" for i in range(25)]
     calls = []
-    t = ThrottledBatchTranslator(call=lambda b: (calls.append(len(b)), b)[1], batch_size=10, throttle_s=0.0)
-    out = t.translate_batch([str(i) for i in range(25)])
-    assert calls == [10, 10, 5] and len(out) == 25
+
+    def provider(batch):
+        calls.append(len(batch))
+        if "v10" in batch:
+            raise RuntimeError("provider down")
+        if "v20" in batch:
+            return batch[:-1]  # wrong count
+        return [v.upper() for v in batch]
+
+    out = translate_in_batches(values, provider, batch_size=10)
+    assert calls == [10, 10, 5]
+    # slice 1 translated; the raising slice 2 and the short slice 3 each
+    # fall back to identity on their own (translate.py:111-116)
+    assert out == [v.upper() for v in values[:10]] + values[10:]
 
 
 def test_heuristic_classifier_and_detector():

@@ -22,6 +22,8 @@ SAMPLE = [
     "q_window_topk_per_customer",
     "q_clean_numeric_cast",
     "q_map_values_literal",
+    "q_map_values_broadcast",
+    "q_distinct_values",
     "q_dedup_docs_exact",
     "q_text_tokens",
     "q_events_tumbling",
