@@ -221,7 +221,10 @@ def preprocess_data(
 
     Idempotent: ``preprocess(preprocess(x)) == preprocess(x)`` (the
     reference relies on this by re-preprocessing at ``mapper.py:207``) —
-    property-tested in tests/test_clean.py.
+    property-tested in tests/test_clean.py. To keep that promise, P2
+    counts string columns after P5/P6: a column of placeholders only is
+    dropped in the first pass, where the reference drops it only when
+    it re-preprocesses.
     """
     log = [] if log is None else log
     df = normalize_column_names(df, log)
@@ -230,10 +233,11 @@ def preprocess_data(
     # after the trim catches "  n/a ", which the reference (strip AFTER
     # replace) keeps: strictly cleaner, and covered by golden tests.
     staged = {c: _placeholder_null(F.trim(_placeholder_null(F.col(f"`{c}`")))) for c in string_columns(df)}
-    # ONE aggregate decides P2 (raw non-null counts) and P7 (the numeric
-    # probe over the staged values).
+    # ONE aggregate decides P2 and P7 (the numeric probe), both over the
+    # staged values: a column holding only placeholders is empty here,
+    # not only on the next pass, so the chain stays idempotent.
     probe = df.select(
-        *[F.count(F.col(f"`{c}`")).alias(f"__e_{c}") for c in df.columns],
+        *[F.count(staged.get(c, F.col(f"`{c}`"))).alias(f"__e_{c}") for c in df.columns],
         *[p for c, v in staged.items() for p in _numeric_probe(c, v)],
     ).first()
     empty = [c for c in df.columns if probe[f"__e_{c}"] == 0]  # P2, preprocess.py:42-45

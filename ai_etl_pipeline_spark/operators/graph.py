@@ -223,7 +223,10 @@ def pagerank(
     # Hash-partition the edge relation on the join key before caching:
     # the cached relation preserves outputPartitioning, so the
     # per-iteration contribution join reuses the layout and only the
-    # node-sized rank frame moves per iteration.
+    # node-sized rank frame moves per iteration. The layout is pinned to
+    # the session's partition count: AQE may resize a cached plan
+    # (session.py), but never an explicit count, and a resized edge cache
+    # would be re-shuffled every round.
     # STATIC relations (edges, degrees, node set) are cache()d, not
     # lazily checkpointed: a checkpoint physically plans its frame at
     # BUILD time, while InMemoryRelation defers to the first action and
@@ -233,7 +236,8 @@ def pagerank(
     # edge-sized string-heavy frame only 2-3 times in one heavy job
     # (triangle census, label propagation, HITS) measured 2-3x SLOWER
     # cached and keep lazy checkpoints instead.
-    e = e.repartition(F.col("__src")).cache()
+    n_parts = int(edges.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    e = e.repartition(n_parts, F.col("__src")).cache()
     deg = e.groupBy("__src").agg(F.sum("__w").alias("__deg")).cache()
     # after symmetrization every endpoint appears as a source
     nodes = e.select(F.col("__src").alias("__node"))
@@ -276,7 +280,8 @@ def pagerank(
     if not symmetric:
         # the one-row restart count is broadcast into every iteration
         n_restart = n_restart.cache()
-    nd = nd.cache()
+    # pinned like e: every round joins its incoming mass onto nd by node
+    nd = nd.repartition(n_parts, F.col("__node")).cache()
     if init_ranks is not None:
         prev = init_ranks.select(
             F.col(init_ranks.columns[0]).alias("__node"),

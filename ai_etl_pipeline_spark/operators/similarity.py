@@ -2559,12 +2559,20 @@ def retrieval_eval_report(
     # cache(), not a lazy localCheckpoint: the df→RDD conversion a
     # checkpoint does physically plans the exact tier at build time
     # (the r12 recall_report finding) — the cache defers to the one
-    # final job and still dedupes the per-tier re-reads
-    truth = exact.select(
-        F.col("query_id").alias("__q"),
-        F.col("neighbor_id").alias("__n"),
-        F.col("rn").alias("__er"),
-    ).cache()
+    # final job and still dedupes the per-tier re-reads. Its layout on
+    # the query id is pinned to the session's partition count (AQE may
+    # resize a cached plan, session.py): every tier's per-query join
+    # reuses it instead of re-shuffling truth once per tier.
+    n_parts = int(exact.sparkSession.conf.get("spark.sql.shuffle.partitions"))
+    truth = (
+        exact.select(
+            F.col("query_id").alias("__q"),
+            F.col("neighbor_id").alias("__n"),
+            F.col("rn").alias("__er"),
+        )
+        .repartition(n_parts, F.col("__q"))
+        .cache()
+    )
     qset = truth.select("__q").distinct()
     idcg = sum((k + 1 - i) * (1.0 / math.log2(i + 1)) for i in range(1, k + 1))
     dcg_terms = " + ".join(

@@ -6,7 +6,15 @@ load). Here every pipeline is a lazy DataFrame plan executed by
 Catalyst/Tungsten; the session config below is the scale story:
 
 - AQE on: runtime coalescing of shuffle partitions + skew-join splitting,
-  so the same plan works at sf0.001 and at 100 TB.
+  so the same plan works at sf0.001 and at 100 TB. Cached frames are
+  sized too (``canChangeCachedPlanOutputPartitioning``): without it a
+  cache built over a shuffle keeps every ``spark.sql.shuffle.partitions``
+  partition, so a 5,000-row frame ran 32 tasks per stage and its sinks
+  wrote 32 files. The cost is that a cache may lose its hash layout.
+  Where a later join relies on that layout (a loop that joins the same
+  cache every round), pin it: ``repartition(<session shuffle
+  partitions>, key)`` before ``cache()``. AQE never coalesces a
+  partition count set explicitly.
 - Arrow on: every pandas_udf / toPandas boundary is vectorized.
 - ``spark.sql.shuffle.partitions`` defaults to a local-friendly number but
   is explicitly overridable for cluster deployments (set it to ~2-3x the
@@ -43,6 +51,7 @@ def get_session(
         .config("spark.sql.adaptive.enabled", "true")
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
+        .config("spark.sql.optimizer.canChangeCachedPlanOutputPartitioning", "true")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.parquet.filterPushdown", "true")

@@ -17,6 +17,20 @@ def spark():
     yield s
 
 
+@pytest.fixture
+def default_partitions(spark):
+    """The session's shipped ``spark.sql.shuffle.partitions`` (32) for one
+    test, instead of the 4 the test session pins."""
+    from ai_etl_pipeline_spark.session import DEFAULT_SHUFFLE_PARTITIONS
+
+    prev = spark.conf.get("spark.sql.shuffle.partitions")
+    spark.conf.set("spark.sql.shuffle.partitions", str(DEFAULT_SHUFFLE_PARTITIONS))
+    try:
+        yield DEFAULT_SHUFFLE_PARTITIONS
+    finally:
+        spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
 @pytest.fixture(scope="session")
 def sf_dir():
     return SF_DIR

@@ -44,14 +44,20 @@ def test_full_chain_golden(dirty_expenses):
     assert any("duplicate rows" in m for m in log)
 
 
-def test_chain_idempotent(dirty_expenses):
+def test_chain_idempotent(spark, dirty_expenses):
     # the reference re-preprocesses its own output (mapper.py:207)
-    once, _ = clean.preprocess_data(dirty_expenses)
-    twice, _ = clean.preprocess_data(once)
-    assert once.schema == twice.schema
-    a = sorted(map(str, once.collect()))
-    b = sorted(map(str, twice.collect()))
-    assert a == b
+    # "p" holds only placeholders: it must be empty in the first pass already
+    placeholders_only = spark.createDataFrame(
+        [("a", "n/a", "x"), ("b", "-", None), ("c", "null", "y")], "k string, p string, q string"
+    )
+    for df in (dirty_expenses, placeholders_only):
+        once, _ = clean.preprocess_data(df)
+        twice, _ = clean.preprocess_data(once)
+        assert once.schema == twice.schema
+        a = sorted(map(str, once.collect()))
+        b = sorted(map(str, twice.collect()))
+        assert a == b
+    assert once.columns == ["k", "q"]
 
 
 def test_dedup_monotone(lineitem):

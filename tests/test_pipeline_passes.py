@@ -8,9 +8,13 @@
   a 12-string-column file.
 - Cache lifecycle: the translation pipeline releases what it caches; the
   mapping pipeline hands its one cached frame to the caller.
+- Sink sizing: at the session's shipped 32 shuffle partitions, AQE sizes
+  the cached frame too, so each small star table is one parquet file.
 """
 
 from __future__ import annotations
+
+import os
 
 from ai_etl_pipeline_spark import plans
 from ai_etl_pipeline_spark.operators import distinct
@@ -117,3 +121,18 @@ def test_pipeline_cache_lifecycle(spark, tmp_path):
     assert len(persisted() - before) == 1
     artifacts["cleaned"].unpersist()
     assert persisted() == before
+
+
+def test_pipeline_sinks_are_sized_by_aqe(spark, tmp_path, default_partitions):
+    df, dest, _ = _inputs(spark, tmp_path, 2)
+    translated, _ = plans.run_translation_pipeline(df, HeuristicProvider())
+    tables, artifacts = plans.run_mapping_pipeline(translated, dest, "expense star", HeuristicProvider())
+    try:
+        for t, frame in tables.items():
+            writers.write_parquet(frame, str(tmp_path / "star" / t))
+        files = {t: [f for f in os.listdir(tmp_path / "star" / t) if f.endswith(".parquet")]
+                 for t in tables}
+        assert {t: len(fs) for t, fs in files.items()} == {t: 1 for t in tables}
+        assert artifacts["cleaned"].rdd.getNumPartitions() == 1
+    finally:
+        artifacts["cleaned"].unpersist()

@@ -10,6 +10,9 @@ the promise independently of the registry's oracle gate:
 - graph.pagerank: every mode — uniform and personalized, symmetric and
   directed, weighted, warm-started, with the delta receipt — must leave
   ranks bit-identical to a driver-side replay of the integer iteration.
+- graph.pagerank at the shipped 32 shuffle partitions: the edge and node
+  caches keep the hash layout every round's join reuses, so a fixed-round
+  run fires as many jobs as before AQE could resize cached plans.
 - sources.versioned.versioned_upsert: the coalesce-on-write rewrite
   must keep snapshot contents and the change feed identical, and the
   rewrite must still produce real part files.
@@ -197,6 +200,24 @@ def test_pagerank_r17_shape_matches_reference(spark, symmetric, mode):
     assert got == {n: (rank[n], deg.get(n, 0)) for n in rank}
     if kw.get("delta_receipt"):
         assert {r["max_delta"] for r in rows} == {max_delta}
+
+
+@pytest.mark.parametrize("symmetric, jobs", [(True, 29), (False, 50)])
+def test_pagerank_cached_layout_stays_pinned(spark, default_partitions, symmetric, jobs):
+    # the counts from before AQE could resize cached plans; with the edge
+    # and node caches unpinned they re-shuffle per round: 35 and 54 jobs
+    edges = spark.createDataFrame(
+        [(i, (i * 7 + 3) % 40) for i in range(120)], "src long, dst long"
+    )
+    sc = spark.sparkContext
+    group = f"pagerank-pinned-{symmetric}"
+    sc.setJobGroup(group, group)
+    try:
+        graph.pagerank(edges, iterations=6, symmetric=symmetric).collect()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) == jobs
 
 
 def test_versioned_upsert_coalesce_contents_and_files(spark, tmp_path):
