@@ -6436,7 +6436,8 @@ def q_pipeline_translation(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_etl_pipeline_spark.semantic import HeuristicProvider
 
     docs = _t(spark, sf_dir, "documents")
-    out, _ = run_translation_pipeline(docs, HeuristicProvider())
+    out, artifacts = run_translation_pipeline(docs, HeuristicProvider())
+    artifacts["cleaned"].unpersist()  # the result is read once: nothing to share
     return out
 
 
@@ -6525,6 +6526,7 @@ def q_pipeline_translation_golden(spark: SparkSession, sf_dir: str) -> DataFrame
     )
     provider = HeuristicProvider(translation_overlay=dict(_GOLDEN_TRANSLATIONS))
     out, artifacts = run_translation_pipeline(df, provider)
+    artifacts["cleaned"].unpersist()  # the result is read once: nothing to share
     return out
 
 

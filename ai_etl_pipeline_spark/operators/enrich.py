@@ -17,7 +17,10 @@ an unmapped value, ``NULL`` or ``""`` passes through unchanged.
 any broadcast threshold; at 100 TB the fact side streams through the
 broadcast hash join with zero shuffle. Maps of at most
 ``LITERAL_MAP_MAX`` entries go through a ``create_map`` literal instead —
-no join at all, pure codegen.
+no join at all, pure codegen. Larger maps are built on the driver as an
+Arrow table, which Spark plans as a ``LocalRelation``: the broadcast runs
+in the JVM and starts no Python worker (a map built from a Python list
+would be a pickled ``LogicalRDD``, one Python-worker job per action).
 """
 
 from __future__ import annotations
@@ -35,8 +38,15 @@ LITERAL_MAP_MAX = 128  # up to this size, inline as a create_map literal
 
 
 def value_map_to_df(spark: SparkSession, value_map: dict[str, str]) -> DataFrame:
+    """The ``(original, translated)`` relation of a driver-side map, as a
+    ``LocalRelation`` whatever the session's Arrow setting."""
+    import pyarrow as pa
+
     return spark.createDataFrame(
-        [(k, v) for k, v in value_map.items()], schema="original string, translated string"
+        pa.table({
+            "original": pa.array(list(value_map.keys()), pa.string()),
+            "translated": pa.array(list(value_map.values()), pa.string()),
+        })
     )
 
 
@@ -125,14 +135,16 @@ def apply_value_map_df(df: DataFrame, column: str, map_df: DataFrame) -> DataFra
     """T5 with a mapping RELATION ``(original, translated)`` instead of a
     driver-side dict: one broadcast left join, so a mapping produced by
     ``translate_distinct_values_distributed`` joins onto the corpus
-    without ever being collected."""
+    without ever being collected. The map's columns take private names
+    inside the join, so ``df``'s own ``original`` and ``translated``
+    columns pass through."""
     if column not in df.columns:
         return df
     col = df[f"`{column}`"]
-    joined = df.join(F.broadcast(map_df), on=F.trim(col) == map_df["original"], how="left")
-    return joined.withColumn(column, F.coalesce(map_df["translated"], col)).drop(
-        "original", "translated"
-    )
+    key, value = "__value_map_original", "__value_map_translated"
+    m = map_df.select(F.col("original").alias(key), F.col("translated").alias(value))
+    joined = df.join(F.broadcast(m), on=F.trim(col) == F.col(key), how="left")
+    return joined.withColumn(column, F.coalesce(F.col(value), col)).drop(key, value)
 
 
 def target_encode(

@@ -13,12 +13,23 @@ The reference's write-then-reload JSON checkpoint after every stage
 LLM-boundary artifacts (value dicts, mappings) — the things genuinely
 worth persisting — still go through store_json_checkpoint when a
 ``checkpoint_dir`` is given.
+
+Caches, so that the translated frame is computed once:
+
+- Stage 1 caches its cleaned frame and returns it as
+  ``artifacts["cleaned"]``; its translated frame is lazy over it.
+- Stage 2 caches its input until its re-cleaned frame is built, then
+  releases it. It returns the re-cleaned frame, cached, as its own
+  ``artifacts["cleaned"]``.
+- The caller unpersists both ``artifacts["cleaned"]`` after the sinks.
+  Either stage releases what it cached if it raises.
 """
 
 from __future__ import annotations
 
 import os
 
+from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 
 from ..operators.clean import preprocess_data
@@ -168,9 +179,13 @@ def run_translation_pipeline(
     preserved exactly; only TEXT ∩ NON-ENGLISH columns are translated
     (the reference's column-pruning, ``translate.py:184-204``).
 
-    The cleaned frame is cached for its two driver reads, the prompt
-    samples and the distinct values sent to the translator, and released
-    before this returns; the returned frame is lazy over the uncached chain."""
+    Stage 1 owns one cache, the cleaned frame. Its two driver reads, the
+    prompt samples and the distinct values sent to the translator, build
+    it, and the returned frame is lazy over it, so every later action
+    over the translated frame starts from the cache, not from the
+    source scan and the dedup shuffle. It is ``artifacts["cleaned"]``;
+    the caller unpersists it when the translated frame is no longer
+    read. On error it is released before the exception propagates."""
     cleaned, log = preprocess_data(df)
     cleaned.cache()
     try:
@@ -180,9 +195,10 @@ def run_translation_pipeline(
         langs = detect_column_languages({c: samples[c] for c in text_cols}, provider)
         target_cols = [c for c in text_cols if langs.get(c) == NON_ENGLISH]
         maps = translate_distinct_values(cleaned, target_cols, provider.translate_batch)
-    finally:
+        _checkpoint(maps, checkpoint_dir, "translated-map.json")
+    except BaseException:
         cleaned.unpersist()
-    _checkpoint(maps, checkpoint_dir, "translated-map.json")
+        raise
     translated = apply_value_maps(cleaned, maps)
     artifacts = {
         "log": log,
@@ -190,6 +206,7 @@ def run_translation_pipeline(
         "column_languages": langs,
         "translated_columns": target_cols,
         "value_maps": maps,
+        "cleaned": cleaned,
     }
     return translated, artifacts
 
@@ -203,21 +220,36 @@ def run_mapping_pipeline(
 ) -> tuple[dict[str, DataFrame], dict]:
     """Stage 2: returns ({table: DataFrame}, artifacts).
 
-    The re-cleaned frame is cached: the prompt samples materialize it and
-    every table projects from it, so each table's sink is one scan. It is
-    ``artifacts["cleaned"]``; the caller unpersists it after the writes."""
-    cleaned, log = preprocess_data(df)  # idempotent re-clean, mapper.py:207
+    Stage 2 owns two caches. Its input is cached for the re-clean probe
+    and the build of the re-cleaned frame's cache, and released once that
+    cache is built; an input the caller already cached is left alone.
+    The re-cleaned frame is cached because every table projects from it,
+    so each table's sink is one scan. It is ``artifacts["cleaned"]``; the
+    caller unpersists it after the writes. On error both caches are
+    released before the exception propagates."""
     structure = extract_table_structure(destination_tables)
     _checkpoint(structure, checkpoint_dir, "table-structure.json")
-    cleaned.cache()
+    own_input = df.storageLevel == StorageLevel.NONE
+    if own_input:
+        df.cache()
+    cleaned = None
     try:
-        samples = column_samples(cleaned, list(cleaned.columns), 5)
+        cleaned, log = preprocess_data(df)  # idempotent re-clean, mapper.py:207
+        cleaned.cache()
+        samples = column_samples(cleaned, list(cleaned.columns), 5)  # builds the cache
+        if own_input:
+            own_input = False
+            df.unpersist()
         raw_mapping = propose_column_mapping(schema_description, structure, samples, provider)
         _checkpoint(raw_mapping, checkpoint_dir, "raw-mapping.json")
         mapping = clean_column_mapping(raw_mapping)
         _checkpoint(mapping, checkpoint_dir, "clean-mapping.json")
     except BaseException:
-        cleaned.unpersist()
+        if cleaned is not None:
+            cleaned.unpersist()
         raise
+    finally:
+        if own_input:
+            df.unpersist()
     tables = split_into_tables(cleaned, mapping)
     return tables, {"log": log, "structure": structure, "mapping": mapping, "cleaned": cleaned}

@@ -80,6 +80,38 @@ def test_value_map_dotted_column_name(spark, path):
     assert sorted(r[0] for r in out.collect()) == ["A", "B", "C"]
 
 
+@pytest.mark.parametrize("path", APPLY_PATHS)
+def test_value_map_keeps_columns_named_like_the_map(spark, path):
+    # the map relation's (original, translated) never shadow the caller's
+    rows = [(1, "v000", "o1", "t1"), (2, "zz", "o2", "t2")]
+    df = spark.createDataFrame(rows, "id long, text string, original string, translated string")
+    out = _apply(spark, df, "text", {"v000": "T:v000"}, path)
+    assert out.columns == df.columns
+    assert sorted(out.collect()) == [(1, "T:v000", "o1", "t1"), (2, "zz", "o2", "t2")]
+    out = _apply(spark, df, "original", {"o1": "O1"}, path)
+    assert out.columns == df.columns
+    assert sorted(out.collect()) == [(1, "v000", "O1", "t1"), (2, "zz", "o2", "t2")]
+
+
+def test_value_map_never_goes_through_python(spark):
+    # a map above LITERAL_MAP_MAX is a LocalRelation, not a pickled RDD
+    df = spark.range(300).selectExpr("id", "concat('v', id) AS v")
+    big = {f"v{i}": f"t{i}" for i in range(enrich.LITERAL_MAP_MAX + 1)}
+
+    def plan() -> str:
+        out = enrich.apply_value_map(df, "v", big)
+        return out._jdf.queryExecution().optimizedPlan().toString()
+
+    assert "LogicalRDD" not in plan()
+    key = "spark.sql.execution.arrow.pyspark.enabled"
+    prev = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        assert "LogicalRDD" not in plan()
+    finally:
+        spark.conf.set(key, prev)
+
+
 def test_translate_distinct_semi_join_reduction(spark):
     # 1000 rows but only 3 distinct values -> provider sees each value once
     df = spark.createDataFrame([(i, f"w{i % 3}") for i in range(1000)], "id long, v string")

@@ -6,8 +6,9 @@
 - Job budget: load → translation pipeline → mapping pipeline → five
   parquet sinks runs a fixed number of Spark jobs, the same for a 4- and
   a 12-string-column file.
-- Cache lifecycle: the translation pipeline releases what it caches; the
-  mapping pipeline hands its one cached frame to the caller.
+- Cache lifecycle: each stage hands its one cached frame to the caller as
+  ``artifacts["cleaned"]``; the mapping stage's input cache is released
+  inside it, and a stage that raises releases what it cached.
 - Sink sizing: at the session's shipped 32 shuffle partitions, AQE sizes
   the cached frame too, so each small star table is one parquet file.
 """
@@ -16,12 +17,14 @@ from __future__ import annotations
 
 import os
 
+import pytest
+
 from ai_etl_pipeline_spark import plans
 from ai_etl_pipeline_spark.operators import distinct
 from ai_etl_pipeline_spark.semantic import HeuristicProvider
 from ai_etl_pipeline_spark.sources import readers, writers
 
-JOB_BUDGET = 30
+JOB_BUDGET = 23
 
 
 def test_column_samples_are_smallest_n_per_column(spark):
@@ -96,6 +99,7 @@ def test_pipeline_jobs_do_not_grow_with_columns(spark, tmp_path):
             tables, stage2 = plans.run_mapping_pipeline(translated, dest, "expense star", provider)
             for t, frame in tables.items():
                 writers.write_parquet(frame, str(tmp_path / str(extra) / "star" / t))
+            stage1["cleaned"].unpersist()
             stage2["cleaned"].unpersist()
             counts[4 + extra] = len(sc.statusTracker().getJobIdsForGroup(group))
             assert stage1["translated_columns"] == ["merchant", "trip_name"]
@@ -109,23 +113,58 @@ def test_pipeline_jobs_do_not_grow_with_columns(spark, tmp_path):
     assert counts[4] <= JOB_BUDGET, counts
 
 
-def test_pipeline_cache_lifecycle(spark, tmp_path):
-    def persisted() -> set[int]:
-        return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
+def _persisted(spark) -> set[int]:
+    return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
-    before = persisted()
+
+def test_pipeline_cache_lifecycle(spark, tmp_path):
+    before = _persisted(spark)
     df, dest, _ = _inputs(spark, tmp_path, 2)
-    translated, _ = plans.run_translation_pipeline(df, HeuristicProvider())
-    assert persisted() == before
-    _, artifacts = plans.run_mapping_pipeline(translated, dest, "expense star", HeuristicProvider())
-    assert len(persisted() - before) == 1
-    artifacts["cleaned"].unpersist()
-    assert persisted() == before
+    translated, stage1 = plans.run_translation_pipeline(df, HeuristicProvider())
+    after1 = _persisted(spark)
+    assert before < after1 and len(after1 - before) == 1
+    _, stage2 = plans.run_mapping_pipeline(translated, dest, "expense star", HeuristicProvider())
+    after2 = _persisted(spark)  # the input cache is already released
+    assert after1 < after2 and len(after2 - before) == 2
+    stage1["cleaned"].unpersist()
+    stage2["cleaned"].unpersist()
+    assert _persisted(spark) == before
+
+
+def test_pipeline_mapping_leaves_a_cached_input_alone(spark, tmp_path):
+    df, dest, _ = _inputs(spark, tmp_path, 0)
+    df.cache().count()
+    try:
+        before = _persisted(spark)
+        _, stage2 = plans.run_mapping_pipeline(df, dest, "expense star", HeuristicProvider())
+        stage2["cleaned"].unpersist()
+        assert _persisted(spark) == before  # the caller's cache is still there
+    finally:
+        df.unpersist()
+
+
+class _MappingFails(HeuristicProvider):
+    def map_schema(self, *args):
+        raise RuntimeError("mapping service down")
+
+
+def test_pipeline_mapping_error_releases_its_caches(spark, tmp_path):
+    before = _persisted(spark)
+    df, dest, _ = _inputs(spark, tmp_path, 2)
+    translated, stage1 = plans.run_translation_pipeline(df, HeuristicProvider())
+    after1 = _persisted(spark)
+    try:
+        with pytest.raises(RuntimeError, match="mapping service down"):
+            plans.run_mapping_pipeline(translated, dest, "expense star", _MappingFails())
+        assert _persisted(spark) == after1  # only stage 1's cache is left
+    finally:
+        stage1["cleaned"].unpersist()
+    assert _persisted(spark) == before
 
 
 def test_pipeline_sinks_are_sized_by_aqe(spark, tmp_path, default_partitions):
     df, dest, _ = _inputs(spark, tmp_path, 2)
-    translated, _ = plans.run_translation_pipeline(df, HeuristicProvider())
+    translated, stage1 = plans.run_translation_pipeline(df, HeuristicProvider())
     tables, artifacts = plans.run_mapping_pipeline(translated, dest, "expense star", HeuristicProvider())
     try:
         for t, frame in tables.items():
@@ -135,4 +174,5 @@ def test_pipeline_sinks_are_sized_by_aqe(spark, tmp_path, default_partitions):
         assert {t: len(fs) for t, fs in files.items()} == {t: 1 for t in tables}
         assert artifacts["cleaned"].rdd.getNumPartitions() == 1
     finally:
+        stage1["cleaned"].unpersist()
         artifacts["cleaned"].unpersist()
