@@ -81,6 +81,14 @@ def _placeholder_null(col: Column, placeholders: list[str] = PLACEHOLDER_VALUES)
     return F.when(col.isin(placeholders), F.lit(None)).otherwise(col)
 
 
+def stage_value(col: Column) -> Column:
+    """P5 → P6 → P5 as one expression: a string value as the chain leaves
+    it before P7. Re-applying P5 after the trim catches "  n/a ", which
+    the reference (strip AFTER replace) keeps: strictly cleaner, and
+    covered by golden tests."""
+    return _placeholder_null(F.trim(_placeholder_null(col)))
+
+
 def replace_placeholders_with_null(
     df: DataFrame,
     placeholders: list[str] | None = None,
@@ -124,17 +132,23 @@ def _numeric_probe(c: str, value: Column) -> list[Column]:
             F.count(integral).alias(f"__int_{c}")]
 
 
-def _cast_numeric(df: DataFrame, probe: Row, candidates: list[str], log: list[str] | None) -> DataFrame:
-    """P7's projection: cast each candidate whose every non-null value
-    parsed — to bigint when all are integral, else to double."""
-    to: dict[str, list[str]] = {"double": [], "bigint": []}
+def _numeric_casts(probe: Row, candidates: list[str]) -> dict[str, str]:
+    """P7's decision: each candidate whose every non-null value parsed,
+    to ``bigint`` when all are integral, else to ``double``."""
+    cast = {}
     for c in candidates:
         n, ok, integral = probe[f"__n_{c}"], probe[f"__ok_{c}"], probe[f"__int_{c}"]
         if n > 0 and ok == n:
-            to["bigint" if integral == n else "double"].append(c)
+            cast[c] = "bigint" if integral == n else "double"
+    return cast
+
+
+def _cast_numeric(df: DataFrame, probe: Row, candidates: list[str], log: list[str] | None) -> DataFrame:
+    """P7's projection of :func:`_numeric_casts`."""
+    cast = _numeric_casts(probe, candidates)
+    to = {t: [c for c in cast if cast[c] == t] for t in ("double", "bigint")}
     if log is not None and (to["double"] or to["bigint"]):
         log.append(f"numeric-cast columns: double={to['double']} bigint={to['bigint']}")
-    cast = {c: t for t, cs in to.items() for c in cs}
     return df.select(*[
         F.expr(f"cast(cast(trim(`{c}`) as double) as {cast[c]})").alias(c) if c in cast else F.col(f"`{c}`")
         for c in df.columns
@@ -222,25 +236,35 @@ def preprocess_data(
     Idempotent: ``preprocess(preprocess(x)) == preprocess(x)`` (the
     reference relies on this by re-preprocessing at ``mapper.py:207``) —
     property-tested in tests/test_clean.py. To keep that promise, P2
-    counts string columns after P5/P6: a column of placeholders only is
-    dropped in the first pass, where the reference drops it only when
-    it re-preprocesses.
+    counts what P5–P8 leave: a column of placeholders only, and a
+    date-named string column that P7 does not cast and of which P8
+    parses no value, are dropped in the first pass, where the reference
+    drops them only when it re-preprocesses.
     """
     log = [] if log is None else log
     df = normalize_column_names(df, log)
     df = drop_duplicate_named_columns(df, log)  # before name-keyed ops
-    # P5 → P6 → P5 as one expression per string column. Re-applying P5
-    # after the trim catches "  n/a ", which the reference (strip AFTER
-    # replace) keeps: strictly cleaner, and covered by golden tests.
-    staged = {c: _placeholder_null(F.trim(_placeholder_null(F.col(f"`{c}`")))) for c in string_columns(df)}
-    # ONE aggregate decides P2 and P7 (the numeric probe), both over the
-    # staged values: a column holding only placeholders is empty here,
-    # not only on the next pass, so the chain stays idempotent.
-    probe = df.select(
-        *[F.count(staged.get(c, F.col(f"`{c}`"))).alias(f"__e_{c}") for c in df.columns],
-        *[p for c, v in staged.items() for p in _numeric_probe(c, v)],
+    staged = {c: stage_value(F.col(f"`{c}`")) for c in string_columns(df)}
+    # ONE aggregate decides P2, P7 (the numeric probe) and P8's empty
+    # columns. It reads each column staged, under "#i" (a name P1 never
+    # yields), beside P8's coercion of the staged strings under their own
+    # names.
+    view = cast_datetime_columns(df.select(
+        *[staged.get(c, F.col(f"`{c}`")).alias(f"#{i}") for i, c in enumerate(df.columns)],
+        *[v.alias(c) for c, v in staged.items()],
+    ))
+    dated = [c for c in staged if view.schema[c].dataType.simpleString() != "string"]
+    at = {c: F.col(f"`#{i}`") for i, c in enumerate(df.columns)}
+    probe = view.select(
+        *[F.count(at[c]).alias(f"__e_{c}") for c in df.columns],
+        *[p for c in staged for p in _numeric_probe(c, at[c])],
+        *[F.count(F.col(f"`{c}`")).alias(f"__t_{c}") for c in dated],
     ).first()
-    empty = [c for c in df.columns if probe[f"__e_{c}"] == 0]  # P2, preprocess.py:42-45
+    numeric = _numeric_casts(probe, list(staged))
+    empty = [  # P2, preprocess.py:42-45
+        c for c in df.columns
+        if probe[f"__e_{c}"] == 0 or (c in dated and c not in numeric and probe[f"__t_{c}"] == 0)
+    ]
     if empty:
         log.append(f"dropped empty columns: {empty}")
     df = drop_unnamed_columns(df.drop(*empty), log=log)

@@ -14,12 +14,33 @@ LLM-boundary artifacts (value dicts, mappings) — the things genuinely
 worth persisting — still go through store_json_checkpoint when a
 ``checkpoint_dir`` is given.
 
-Caches, so that the translated frame is computed once:
+Stage 2 fed stage 1's own output decides on the driver:
 
 - Stage 1 caches its cleaned frame and returns it as
-  ``artifacts["cleaned"]``; its translated frame is lazy over it.
-- Stage 2 caches its input until its re-cleaned frame is built, then
-  releases it. It returns the re-cleaned frame, cached, as its own
+  ``artifacts["cleaned"]``; its translated frame is lazy over it. It
+  records ``{samples, maps, cleaned}`` for that very translated frame
+  object: every column's 10 smallest values, from its one sample pass,
+  and the value maps, which hold every original and translated value of
+  the translated columns.
+- Stage 2 re-cleans its input (``mapper.py:207``). On a recorded frame
+  the re-clean is the identity, since every value but the translations
+  is already ``preprocess_data`` output, unless a translated column
+  fails one of three checks. Two originals may not share one effective
+  value (``m[k]``, or ``k`` when ``m[k]`` is None), which is the only way
+  the dedup could drop a row. No translation may change under P5→P6→P5
+  (a placeholder, ``""`` or a padded value). And not every translation
+  of a column may parse as a number, which P7 would cast. Spark's own
+  expressions decide the last two, over a ``LocalRelation`` of the
+  translations (a row-wise projection, folded on the driver: no job).
+- When every check passes, stage 2 takes its samples from the record,
+  builds no cache and runs no Spark job; each table projects from stage
+  1's cache and applies only the value maps of the columns it selects.
+  Its ``artifacts["cleaned"]`` is the translated frame, uncached, and its
+  log is empty, as the re-clean's would be.
+- Any other input (a caller's own frame, or any transformation of the
+  translated frame) or a failed check takes the re-clean: stage 2
+  caches its input until its re-cleaned frame is built, then releases
+  it, and returns the re-cleaned frame, cached, as its own
   ``artifacts["cleaned"]``.
 - The caller unpersists both ``artifacts["cleaned"]`` after the sinks.
   Either stage releases what it cached if it raises.
@@ -28,11 +49,13 @@ Caches, so that the translated frame is computed once:
 from __future__ import annotations
 
 import os
+import weakref
 
 from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import functions as F
 
-from ..operators.clean import preprocess_data
+from ..operators.clean import preprocess_data, stage_value
 from ..operators.distinct import column_samples, string_columns
 from ..operators.enrich import apply_value_maps, translate_distinct_values
 from ..operators.mapping import clean_column_mapping, extract_table_structure, split_into_tables
@@ -44,6 +67,11 @@ from ..semantic.providers import (
     detect_column_languages,
     propose_column_mapping,
 )
+
+
+# Stage 1's record of each translated frame it returns, keyed by that
+# very object (DataFrames hash by identity): {samples, maps, cleaned}.
+_STAGE1: weakref.WeakKeyDictionary = weakref.WeakKeyDictionary()
 
 
 def _checkpoint(payload, checkpoint_dir: str | None, name: str) -> None:
@@ -185,12 +213,16 @@ def run_translation_pipeline(
     over the translated frame starts from the cache, not from the
     source scan and the dedup shuffle. It is ``artifacts["cleaned"]``;
     the caller unpersists it when the translated frame is no longer
-    read. On error it is released before the exception propagates."""
+    read. On error it is released before the exception propagates.
+
+    The sample pass covers every column, though only the string columns'
+    samples reach the classifier, so that stage 2 can take its own
+    samples from stage 1's record of the returned frame."""
     cleaned, log = preprocess_data(df)
     cleaned.cache()
     try:
-        samples = column_samples(cleaned, string_columns(cleaned), 10)
-        labels = classify_text_columns(samples, provider)
+        samples = column_samples(cleaned, cleaned.columns, 10)
+        labels = classify_text_columns({c: samples[c] for c in string_columns(cleaned)}, provider)
         text_cols = [c for c, lab in labels.items() if lab == TEXT]
         langs = detect_column_languages({c: samples[c] for c in text_cols}, provider)
         target_cols = [c for c in text_cols if langs.get(c) == NON_ENGLISH]
@@ -200,6 +232,10 @@ def run_translation_pipeline(
         cleaned.unpersist()
         raise
     translated = apply_value_maps(cleaned, maps)
+    # with no map applied, translated IS cleaned: a record must not hold its own key
+    _STAGE1[translated] = {
+        "samples": samples, "maps": maps, "cleaned": None if translated is cleaned else cleaned,
+    }
     artifacts = {
         "log": log,
         "column_labels": labels,
@@ -211,6 +247,52 @@ def run_translation_pipeline(
     return translated, artifacts
 
 
+def _driver_samples(df: DataFrame, record: dict) -> dict[str, list[str]] | None:
+    """Stage 2's samples of stage 1's recorded output, or None when its
+    re-clean could change that frame (the three checks of the module
+    docstring)."""
+    effective = {c: {k: k if t is None else t for k, t in m.items()} for c, m in record["maps"].items()}
+    translations = {c: set(e.values()) for c, e in effective.items()}
+    if any(len(translations[c]) < len(e) for c, e in effective.items()):
+        return None
+    import pyarrow as pa
+
+    value = F.col("value")
+    rows = df.sparkSession.createDataFrame(
+        pa.table({"value": pa.array(sorted(set().union(*translations.values())), pa.string())})
+    ).select(
+        value.eqNullSafe(stage_value(value)).alias("kept"),
+        F.when(F.trim(value).try_cast("double").isNotNull(), value).alias("numeric"),
+    ).collect()
+    numeric = {r["numeric"] for r in rows} - {None}
+    if not all(r["kept"] for r in rows) or any(t and t <= numeric for t in translations.values()):
+        return None
+    return {
+        c: sorted(translations[c])[:5] if c in translations else record["samples"][c][:5]
+        for c in df.columns
+    }
+
+
+def _split_translating(cleaned: DataFrame, maps: dict, mapping: dict) -> dict[str, DataFrame]:
+    """``split_into_tables`` over ``cleaned``, each table applying only the
+    value maps of the source columns it selects: a left join the table
+    does not read would still run."""
+    tables = {}
+    for table in split_into_tables(cleaned, mapping):
+        own = {s: spec for s, spec in mapping.items() if spec["table"] == table}
+        translated = apply_value_maps(cleaned, {s: maps[s] for s in own if s in maps})
+        tables.update(split_into_tables(translated, own))
+    return tables
+
+
+def _column_mapping(schema_description, structure, samples, provider, checkpoint_dir) -> dict:
+    raw_mapping = propose_column_mapping(schema_description, structure, samples, provider)
+    _checkpoint(raw_mapping, checkpoint_dir, "raw-mapping.json")
+    mapping = clean_column_mapping(raw_mapping)
+    _checkpoint(mapping, checkpoint_dir, "clean-mapping.json")
+    return mapping
+
+
 def run_mapping_pipeline(
     df: DataFrame,
     destination_tables: dict[str, DataFrame],
@@ -220,15 +302,27 @@ def run_mapping_pipeline(
 ) -> tuple[dict[str, DataFrame], dict]:
     """Stage 2: returns ({table: DataFrame}, artifacts).
 
-    Stage 2 owns two caches. Its input is cached for the re-clean probe
-    and the build of the re-cleaned frame's cache, and released once that
-    cache is built; an input the caller already cached is left alone.
-    The re-cleaned frame is cached because every table projects from it,
-    so each table's sink is one scan. It is ``artifacts["cleaned"]``; the
-    caller unpersists it after the writes. On error both caches are
-    released before the exception propagates."""
+    Fed the very frame stage 1 returned, and when its three checks pass,
+    stage 2 owns no cache and runs no Spark job: its samples come from
+    stage 1's record, each table projects from stage 1's cache through
+    its own value maps, and ``artifacts["cleaned"]`` is ``df``, uncached.
+
+    Otherwise it re-cleans, and owns two caches. Its input is cached for
+    the re-clean probe and the build of the re-cleaned frame's cache, and
+    released once that cache is built; an input the caller already
+    cached is left alone. The re-cleaned frame is cached because every
+    table projects from it, so each table's sink is one scan. It is
+    ``artifacts["cleaned"]``; the caller unpersists it after the writes.
+    On error both caches are released before the exception propagates."""
     structure = extract_table_structure(destination_tables)
     _checkpoint(structure, checkpoint_dir, "table-structure.json")
+    record = _STAGE1.get(df)
+    samples = None if record is None else _driver_samples(df, record)
+    if samples is not None:
+        mapping = _column_mapping(schema_description, structure, samples, provider, checkpoint_dir)
+        base = df if record["cleaned"] is None else record["cleaned"]
+        tables = _split_translating(base, record["maps"], mapping)
+        return tables, {"log": [], "structure": structure, "mapping": mapping, "cleaned": df}
     own_input = df.storageLevel == StorageLevel.NONE
     if own_input:
         df.cache()
@@ -240,10 +334,7 @@ def run_mapping_pipeline(
         if own_input:
             own_input = False
             df.unpersist()
-        raw_mapping = propose_column_mapping(schema_description, structure, samples, provider)
-        _checkpoint(raw_mapping, checkpoint_dir, "raw-mapping.json")
-        mapping = clean_column_mapping(raw_mapping)
-        _checkpoint(mapping, checkpoint_dir, "clean-mapping.json")
+        mapping = _column_mapping(schema_description, structure, samples, provider, checkpoint_dir)
     except BaseException:
         if cleaned is not None:
             cleaned.unpersist()

@@ -6,9 +6,14 @@
 - Job budget: load → translation pipeline → mapping pipeline → five
   parquet sinks runs a fixed number of Spark jobs, the same for a 4- and
   a 12-string-column file.
-- Cache lifecycle: each stage hands its one cached frame to the caller as
-  ``artifacts["cleaned"]``; the mapping stage's input cache is released
-  inside it, and a stage that raises releases what it cached.
+- Stage 2 fed stage 1's own output decides on the driver, and gives the
+  mapping provider and the sinks exactly what its re-clean gives on an
+  equal frame (``translated.select("*")``, which has no stage-1 record).
+  A translation the re-clean would change sends it down the re-clean.
+- Cache lifecycle: each stage hands its cached frame to the caller as
+  ``artifacts["cleaned"]`` (stage 2 on stage 1's output caches nothing);
+  the mapping stage's input cache is released inside it, and a stage
+  that raises releases what it cached.
 - Sink sizing: at the session's shipped 32 shuffle partitions, AQE sizes
   the cached frame too, so each small star table is one parquet file.
 """
@@ -24,7 +29,7 @@ from ai_etl_pipeline_spark.operators import distinct
 from ai_etl_pipeline_spark.semantic import HeuristicProvider
 from ai_etl_pipeline_spark.sources import readers, writers
 
-JOB_BUDGET = 23
+JOB_BUDGET = 16
 
 
 def test_column_samples_are_smallest_n_per_column(spark):
@@ -113,6 +118,68 @@ def test_pipeline_jobs_do_not_grow_with_columns(spark, tmp_path):
     assert counts[4] <= JOB_BUDGET, counts
 
 
+class _RecordsSamples(HeuristicProvider):
+    def map_schema(self, description, structure, samples):
+        self.samples = samples
+        return super().map_schema(description, structure, samples)
+
+
+def _stage2(spark, translated, dest) -> tuple[list, list, dict, set[int]]:
+    """(sample items, log, {table: (schema, sorted rows)}) of stage 2 over
+    ``translated``, and the RDDs it left persisted."""
+    provider = _RecordsSamples()
+    before = _persisted(spark)
+    tables, artifacts = plans.run_mapping_pipeline(translated, dest, "expense star", provider)
+    held = _persisted(spark) - before
+    try:
+        out = {t: (f.schema, sorted(map(str, f.collect()))) for t, f in tables.items()}
+    finally:
+        artifacts["cleaned"].unpersist()
+    return list(provider.samples.items()), artifacts["log"], out, held
+
+
+@pytest.mark.parametrize("case", ["identity", "german", "untranslated"])
+def test_pipeline_mapping_fast_path_is_exact(spark, tmp_path, case):
+    overlay = {v: f"EN {v}" for v in _GERMAN + _TRIPS} if case == "german" else {}
+    df, dest, _ = _inputs(spark, tmp_path, 2)
+    if case == "untranslated":  # no map applied: the translated frame is stage 1's cache
+        df = df.drop("Merchant", "Trip Name")
+    translated, stage1 = plans.run_translation_pipeline(df, HeuristicProvider(translation_overlay=overlay))
+    try:
+        *fast, fast_held = _stage2(spark, translated, dest)
+        *reclean, reclean_held = _stage2(spark, translated.select("*"), dest)
+    finally:
+        stage1["cleaned"].unpersist()
+    assert not fast_held and len(reclean_held) == 1
+    assert fast == reclean
+    samples, log, tables = fast
+    assert log == [] and len(tables) == (3 if case == "untranslated" else 5)
+    if overlay:
+        assert dict(samples)["merchant"] == sorted(f"EN {v}" for v in _GERMAN)
+
+
+@pytest.mark.parametrize("overlay", [
+    {"Bäckerei Köln": "n/a"},  # a placeholder
+    {"Bäckerei Köln": ""},
+    {"Bäckerei Köln": "  Bakery Cologne "},  # padded
+    {v: str(i) for i, v in enumerate(_GERMAN)},  # every merchant numeric: P7 casts it
+    {"Bäckerei Köln": "Bakery", "Apotheke Würzburg": "Bakery"},  # two originals merged
+    {"Bäckerei Köln": "Apotheke Würzburg"},  # equal to another, untranslated original
+], ids=["placeholder", "empty", "padded", "numeric", "merged", "onto-original"])
+def test_pipeline_mapping_falls_back_when_a_translation_changes_the_clean(spark, tmp_path, overlay):
+    df, dest, _ = _inputs(spark, tmp_path, 0)
+    df = df.select("Merchant", "Trip Name")  # 12 distinct rows: a merge drops 3 of them
+    translated, stage1 = plans.run_translation_pipeline(df, HeuristicProvider(translation_overlay=overlay))
+    try:
+        *fallback, held = _stage2(spark, translated, dest)
+        *reclean, _ = _stage2(spark, translated.select("*"), dest)
+    finally:
+        stage1["cleaned"].unpersist()
+    assert stage1["translated_columns"] == ["merchant", "trip_name"]
+    assert len(held) == 1  # the re-clean ran: stage 2 held its own cache
+    assert fallback == reclean
+
+
 def _persisted(spark) -> set[int]:
     return set(spark.sparkContext._jsc.getPersistentRDDs().keySet())
 
@@ -123,10 +190,14 @@ def test_pipeline_cache_lifecycle(spark, tmp_path):
     translated, stage1 = plans.run_translation_pipeline(df, HeuristicProvider())
     after1 = _persisted(spark)
     assert before < after1 and len(after1 - before) == 1
-    _, stage2 = plans.run_mapping_pipeline(translated, dest, "expense star", HeuristicProvider())
+    _, fast = plans.run_mapping_pipeline(translated, dest, "expense star", HeuristicProvider())
+    assert _persisted(spark) == after1  # stage 1's own output: no cache of its own
+    _, stage2 = plans.run_mapping_pipeline(translated.select("*"), dest, "expense star",
+                                           HeuristicProvider())
     after2 = _persisted(spark)  # the input cache is already released
     assert after1 < after2 and len(after2 - before) == 2
     stage1["cleaned"].unpersist()
+    fast["cleaned"].unpersist()
     stage2["cleaned"].unpersist()
     assert _persisted(spark) == before
 
