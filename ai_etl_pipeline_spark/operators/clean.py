@@ -123,10 +123,16 @@ def trim_string_columns(df: DataFrame) -> DataFrame:
     return df.select(*exprs)
 
 
+def numeric_value(col: Column) -> Column:
+    """P7's parse of one string value: ``try_cast(trim(v) as double)``,
+    NULL where it does not parse."""
+    return F.trim(col).try_cast("double")
+
+
 def _numeric_probe(c: str, value: Column) -> list[Column]:
     """P7's three counts for one candidate column: non-null values,
-    values that ``try_cast(trim(v) as double)`` parses, integral ones."""
-    parsed = F.trim(value).try_cast("double")
+    values that :func:`numeric_value` parses, integral ones."""
+    parsed = numeric_value(value)
     integral = F.when(parsed == F.floor(parsed), 1)
     return [F.count(value).alias(f"__n_{c}"), F.count(parsed).alias(f"__ok_{c}"),
             F.count(integral).alias(f"__int_{c}")]

@@ -41,7 +41,9 @@ Stage 2 fed stage 1's own output decides on the driver:
   translated frame) or a failed check takes the re-clean: stage 2
   caches its input until its re-cleaned frame is built, then releases
   it, and returns the re-cleaned frame, cached, as its own
-  ``artifacts["cleaned"]``.
+  ``artifacts["cleaned"]``. After a failed check its sample pass reads
+  only the translated columns; the others keep stage 1's samples, as
+  the re-clean changes no value of theirs and its dedup drops none.
 - The caller unpersists both ``artifacts["cleaned"]`` after the sinks.
   Either stage releases what it cached if it raises.
 """
@@ -55,7 +57,7 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.clean import preprocess_data, stage_value
+from ..operators.clean import numeric_value, preprocess_data, stage_value
 from ..operators.distinct import column_samples, string_columns
 from ..operators.enrich import apply_value_maps, translate_distinct_values
 from ..operators.mapping import clean_column_mapping, extract_table_structure, split_into_tables
@@ -247,30 +249,36 @@ def run_translation_pipeline(
     return translated, artifacts
 
 
-def _driver_samples(df: DataFrame, record: dict) -> dict[str, list[str]] | None:
-    """Stage 2's samples of stage 1's recorded output, or None when its
-    re-clean could change that frame (the three checks of the module
-    docstring)."""
-    effective = {c: {k: k if t is None else t for k, t in m.items()} for c, m in record["maps"].items()}
-    translations = {c: set(e.values()) for c, e in effective.items()}
-    if any(len(translations[c]) < len(e) for c, e in effective.items()):
-        return None
+def _translations(value_map: dict) -> set[str]:
+    """The values a translated column holds: ``m[k]``, or ``k`` when
+    ``m[k]`` is None, as ``apply_value_maps`` computes them."""
+    return {k if t is None else t for k, t in value_map.items()}
+
+
+def _reclean_changes(spark: SparkSession, maps: dict) -> bool:
+    """Whether stage 2's re-clean could change stage 1's translated frame
+    (the three checks of the module docstring)."""
+    translations = {c: _translations(m) for c, m in maps.items()}
+    if any(len(translations[c]) < len(m) for c, m in maps.items()):
+        return True
     import pyarrow as pa
 
     value = F.col("value")
-    rows = df.sparkSession.createDataFrame(
+    rows = spark.createDataFrame(
         pa.table({"value": pa.array(sorted(set().union(*translations.values())), pa.string())})
     ).select(
         value.eqNullSafe(stage_value(value)).alias("kept"),
-        F.when(F.trim(value).try_cast("double").isNotNull(), value).alias("numeric"),
+        F.when(numeric_value(value).isNotNull(), value).alias("numeric"),
     ).collect()
     numeric = {r["numeric"] for r in rows} - {None}
-    if not all(r["kept"] for r in rows) or any(t and t <= numeric for t in translations.values()):
-        return None
-    return {
-        c: sorted(translations[c])[:5] if c in translations else record["samples"][c][:5]
-        for c in df.columns
-    }
+    return not all(r["kept"] for r in rows) or any(t and t <= numeric for t in translations.values())
+
+
+def _with_recorded(record: dict, columns: list[str], own: dict[str, list[str]]) -> dict[str, list[str]]:
+    """Every column's 5 smallest values: ``own``'s for the translated
+    columns, stage 1's for the others, which the re-clean leaves as they
+    are (its dedup drops rows, never a column's distinct value)."""
+    return {c: own[c] if c in record["maps"] else record["samples"][c][:5] for c in columns}
 
 
 def _split_translating(cleaned: DataFrame, maps: dict, mapping: dict) -> dict[str, DataFrame]:
@@ -278,7 +286,7 @@ def _split_translating(cleaned: DataFrame, maps: dict, mapping: dict) -> dict[st
     value maps of the source columns it selects: a left join the table
     does not read would still run."""
     tables = {}
-    for table in split_into_tables(cleaned, mapping):
+    for table in dict.fromkeys(spec["table"] for spec in mapping.values()):
         own = {s: spec for s, spec in mapping.items() if spec["table"] == table}
         translated = apply_value_maps(cleaned, {s: maps[s] for s in own if s in maps})
         tables.update(split_into_tables(translated, own))
@@ -307,7 +315,8 @@ def run_mapping_pipeline(
     stage 1's record, each table projects from stage 1's cache through
     its own value maps, and ``artifacts["cleaned"]`` is ``df``, uncached.
 
-    Otherwise it re-cleans, and owns two caches. Its input is cached for
+    Otherwise it re-cleans, and owns two caches; on stage 1's output it
+    samples only the translated columns again. Its input is cached for
     the re-clean probe and the build of the re-cleaned frame's cache, and
     released once that cache is built; an input the caller already
     cached is left alone. The re-cleaned frame is cached because every
@@ -317,11 +326,13 @@ def run_mapping_pipeline(
     structure = extract_table_structure(destination_tables)
     _checkpoint(structure, checkpoint_dir, "table-structure.json")
     record = _STAGE1.get(df)
-    samples = None if record is None else _driver_samples(df, record)
-    if samples is not None:
+    maps = {} if record is None else record["maps"]
+    if record is not None and not _reclean_changes(df.sparkSession, maps):
+        own = {c: sorted(_translations(m))[:5] for c, m in maps.items()}
+        samples = _with_recorded(record, df.columns, own)
         mapping = _column_mapping(schema_description, structure, samples, provider, checkpoint_dir)
         base = df if record["cleaned"] is None else record["cleaned"]
-        tables = _split_translating(base, record["maps"], mapping)
+        tables = _split_translating(base, maps, mapping)
         return tables, {"log": [], "structure": structure, "mapping": mapping, "cleaned": df}
     own_input = df.storageLevel == StorageLevel.NONE
     if own_input:
@@ -330,7 +341,10 @@ def run_mapping_pipeline(
     try:
         cleaned, log = preprocess_data(df)  # idempotent re-clean, mapper.py:207
         cleaned.cache()
-        samples = column_samples(cleaned, list(cleaned.columns), 5)  # builds the cache
+        resample = [c for c in cleaned.columns if record is None or c in maps]
+        samples = column_samples(cleaned, resample, 5)  # builds the cache
+        if record is not None:
+            samples = _with_recorded(record, cleaned.columns, samples)
         if own_input:
             own_input = False
             df.unpersist()

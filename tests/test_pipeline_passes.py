@@ -30,6 +30,7 @@ from ai_etl_pipeline_spark.semantic import HeuristicProvider
 from ai_etl_pipeline_spark.sources import readers, writers
 
 JOB_BUDGET = 16
+RECLEAN_JOB_BUDGET = 23
 
 
 def test_column_samples_are_smallest_n_per_column(spark):
@@ -92,30 +93,37 @@ def _inputs(spark, tmp_path, extra: int):
 
 
 def test_pipeline_jobs_do_not_grow_with_columns(spark, tmp_path):
+    """Both stage-2 paths: fed stage 1's own output, and fed an equal
+    frame with no stage-1 record, which re-cleans."""
     sc = spark.sparkContext
     provider = HeuristicProvider(translation_overlay={v: f"EN {v}" for v in _GERMAN + _TRIPS})
     counts = {}
     try:
-        for extra in (0, 8):  # 4 and 12 string columns
-            group = f"pipeline-budget-{extra}"
-            sc.setJobGroup(group, group)
-            df, dest, star = _inputs(spark, tmp_path / str(extra), extra)
-            translated, stage1 = plans.run_translation_pipeline(df, provider)
-            tables, stage2 = plans.run_mapping_pipeline(translated, dest, "expense star", provider)
-            for t, frame in tables.items():
-                writers.write_parquet(frame, str(tmp_path / str(extra) / "star" / t))
-            stage1["cleaned"].unpersist()
-            stage2["cleaned"].unpersist()
-            counts[4 + extra] = len(sc.statusTracker().getJobIdsForGroup(group))
-            assert stage1["translated_columns"] == ["merchant", "trip_name"]
-            assert {t: sorted(f.columns) for t, f in tables.items()} == {
-                t: sorted(cols) for t, cols in star.items()
-            }
+        for path in ("fast", "reclean"):
+            for extra in (0, 8):  # 4 and 12 string columns
+                group = f"pipeline-budget-{path}-{extra}"
+                sc.setJobGroup(group, group)
+                out = tmp_path / f"{path}-{extra}"
+                df, dest, star = _inputs(spark, out, extra)
+                translated, stage1 = plans.run_translation_pipeline(df, provider)
+                stage2_input = translated if path == "fast" else translated.select("*")
+                tables, stage2 = plans.run_mapping_pipeline(stage2_input, dest, "expense star", provider)
+                for t, frame in tables.items():
+                    writers.write_parquet(frame, str(out / "star" / t))
+                stage1["cleaned"].unpersist()
+                stage2["cleaned"].unpersist()
+                counts[path, 4 + extra] = len(sc.statusTracker().getJobIdsForGroup(group))
+                assert stage1["translated_columns"] == ["merchant", "trip_name"]
+                assert {t: sorted(f.columns) for t, f in tables.items()} == {
+                    t: sorted(cols) for t, cols in star.items()
+                }
     finally:
         sc.setLocalProperty("spark.jobGroup.id", None)
         sc.setLocalProperty("spark.job.description", None)
-    assert counts[4] == counts[12], counts
-    assert counts[4] <= JOB_BUDGET, counts
+    assert counts["fast", 4] == counts["fast", 12], counts
+    assert counts["reclean", 4] == counts["reclean", 12], counts
+    assert counts["fast", 4] <= JOB_BUDGET, counts
+    assert counts["reclean", 4] <= RECLEAN_JOB_BUDGET, counts
 
 
 class _RecordsSamples(HeuristicProvider):
@@ -168,7 +176,8 @@ def test_pipeline_mapping_fast_path_is_exact(spark, tmp_path, case):
 ], ids=["placeholder", "empty", "padded", "numeric", "merged", "onto-original"])
 def test_pipeline_mapping_falls_back_when_a_translation_changes_the_clean(spark, tmp_path, overlay):
     df, dest, _ = _inputs(spark, tmp_path, 0)
-    df = df.select("Merchant", "Trip Name")  # 12 distinct rows: a merge drops 3 of them
+    # 12 distinct rows, so a merge drops 3 of them; "Status" is not translated
+    df = df.select("Merchant", "Trip Name", "Status")
     translated, stage1 = plans.run_translation_pipeline(df, HeuristicProvider(translation_overlay=overlay))
     try:
         *fallback, held = _stage2(spark, translated, dest)
@@ -225,9 +234,10 @@ def test_pipeline_mapping_error_releases_its_caches(spark, tmp_path):
     translated, stage1 = plans.run_translation_pipeline(df, HeuristicProvider())
     after1 = _persisted(spark)
     try:
-        with pytest.raises(RuntimeError, match="mapping service down"):
-            plans.run_mapping_pipeline(translated, dest, "expense star", _MappingFails())
-        assert _persisted(spark) == after1  # only stage 1's cache is left
+        for stage2_input in (translated, translated.select("*")):  # fast path, re-clean
+            with pytest.raises(RuntimeError, match="mapping service down"):
+                plans.run_mapping_pipeline(stage2_input, dest, "expense star", _MappingFails())
+            assert _persisted(spark) == after1  # only stage 1's cache is left
     finally:
         stage1["cleaned"].unpersist()
     assert _persisted(spark) == before
@@ -236,14 +246,18 @@ def test_pipeline_mapping_error_releases_its_caches(spark, tmp_path):
 def test_pipeline_sinks_are_sized_by_aqe(spark, tmp_path, default_partitions):
     df, dest, _ = _inputs(spark, tmp_path, 2)
     translated, stage1 = plans.run_translation_pipeline(df, HeuristicProvider())
-    tables, artifacts = plans.run_mapping_pipeline(translated, dest, "expense star", HeuristicProvider())
     try:
-        for t, frame in tables.items():
-            writers.write_parquet(frame, str(tmp_path / "star" / t))
-        files = {t: [f for f in os.listdir(tmp_path / "star" / t) if f.endswith(".parquet")]
-                 for t in tables}
-        assert {t: len(fs) for t, fs in files.items()} == {t: 1 for t in tables}
-        assert artifacts["cleaned"].rdd.getNumPartitions() == 1
+        for path, stage2_input in (("fast", translated), ("reclean", translated.select("*"))):
+            tables, artifacts = plans.run_mapping_pipeline(stage2_input, dest, "expense star",
+                                                           HeuristicProvider())
+            try:
+                for t, frame in tables.items():
+                    writers.write_parquet(frame, str(tmp_path / path / t))
+                files = {t: [f for f in os.listdir(tmp_path / path / t) if f.endswith(".parquet")]
+                         for t in tables}
+                assert {t: len(fs) for t, fs in files.items()} == {t: 1 for t in tables}, path
+                assert artifacts["cleaned"].rdd.getNumPartitions() == 1, path
+            finally:
+                artifacts["cleaned"].unpersist()
     finally:
         stage1["cleaned"].unpersist()
-        artifacts["cleaned"].unpersist()
