@@ -12,6 +12,11 @@ Scale notes: the counts that only feed logs/prompts use
 ``.distinct()`` frames are produced only for columns whose values feed an
 external enrichment (they are then distinct-sized, i.e. small by the
 semi-join-reduction argument the reference itself exploits).
+
+The two driver reads of distinct values, :func:`column_samples` and
+:func:`extract_unique_text_values`, take a :func:`distinct_values_long`
+relation, not a wide frame: a caller that needs both builds the relation
+once, caches it, and pays its scan and shuffle once.
 """
 
 from __future__ import annotations
@@ -64,11 +69,11 @@ def distinct_column_values(df: DataFrame, column: str) -> DataFrame:
 def distinct_values_long(df: DataFrame, columns: list[str]) -> DataFrame:
     """A2 for many columns as ONE ``(column, value)`` relation of each
     column's trimmed, non-empty, distinct values, stringified: one scan
-    and one shuffle whatever the column count."""
+    and one shuffle whatever the column count; empty for no columns."""
     cells = F.array(*[
         F.struct(F.lit(c).alias("column"), F.trim(F.col(f"`{c}`").cast("string")).alias("value"))
         for c in columns
-    ])
+    ]) if columns else F.array().cast("array<struct<column:string,value:string>>")
     return df.select(F.inline(cells)).where(F.col("value").isNotNull() & (F.col("value") != "")).distinct()
 
 
@@ -79,16 +84,19 @@ def _by_column(rows: list, columns: list[str]) -> dict[str, list[str]]:
     return {c: sorted(v) for c, v in out.items()}
 
 
-def extract_unique_text_values(df: DataFrame, columns: list[str] | None = None) -> dict[str, list[str]]:
+def extract_unique_text_values(values: DataFrame, columns: list[str]) -> dict[str, list[str]]:
     """A2 end-to-end (``translate.py:11-34``): ``{column: [unique values]}``,
-    sorted, from one driver collect of :func:`distinct_values_long`.
+    sorted, from one driver collect of ``columns``' rows of ``values``, a
+    :func:`distinct_values_long` relation. Over a cached relation the
+    collect is a filter of the cache: no shuffle.
 
     Driver-collected BY DESIGN: these dicts feed external translation/LLM
     APIs, so they must reach the driver; the distinct() has already
     crushed data-scale → distinct-scale (33k values at reference scale).
     """
-    cols = columns if columns is not None else string_columns(df)
-    return _by_column(distinct_values_long(df, cols).collect() if cols else [], cols)
+    if not columns:
+        return {}
+    return _by_column(values.where(F.col("column").isin(columns)).collect(), columns)
 
 
 def head_sample(df: DataFrame, n: int = 2) -> dict[str, list]:
@@ -97,15 +105,17 @@ def head_sample(df: DataFrame, n: int = 2) -> dict[str, list]:
     return {c: [r[c] for r in rows] for c in df.columns}
 
 
-def column_samples(df: DataFrame, columns: list[str], n: int = 5) -> dict[str, list[str]]:
+def column_samples(values: DataFrame, columns: list[str], n: int = 5) -> dict[str, list[str]]:
     """P12 (``mapper.py:47-49``) for every column from one driver collect:
-    each column's ``n`` smallest :func:`distinct_values_long` values —
-    deterministic, and the bound that keeps LLM cost O(1) in table size."""
+    each of ``columns``' ``n`` smallest values in ``values``, a
+    :func:`distinct_values_long` relation — deterministic, and the bound
+    that keeps LLM cost O(1) in table size. Spark's WindowGroupLimit
+    keeps the ranking's exchange at ``n`` rows per column and partition."""
     if not columns:
         return {}
     rank = F.row_number().over(Window.partitionBy("column").orderBy("value"))
-    ranked = distinct_values_long(df, columns).withColumn("rank", rank).where(F.col("rank") <= n)
-    return _by_column(ranked.collect(), columns)
+    ranked = values.where(F.col("column").isin(columns)).withColumn("rank", rank)
+    return _by_column(ranked.where(F.col("rank") <= n).collect(), columns)
 
 
 def random_value_sample(df: DataFrame, column: str, n: int = 10, seed: int = 42) -> list[str]:

@@ -72,24 +72,26 @@ def apply_value_maps(df: DataFrame, maps: dict[str, dict[str, str]]) -> DataFram
 
 
 def translate_distinct_values(
-    df: DataFrame,
+    values: DataFrame,
     columns: list[str],
     translate_batch: Callable[[list[str]], list[str]],
     batch_size: int = 100,
 ) -> dict[str, dict[str, str]]:
-    """T3's shape (``translate.py:78-123``): collect every column's DISTINCT
-    values in one job (semi-join reduction — the reference's one real
-    optimization) and push them through ``translate_batch(list[str]) ->
-    list[str]`` with ``semantic.providers.translate_in_batches``,
-    building ``{col: {orig: translated}}``.
+    """T3's shape (``translate.py:78-123``): collect ``columns``' DISTINCT
+    values from ``values``, a ``distinct.distinct_values_long`` relation
+    (semi-join reduction — the reference's one real optimization), in one
+    job, and push them through ``translate_batch(list[str]) -> list[str]``
+    with ``semantic.providers.translate_in_batches``, building
+    ``{col: {orig: translated}}``. Pass the relation the caller already
+    built (and cached) for its samples, so the distinct runs once.
 
     ``translate_batch`` is a provider callable (network, LLM, or the
     deterministic offline provider in semantic/providers.py); the
     reference's 0.15 s throttle lives in the transport
     (``RestTranslatorClient.throttle_s``)."""
     return {
-        c: dict(zip(values, translate_in_batches(values, translate_batch, batch_size)))
-        for c, values in extract_unique_text_values(df, columns).items()
+        c: dict(zip(vals, translate_in_batches(vals, translate_batch, batch_size)))
+        for c, vals in extract_unique_text_values(values, columns).items()
     }
 
 

@@ -17,11 +17,13 @@ worth persisting — still go through store_json_checkpoint when a
 Stage 2 fed stage 1's own output decides on the driver:
 
 - Stage 1 caches its cleaned frame and returns it as
-  ``artifacts["cleaned"]``; its translated frame is lazy over it. It
-  records ``{samples, maps, cleaned}`` for that very translated frame
-  object: every column's 10 smallest values, from its one sample pass,
-  and the value maps, which hold every original and translated value of
-  the translated columns.
+  ``artifacts["cleaned"]``; its translated frame is lazy over it. While
+  it runs it also caches the cleaned frame's ``(column, value)``
+  distinct relation, which feeds both its samples and its translator,
+  and releases it before it returns. It records ``{samples, maps,
+  cleaned}`` for that very translated frame object: every column's 10
+  smallest values, from its one sample pass, and the value maps, which
+  hold every original and translated value of the translated columns.
 - Stage 2 re-cleans its input (``mapper.py:207``). On a recorded frame
   the re-clean is the identity, since every value but the translations
   is already ``preprocess_data`` output, unless a translated column
@@ -37,8 +39,14 @@ Stage 2 fed stage 1's own output decides on the driver:
   1's cache and applies only the value maps of the columns it selects.
   Its ``artifacts["cleaned"]`` is the translated frame, uncached, and its
   log is empty, as the re-clean's would be.
+- When only the first check fails, the re-clean is A1's dedup alone:
+  with the other two passing, no other step of ``preprocess_data``
+  changes the translated frame. Stage 2 takes the same samples from the
+  record, as the dedup drops rows but never a column's distinct value,
+  and caches the deduplicated translated frame as its own
+  ``artifacts["cleaned"]``, for every table to project from.
 - Any other input (a caller's own frame, or any transformation of the
-  translated frame) or a failed check takes the re-clean: stage 2
+  translated frame) or a failed value check takes the re-clean: stage 2
   caches its input until its re-cleaned frame is built, then releases
   it, and returns the re-cleaned frame, cached, as its own
   ``artifacts["cleaned"]``. After a failed check its sample pass reads
@@ -57,8 +65,8 @@ from pyspark import StorageLevel
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..operators.clean import numeric_value, preprocess_data, stage_value
-from ..operators.distinct import column_samples, string_columns
+from ..operators.clean import drop_duplicate_rows, numeric_value, preprocess_data, stage_value
+from ..operators.distinct import column_samples, distinct_values_long, string_columns
 from ..operators.enrich import apply_value_maps, translate_distinct_values
 from ..operators.mapping import clean_column_mapping, extract_table_structure, split_into_tables
 from ..semantic.providers import (
@@ -209,30 +217,37 @@ def run_translation_pipeline(
     preserved exactly; only TEXT ∩ NON-ENGLISH columns are translated
     (the reference's column-pruning, ``translate.py:184-204``).
 
-    Stage 1 owns one cache, the cleaned frame. Its two driver reads, the
-    prompt samples and the distinct values sent to the translator, build
-    it, and the returned frame is lazy over it, so every later action
-    over the translated frame starts from the cache, not from the
-    source scan and the dedup shuffle. It is ``artifacts["cleaned"]``;
-    the caller unpersists it when the translated frame is no longer
-    read. On error it is released before the exception propagates.
+    Stage 1 owns two caches. The cleaned frame is cached, and the
+    returned frame is lazy over it, so every later action over the
+    translated frame starts from the cache, not from the source scan and
+    the dedup shuffle. It is ``artifacts["cleaned"]``; the caller
+    unpersists it when the translated frame is no longer read. Its
+    ``(column, value)`` distinct relation is cached too, for as long as
+    stage 1 runs: the prompt samples build it, and the distinct values
+    sent to the translator are a filter of it, so the cleaned frame is
+    scanned and shuffled for distinct values once. It is released before
+    stage 1 returns. On error both are released before the exception
+    propagates.
 
     The sample pass covers every column, though only the string columns'
     samples reach the classifier, so that stage 2 can take its own
     samples from stage 1's record of the returned frame."""
     cleaned, log = preprocess_data(df)
     cleaned.cache()
+    values = distinct_values_long(cleaned, cleaned.columns).cache()
     try:
-        samples = column_samples(cleaned, cleaned.columns, 10)
+        samples = column_samples(values, cleaned.columns, 10)
         labels = classify_text_columns({c: samples[c] for c in string_columns(cleaned)}, provider)
         text_cols = [c for c, lab in labels.items() if lab == TEXT]
         langs = detect_column_languages({c: samples[c] for c in text_cols}, provider)
         target_cols = [c for c in text_cols if langs.get(c) == NON_ENGLISH]
-        maps = translate_distinct_values(cleaned, target_cols, provider.translate_batch)
+        maps = translate_distinct_values(values, target_cols, provider.translate_batch)
         _checkpoint(maps, checkpoint_dir, "translated-map.json")
     except BaseException:
         cleaned.unpersist()
         raise
+    finally:
+        values.unpersist()
     translated = apply_value_maps(cleaned, maps)
     # with no map applied, translated IS cleaned: a record must not hold its own key
     _STAGE1[translated] = {
@@ -255,12 +270,19 @@ def _translations(value_map: dict) -> set[str]:
     return {k if t is None else t for k, t in value_map.items()}
 
 
+def _merges(maps: dict) -> bool:
+    """Whether two originals of a translated column share one effective
+    value: the only way the re-clean's dedup can drop a row of stage 1's
+    translated frame."""
+    return any(len(_translations(m)) < len(m) for m in maps.values())
+
+
 def _reclean_changes(spark: SparkSession, maps: dict) -> bool:
-    """Whether stage 2's re-clean could change stage 1's translated frame
-    (the three checks of the module docstring)."""
+    """Whether stage 2's re-clean could change a value of stage 1's
+    translated frame: a translation that P5→P6→P5 changes, or a column
+    of translations that P7 casts (the second and third checks of the
+    module docstring)."""
     translations = {c: _translations(m) for c, m in maps.items()}
-    if any(len(translations[c]) < len(m) for c, m in maps.items()):
-        return True
     import pyarrow as pa
 
     value = F.col("value")
@@ -314,6 +336,9 @@ def run_mapping_pipeline(
     stage 2 owns no cache and runs no Spark job: its samples come from
     stage 1's record, each table projects from stage 1's cache through
     its own value maps, and ``artifacts["cleaned"]`` is ``df``, uncached.
+    When only translations merge, it takes the same samples and caches
+    ``df`` deduplicated as ``artifacts["cleaned"]``, still without a job
+    of its own; the first sink builds that cache.
 
     Otherwise it re-cleans, and owns two caches; on stage 1's output it
     samples only the translated columns again. Its input is cached for
@@ -331,9 +356,12 @@ def run_mapping_pipeline(
         own = {c: sorted(_translations(m))[:5] for c, m in maps.items()}
         samples = _with_recorded(record, df.columns, own)
         mapping = _column_mapping(schema_description, structure, samples, provider, checkpoint_dir)
+        artifacts = {"log": [], "structure": structure, "mapping": mapping, "cleaned": df}
+        if _merges(maps):  # the re-clean is A1's dedup alone
+            artifacts["cleaned"] = drop_duplicate_rows(df).cache()
+            return split_into_tables(artifacts["cleaned"], mapping), artifacts
         base = df if record["cleaned"] is None else record["cleaned"]
-        tables = _split_translating(base, maps, mapping)
-        return tables, {"log": [], "structure": structure, "mapping": mapping, "cleaned": df}
+        return _split_translating(base, maps, mapping), artifacts
     own_input = df.storageLevel == StorageLevel.NONE
     if own_input:
         df.cache()
@@ -342,7 +370,7 @@ def run_mapping_pipeline(
         cleaned, log = preprocess_data(df)  # idempotent re-clean, mapper.py:207
         cleaned.cache()
         resample = [c for c in cleaned.columns if record is None or c in maps]
-        samples = column_samples(cleaned, resample, 5)  # builds the cache
+        samples = column_samples(distinct_values_long(cleaned, resample), resample, 5)  # builds the cache
         if record is not None:
             samples = _with_recorded(record, cleaned.columns, samples)
         if own_input:

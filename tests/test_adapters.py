@@ -13,7 +13,7 @@ import time
 
 import pytest
 
-from ai_etl_pipeline_spark.operators import enrich
+from ai_etl_pipeline_spark.operators import distinct, enrich
 from ai_etl_pipeline_spark.semantic.adapters import (
     NetworkProvider,
     OpenAIChatClient,
@@ -74,7 +74,8 @@ def test_translator_feeds_driver_side_enrich_path(spark):
     client = RestTranslatorClient(
         api_key="k", throttle_s=0.0, transport=FakeTransport(_translator_ok)
     )
-    maps = enrich.translate_distinct_values(df, ["v"], client.translate_batch)
+    values = distinct.distinct_values_long(df, ["v"])
+    maps = enrich.translate_distinct_values(values, ["v"], client.translate_batch)
     assert maps["v"] == {"Hallo": "EN:Hallo", "Welt": "EN:Welt"}
 
 

@@ -11,7 +11,7 @@ transport; ``tests/test_adapters.py`` checks it on this path.
 import pytest
 from pyspark.sql import functions as F
 
-from ai_etl_pipeline_spark.operators import enrich
+from ai_etl_pipeline_spark.operators import distinct, enrich
 
 
 def _corpus(spark, n=250, dupes=3):
@@ -84,6 +84,7 @@ def test_distributed_matches_driver_side_path(spark):
             df, "v", _translate_ok(), batch_size=40, num_partitions=3
         ).collect()
     }
-    drv = enrich.translate_distinct_values(df, ["v"], _translate_ok(), batch_size=40)["v"]
+    values = distinct.distinct_values_long(df, ["v"])
+    drv = enrich.translate_distinct_values(values, ["v"], _translate_ok(), batch_size=40)["v"]
     drv = {k: v.rsplit("|n", 1)[0] for k, v in drv.items()}
     assert dist == drv

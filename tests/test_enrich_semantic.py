@@ -59,7 +59,8 @@ def test_value_map_one_key_contract(spark, path):
     rows = [(1, "v000"), (2, "  v000  "), (3, "v001"), (4, "zz"), (5, " zz "), (6, None), (7, "")]
     df = spark.createDataFrame(rows, "id long, v string")
     value_map = enrich.translate_distinct_values(
-        df.where("id <= 3"), ["v"], lambda batch: [f"T:{v}" for v in batch]
+        distinct.distinct_values_long(df.where("id <= 3"), ["v"]), ["v"],
+        lambda batch: [f"T:{v}" for v in batch],
     )["v"]
     assert value_map == {"v000": "T:v000", "v001": "T:v001"}
     out = _apply(spark, df, "v", value_map, path)
@@ -73,7 +74,7 @@ def test_value_map_one_key_contract(spark, path):
 def test_value_map_dotted_column_name(spark, path):
     df = spark.createDataFrame([("a",), (" b ",), ("c",)], "`x.y` string")
     value_map = enrich.translate_distinct_values(
-        df, ["x.y"], lambda batch: [v.upper() for v in batch]
+        distinct.distinct_values_long(df, ["x.y"]), ["x.y"], lambda batch: [v.upper() for v in batch]
     )["x.y"]
     out = _apply(spark, df, "x.y", value_map, path)
     assert out.columns == ["x.y"]
@@ -121,7 +122,7 @@ def test_translate_distinct_semi_join_reduction(spark):
         seen.extend(batch)
         return [b.upper() for b in batch]
 
-    maps = enrich.translate_distinct_values(df, ["v"], fake_translate)
+    maps = enrich.translate_distinct_values(distinct.distinct_values_long(df, ["v"]), ["v"], fake_translate)
     assert sorted(seen) == ["w0", "w1", "w2"]  # distinct-only, the reference's key idiom
     assert maps["v"]["w1"] == "W1"
 
@@ -132,7 +133,7 @@ def test_translate_identity_fallback_on_failure(spark):
     def broken(batch):
         raise RuntimeError("api down")
 
-    maps = enrich.translate_distinct_values(df, ["v"], broken)
+    maps = enrich.translate_distinct_values(distinct.distinct_values_long(df, ["v"]), ["v"], broken)
     assert maps["v"] == {"a": "a", "b": "b"}  # translate.py:111-116
 
 
@@ -261,5 +262,5 @@ def test_distinct_profiles_single_pass(documents):
     assert prof["doc_id"]["non_null"] == prof["doc_id"]["total"]
     nulls = distinct.null_counts(documents)
     assert nulls["doc_id"] == 0
-    samples = distinct.column_samples(documents, ["lang"], 3)["lang"]
+    samples = distinct.column_samples(distinct.distinct_values_long(documents, ["lang"]), ["lang"], 3)["lang"]
     assert len(samples) == 3

@@ -3,13 +3,18 @@
 - ``distinct.column_samples``: one ``(column, value)`` distinct relation
   yields every column's prompt samples, the n smallest trimmed non-empty
   values, whatever the partitioning.
+- Stage 1 builds that relation once: the translator's values are a
+  filter of the cached relation its samples built, so its job group
+  writes four shuffles, and it releases the relation whether it returns
+  or raises.
 - Job budget: load → translation pipeline → mapping pipeline → five
   parquet sinks runs a fixed number of Spark jobs, the same for a 4- and
   a 12-string-column file.
 - Stage 2 fed stage 1's own output decides on the driver, and gives the
   mapping provider and the sinks exactly what its re-clean gives on an
   equal frame (``translated.select("*")``, which has no stage-1 record).
-  A translation the re-clean would change sends it down the re-clean.
+  A translation the re-clean would change sends it down the re-clean;
+  one that only merges two originals caches the deduplicated frame.
 - Cache lifecycle: each stage hands its cached frame to the caller as
   ``artifacts["cleaned"]`` (stage 2 on stage 1's output caches nothing);
   the mapping stage's input cache is released inside it, and a stage
@@ -20,17 +25,41 @@
 
 from __future__ import annotations
 
+import contextlib
+import itertools
 import os
 
 import pytest
+from pyspark.sql import functions as F
 
 from ai_etl_pipeline_spark import plans
+from ai_etl_pipeline_spark.plans import pipeline
 from ai_etl_pipeline_spark.operators import distinct
 from ai_etl_pipeline_spark.semantic import HeuristicProvider
 from ai_etl_pipeline_spark.sources import readers, writers
 
 JOB_BUDGET = 16
+MERGE_JOB_BUDGET = 18
 RECLEAN_JOB_BUDGET = 23
+_GROUPS = itertools.count()
+
+
+@contextlib.contextmanager
+def _job_group(spark):
+    """Runs the body in a job group of its own; yields the group's name."""
+    sc = spark.sparkContext
+    group = f"pipeline-passes-{next(_GROUPS)}"
+    sc.setJobGroup(group, group)
+    try:
+        yield group
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def _jobs(spark, group: str) -> list[int]:
+    spark.sparkContext._jsc.sc().listenerBus().waitUntilEmpty()
+    return list(spark.sparkContext.statusTracker().getJobIdsForGroup(group))
 
 
 def test_column_samples_are_smallest_n_per_column(spark):
@@ -50,8 +79,12 @@ def test_column_samples_are_smallest_n_per_column(spark):
     assert expected(3)["t"] == ["a b", "z", "Ä"]
     for n in (1, 3, 100):
         for frame in (df, df.repartition(1), df.repartition(7)):
-            assert distinct.column_samples(frame, list(df.columns), n) == expected(n)
-    assert distinct.column_samples(df, [], 5) == {}
+            values = distinct.distinct_values_long(frame, df.columns)
+            assert distinct.column_samples(values, list(df.columns), n) == expected(n)
+            assert distinct.column_samples(values, ["s", "t"], n) == {  # a subset of the relation
+                c: expected(n)[c] for c in ("s", "t")
+            }
+    assert distinct.column_samples(distinct.distinct_values_long(df, []), [], 5) == {}
 
 
 _GERMAN = ["Bäckerei Köln", "Tankstelle München", "Gasthof Nürnberg", "Apotheke Würzburg"]
@@ -93,37 +126,81 @@ def _inputs(spark, tmp_path, extra: int):
 
 
 def test_pipeline_jobs_do_not_grow_with_columns(spark, tmp_path):
-    """Both stage-2 paths: fed stage 1's own output, and fed an equal
-    frame with no stage-1 record, which re-cleans."""
-    sc = spark.sparkContext
-    provider = HeuristicProvider(translation_overlay={v: f"EN {v}" for v in _GERMAN + _TRIPS})
+    """The three stage-2 paths: fed stage 1's own output, the same when
+    two merchants share a translation, and fed an equal frame with no
+    stage-1 record, which re-cleans."""
+    overlay = {v: f"EN {v}" for v in _GERMAN + _TRIPS}
+    fast = HeuristicProvider(translation_overlay=overlay)
+    merging = HeuristicProvider(translation_overlay={**overlay, _GERMAN[3]: overlay[_GERMAN[0]]})
+    providers = {"fast": fast, "merge": merging, "reclean": fast}
     counts = {}
-    try:
-        for path in ("fast", "reclean"):
-            for extra in (0, 8):  # 4 and 12 string columns
-                group = f"pipeline-budget-{path}-{extra}"
-                sc.setJobGroup(group, group)
-                out = tmp_path / f"{path}-{extra}"
+    for path, provider in providers.items():
+        for extra in (0, 8):  # 4 and 12 string columns
+            out = tmp_path / f"{path}-{extra}"
+            with _job_group(spark) as group:
                 df, dest, star = _inputs(spark, out, extra)
                 translated, stage1 = plans.run_translation_pipeline(df, provider)
-                stage2_input = translated if path == "fast" else translated.select("*")
+                stage2_input = translated.select("*") if path == "reclean" else translated
                 tables, stage2 = plans.run_mapping_pipeline(stage2_input, dest, "expense star", provider)
                 for t, frame in tables.items():
                     writers.write_parquet(frame, str(out / "star" / t))
                 stage1["cleaned"].unpersist()
                 stage2["cleaned"].unpersist()
-                counts[path, 4 + extra] = len(sc.statusTracker().getJobIdsForGroup(group))
-                assert stage1["translated_columns"] == ["merchant", "trip_name"]
-                assert {t: sorted(f.columns) for t, f in tables.items()} == {
-                    t: sorted(cols) for t, cols in star.items()
-                }
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-        sc.setLocalProperty("spark.job.description", None)
-    assert counts["fast", 4] == counts["fast", 12], counts
-    assert counts["reclean", 4] == counts["reclean", 12], counts
+            counts[path, 4 + extra] = len(_jobs(spark, group))
+            assert stage1["translated_columns"] == ["merchant", "trip_name"]
+            assert {t: sorted(f.columns) for t, f in tables.items()} == {
+                t: sorted(cols) for t, cols in star.items()
+            }
+    for path in providers:
+        assert counts[path, 4] == counts[path, 12], counts
     assert counts["fast", 4] <= JOB_BUDGET, counts
+    assert counts["merge", 4] <= MERGE_JOB_BUDGET < RECLEAN_JOB_BUDGET, counts
     assert counts["reclean", 4] <= RECLEAN_JOB_BUDGET, counts
+
+
+def _shuffle_writing_stages(spark, group: str) -> int:
+    """The stages of ``group``'s jobs that wrote shuffle output, read from
+    the JVM status store."""
+    tracker = spark.sparkContext.statusTracker()
+    store = spark.sparkContext._jsc.sc().statusStore()
+    stages = {s for j in _jobs(spark, group) for s in tracker.getJobInfo(j).stageIds}
+    return sum(store.lastStageAttempt(s).shuffleWriteBytes() > 0 for s in stages)
+
+
+def test_translation_builds_distinct_values_once(spark, tmp_path):
+    df, _, _ = _inputs(spark, tmp_path, 2)
+    padded = F.concat(F.lit("  "), F.col("Merchant"), F.lit(" "))
+    df = df.withColumn("Merchant", F.when(F.col("Code") == "C01", padded).otherwise(F.col("Merchant")))
+    provider = HeuristicProvider(translation_overlay={v: f"EN {v}" for v in _GERMAN + _TRIPS})
+    with _job_group(spark) as group:
+        translated, stage1 = plans.run_translation_pipeline(df, provider)
+    try:
+        # the numeric probe, the dedup, the distinct and the samples' window;
+        # the translator's values are a filter of the cached distinct relation
+        assert _shuffle_writing_stages(spark, group) == 4
+        cleaned = stage1["cleaned"]
+        targets = stage1["translated_columns"]
+        assert targets == ["merchant", "trip_name"]
+        assert {c: sorted(m) for c, m in stage1["value_maps"].items()} == (
+            distinct.extract_unique_text_values(distinct.distinct_values_long(cleaned, targets), targets)
+        )
+        assert sorted(stage1["value_maps"]["merchant"]) == sorted(_GERMAN)  # padded ones trimmed
+        samples = pipeline._STAGE1[translated]["samples"]
+        assert samples == distinct.column_samples(
+            distinct.distinct_values_long(cleaned, cleaned.columns), cleaned.columns, 10
+        )
+    finally:
+        stage1["cleaned"].unpersist()
+
+
+def test_translation_error_releases_its_caches(spark, tmp_path):
+    df, _, _ = _inputs(spark, tmp_path, 2)
+    not_a_directory = tmp_path / "checkpoints"
+    not_a_directory.write_text("")
+    before = _persisted(spark)
+    with pytest.raises(OSError):  # raised after the translate step, by the map's checkpoint
+        plans.run_translation_pipeline(df, HeuristicProvider(), checkpoint_dir=str(not_a_directory))
+    assert _persisted(spark) == before  # the cleaned frame and the distinct relation
 
 
 class _RecordsSamples(HeuristicProvider):
@@ -132,18 +209,20 @@ class _RecordsSamples(HeuristicProvider):
         return super().map_schema(description, structure, samples)
 
 
-def _stage2(spark, translated, dest) -> tuple[list, list, dict, set[int]]:
+def _stage2(spark, translated, dest) -> tuple[list, list, dict, set[int], int]:
     """(sample items, log, {table: (schema, sorted rows)}) of stage 2 over
-    ``translated``, and the RDDs it left persisted."""
+    ``translated``, the RDDs it held persisted once its tables were read,
+    and the Spark jobs stage 2 itself ran."""
     provider = _RecordsSamples()
     before = _persisted(spark)
-    tables, artifacts = plans.run_mapping_pipeline(translated, dest, "expense star", provider)
-    held = _persisted(spark) - before
+    with _job_group(spark) as group:
+        tables, artifacts = plans.run_mapping_pipeline(translated, dest, "expense star", provider)
     try:
         out = {t: (f.schema, sorted(map(str, f.collect()))) for t, f in tables.items()}
+        held = _persisted(spark) - before
     finally:
         artifacts["cleaned"].unpersist()
-    return list(provider.samples.items()), artifacts["log"], out, held
+    return list(provider.samples.items()), artifacts["log"], out, held, len(_jobs(spark, group))
 
 
 @pytest.mark.parametrize("case", ["identity", "german", "untranslated"])
@@ -154,11 +233,11 @@ def test_pipeline_mapping_fast_path_is_exact(spark, tmp_path, case):
         df = df.drop("Merchant", "Trip Name")
     translated, stage1 = plans.run_translation_pipeline(df, HeuristicProvider(translation_overlay=overlay))
     try:
-        *fast, fast_held = _stage2(spark, translated, dest)
-        *reclean, reclean_held = _stage2(spark, translated.select("*"), dest)
+        *fast, fast_held, fast_jobs = _stage2(spark, translated, dest)
+        *reclean, reclean_held, _ = _stage2(spark, translated.select("*"), dest)
     finally:
         stage1["cleaned"].unpersist()
-    assert not fast_held and len(reclean_held) == 1
+    assert not fast_held and len(reclean_held) == 1 and fast_jobs == 0
     assert fast == reclean
     samples, log, tables = fast
     assert log == [] and len(tables) == (3 if case == "untranslated" else 5)
@@ -166,26 +245,28 @@ def test_pipeline_mapping_fast_path_is_exact(spark, tmp_path, case):
         assert dict(samples)["merchant"] == sorted(f"EN {v}" for v in _GERMAN)
 
 
-@pytest.mark.parametrize("overlay", [
-    {"Bäckerei Köln": "n/a"},  # a placeholder
-    {"Bäckerei Köln": ""},
-    {"Bäckerei Köln": "  Bakery Cologne "},  # padded
-    {v: str(i) for i, v in enumerate(_GERMAN)},  # every merchant numeric: P7 casts it
-    {"Bäckerei Köln": "Bakery", "Apotheke Würzburg": "Bakery"},  # two originals merged
-    {"Bäckerei Köln": "Apotheke Würzburg"},  # equal to another, untranslated original
+@pytest.mark.parametrize("overlay, recleans", [
+    ({"Bäckerei Köln": "n/a"}, True),  # a placeholder
+    ({"Bäckerei Köln": ""}, True),
+    ({"Bäckerei Köln": "  Bakery Cologne "}, True),  # padded
+    ({v: str(i) for i, v in enumerate(_GERMAN)}, True),  # every merchant numeric: P7 casts it
+    # a merge alone is deduplicated on stage 1's cache, decided on the driver
+    ({"Bäckerei Köln": "Bakery", "Apotheke Würzburg": "Bakery"}, False),  # two originals merged
+    ({"Bäckerei Köln": "Apotheke Würzburg"}, False),  # equal to another, untranslated original
 ], ids=["placeholder", "empty", "padded", "numeric", "merged", "onto-original"])
-def test_pipeline_mapping_falls_back_when_a_translation_changes_the_clean(spark, tmp_path, overlay):
+def test_pipeline_mapping_falls_back_when_a_translation_changes_the_clean(spark, tmp_path, overlay, recleans):
     df, dest, _ = _inputs(spark, tmp_path, 0)
     # 12 distinct rows, so a merge drops 3 of them; "Status" is not translated
     df = df.select("Merchant", "Trip Name", "Status")
     translated, stage1 = plans.run_translation_pipeline(df, HeuristicProvider(translation_overlay=overlay))
     try:
-        *fallback, held = _stage2(spark, translated, dest)
-        *reclean, _ = _stage2(spark, translated.select("*"), dest)
+        *fallback, held, jobs = _stage2(spark, translated, dest)
+        *reclean, _, _ = _stage2(spark, translated.select("*"), dest)
     finally:
         stage1["cleaned"].unpersist()
     assert stage1["translated_columns"] == ["merchant", "trip_name"]
-    assert len(held) == 1  # the re-clean ran: stage 2 held its own cache
+    assert len(held) == 1  # stage 2 held its own cache
+    assert (jobs > 0) == recleans, jobs
     assert fallback == reclean
 
 
