@@ -22,11 +22,12 @@ from ai_etl_pipeline_spark.functions.portable import md5_i64, md5_i64_sql, token
 from ai_etl_pipeline_spark.operators import cdc, clean, dedup, distinct, enrich, linkage, mapping
 from ai_etl_pipeline_spark.operators import multimodal, packing, relational, sampling, similarity, textstats
 from ai_etl_pipeline_spark.operators import behavior, embedstats, graph, layout, validate
+from ai_etl_pipeline_spark.sources.readers import read_parquet
 from ai_etl_pipeline_spark.streaming import windows as stream_windows
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/{name}.parquet")
+    return read_parquet(spark, f"{sf_dir}/{name}.parquet")
 
 
 def _scratch_dir(tag: str, sf_dir: str) -> str:

@@ -809,7 +809,6 @@ def link_prediction(
         edges.select(F.col(src_col).alias("__s"), F.col(dst_col).alias("__d"))
         .where(F.col("__s").isNotNull() & F.col("__d").isNotNull())
         .distinct()
-        .cache()
     )
     sdeg = e.groupBy("__s").agg(F.count(F.lit(1)).cast("bigint").alias("__sd"))
     ddeg = e.groupBy("__d").agg(F.count(F.lit(1)).cast("bigint").alias("__dd"))

@@ -13,23 +13,124 @@ Reference behavior being re-expressed (citations into /root/reference):
 - S3 unsupported-extension rejection: ``preprocess.py:25-26``.
 
 At 100 TB the real source is columnar: ``read_parquet`` is the hot path —
-schema comes from the footer (no inference scan), predicate pushdown and
-column pruning reach the row groups, and partition discovery handles
-directory-partitioned layouts for free.
+predicate pushdown and column pruning reach the row groups, and partition
+discovery handles directory-partitioned layouts for free. The schema
+comes from the footer. When every path names a local file, the footers
+are read on the driver (footer bytes only, no data) and handed to Spark
+as the read's schema, so building the frame starts no Spark job; left to
+infer, Spark sends even one footer through a one-task job. The footer
+schema is the one Spark infers: the Spark row-metadata JSON when a
+footer carries it, otherwise the Arrow schema mapped as Spark maps it,
+for a closed set of types. Every other read is Spark's own inference:
+directories, paths that are not local files, nanosecond timestamps
+(INT96 included, which Arrow reads as nanoseconds), unsigned integers
+and any type outside the set, footers that disagree, and duplicate
+column names.
 """
 
 from __future__ import annotations
 
+import json
 import os
+from urllib.parse import unquote
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import ArrayType, DataType, MapType, StructField, StructType
+
+# the key under which Spark's writer stores the frame's schema as JSON
+_SPARK_ROW_METADATA = b"org.apache.spark.sql.parquet.row.metadata"
 
 
-def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     """Columnar scan — the scale path. Pushdown/pruning verified in tests
-    via ``explain`` (PushedFilters / ReadSchema)."""
-    return spark.read.parquet(path)
+    via ``explain`` (PushedFilters / ReadSchema). The schema is read from
+    the footers on the driver when every path is a local file (see the
+    module docstring), so building the frame starts no Spark job."""
+    schema = footer_schema(spark, paths)
+    reader = spark.read if schema is None else spark.read.schema(schema)
+    return reader.parquet(*paths)
+
+
+def local_path(path: str) -> str:
+    """``path`` with a ``file:`` URI (``_metadata.file_path``'s form,
+    ``file:/tmp/...``) turned into a plain local path; other paths are
+    returned unchanged."""
+    if not path.startswith("file:"):
+        return path
+    return unquote(path.removeprefix("file://") if path.startswith("file://") else path.removeprefix("file:"))
+
+
+def footer_schema(spark: SparkSession, paths) -> StructType | None:
+    """The schema Spark would infer for ``paths``, read from their
+    footers on the driver; None where only Spark's inference can say."""
+    if not paths or not all(os.path.isfile(p) for p in paths):
+        return None
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    schema = None
+    for p in paths:
+        try:
+            arrow = pq.read_schema(p)
+        except (OSError, pa.ArrowException):
+            return None
+        one = _spark_schema(spark, arrow)
+        if one is None or schema is not None and one != schema:
+            return None
+        schema = one
+    names = [f.name.lower() for f in schema.fields]
+    return schema if len(set(names)) == len(names) else None
+
+
+def _spark_schema(spark: SparkSession, arrow) -> StructType | None:
+    """One footer's schema as Spark reads it, made nullable as Spark's
+    ``asNullable`` does for every file source."""
+    row_metadata = (arrow.metadata or {}).get(_SPARK_ROW_METADATA)
+    if row_metadata is not None:
+        # ParquetFileFormat.readSchemaFromFooter prefers this JSON too
+        try:
+            return _as_nullable(StructType.fromJson(json.loads(row_metadata)))
+        except (ValueError, KeyError, TypeError):
+            return None
+    from pyspark.sql.pandas.types import from_arrow_schema
+
+    binary_as_string = spark.conf.get("spark.sql.parquet.binaryAsString") == "true"
+    if not all(_spark_maps(f.type, binary_as_string) for f in arrow):
+        return None
+    prefer_ntz = spark.conf.get("spark.sql.parquet.inferTimestampNTZ.enabled") == "true"
+    return _as_nullable(from_arrow_schema(arrow, prefer_timestamp_ntz=prefer_ntz))
+
+
+def _spark_maps(t, binary_as_string: bool) -> bool:
+    """Whether Spark reads the parquet column behind Arrow type ``t`` as
+    ``from_arrow_type`` maps it: a closed set, lists and structs of it."""
+    import pyarrow as pa
+
+    if pa.types.is_list(t):
+        return _spark_maps(t.value_type, binary_as_string)
+    if pa.types.is_struct(t):
+        return all(_spark_maps(t.field(i).type, binary_as_string) for i in range(t.num_fields))
+    if pa.types.is_timestamp(t):
+        return t.unit in ("ms", "us")
+    if pa.types.is_binary(t):
+        return not binary_as_string
+    return pa.types.is_decimal128(t) or t in (
+        pa.bool_(), pa.int8(), pa.int16(), pa.int32(), pa.int64(),
+        pa.float32(), pa.float64(), pa.string(), pa.date32(),
+    )
+
+
+def _as_nullable(t: DataType) -> DataType:
+    if isinstance(t, StructType):
+        return StructType(
+            [StructField(f.name, _as_nullable(f.dataType), True, f.metadata) for f in t.fields]
+        )
+    if isinstance(t, ArrayType):
+        return ArrayType(_as_nullable(t.elementType), True)
+    if isinstance(t, MapType):
+        return MapType(_as_nullable(t.keyType), _as_nullable(t.valueType), True)
+    return t
 
 
 def read_parquet_nanos_ts(spark: SparkSession, path: str, ts_cols: tuple[str, ...] = ("ts",)) -> DataFrame:
@@ -39,7 +140,7 @@ def read_parquet_nanos_ts(spark: SparkSession, path: str, ts_cols: tuple[str, ..
     columns to microsecond timestamps — still a pushdown-capable columnar
     scan, no Python in the path."""
     spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     for c in ts_cols:
         if c in df.columns and dict(df.dtypes).get(c) == "bigint":
             # integer division — epoch-nanos (~1.7e18) overflows a double
@@ -169,7 +270,7 @@ def zone_map_pruned_scan(
         keep = keep & (F.col(f"min_{col}").isNull() | (F.col(f"min_{col}") <= hi))
     if lo is not None:
         keep = keep & (F.col(f"max_{col}").isNull() | (F.col(f"max_{col}") >= lo))
-    files = [r["file_path"] for r in manifest.where(keep).select("file_path").collect()]
+    files = [local_path(r["file_path"]) for r in manifest.where(keep).select("file_path").collect()]
     pred = F.lit(True)
     if lo is not None:
         pred = pred & (F.col(col) >= lo)
@@ -177,7 +278,7 @@ def zone_map_pruned_scan(
         pred = pred & (F.col(col) <= hi)
     if not files:
         return spark.read.parquet(path).where(F.lit(False))
-    return spark.read.parquet(*files).where(pred)
+    return read_parquet(spark, *files).where(pred)
 
 
 def bloom_index_manifest(
@@ -292,12 +393,12 @@ def bloom_index_pruned_scan(
     for t in word_tests[1:]:
         probe = probe & t
     files = [
-        r["file_path"]
+        local_path(r["file_path"])
         for r in probed.where(probe).select("file_path").collect()
     ]
     if not files:
         return spark.read.parquet(path).where(F.lit(False))
-    return spark.read.parquet(*files).where(F.col(col) == value)
+    return read_parquet(spark, *files).where(F.col(col) == value)
 
 
 def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:

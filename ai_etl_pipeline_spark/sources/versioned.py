@@ -29,6 +29,8 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from .readers import local_path, read_parquet
+
 
 def _manifest_path(base: str, version: int) -> str:
     return os.path.join(base, "_manifests", f"v{version}.json")
@@ -69,7 +71,7 @@ def snapshot_read(spark: SparkSession, base: str, version: int) -> DataFrame:
     files = manifest["files"]
     if not files:
         raise ValueError(f"empty manifest for version {version}")
-    return spark.read.parquet(*files)
+    return read_parquet(spark, *files)
 
 
 def versioned_upsert(
@@ -109,7 +111,7 @@ def versioned_upsert(
     snap_files = json.load(open(_manifest_path(base, cur), encoding="utf-8"))["files"]
     new_version = versions[-1] + 1
     with_path = (
-        spark.read.parquet(*snap_files)
+        read_parquet(spark, *snap_files)
         .withColumn("__file", F.col("_metadata.file_path"))
     )
     keys = updates.select(*key_cols)
@@ -121,17 +123,12 @@ def versioned_upsert(
         .collect()
     )
     # manifests carry plain paths; _metadata.file_path is a file: URI
-    # (single-slash authority-less form, `file:/tmp/...`)
-    touched_plain = {
-        t.removeprefix("file://") if t.startswith("file://")
-        else t.removeprefix("file:")
-        for t in touched
-    }
+    touched_plain = {local_path(t) for t in touched}
     untouched = [f for f in snap_files if f not in touched_plain]
     data_dir = os.path.join(base, "data", f"v{new_version}")
     if touched:
         survivors = (
-            spark.read.parquet(*sorted(touched_plain))
+            read_parquet(spark, *sorted(touched_plain))
             .join(F.broadcast(keys), key_cols, "left_anti")
         )
         merged = survivors.unionByName(updates)
@@ -251,7 +248,7 @@ def change_feed(
 
     def read_or_empty(files, fallback_version):
         if files:
-            return spark.read.parquet(*files)
+            return read_parquet(spark, *files)
         return snapshot_read(spark, base, fallback_version).where(F.lit(False))
 
     old = read_or_empty(only_old, v_from)

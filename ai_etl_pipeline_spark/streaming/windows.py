@@ -19,6 +19,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from ..sources.readers import read_parquet
+
+
 def _events_ddl(ts_type: str) -> str:
     """Events schema DDL with the ``ts`` rendering the file actually
     uses. The testdata generator has shipped BOTH TIMESTAMP(NANOS)
@@ -164,7 +167,7 @@ def read_events_stream(spark: SparkSession, path: str) -> DataFrame:
         raise ValueError(f"read_events_stream: no parquet files match {base}/{fname}")
     ts_types = set()
     for f in matched:
-        t = dict(spark.read.parquet(f).dtypes).get("ts")
+        t = dict(read_parquet(spark, f).dtypes).get("ts")
         if t is None:
             raise ValueError(f"read_events_stream: {f} has no 'ts' column")
         ts_types.add("bigint" if t == "bigint" else "timestamp")
