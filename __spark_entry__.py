@@ -13206,11 +13206,17 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     ),
     "q_graph_pagerank_directed": (q_graph_pagerank_directed, _pagerank_directed_sql()),
     "q_graph_pagerank_receipt": (q_graph_pagerank_receipt, _pagerank_receipt_sql()),
-    "q_embed_pca": (q_embed_pca, _EMBED_PCA_SQL),
-    "q_embed_mahalanobis": (q_embed_mahalanobis, _EMBED_MAHALANOBIS_SQL),
-    "q_pipeline_probe_gate": (q_pipeline_probe_gate, _PIPELINE_PROBE_GATE_SQL),
-    "q_validate_schema_drift": (q_validate_schema_drift, _VALIDATE_SCHEMA_DRIFT_SQL),
-    "q_cdc_vacuum": (q_cdc_vacuum, _CDC_VACUUM_SQL),
+    # --- dedup.py rotation: the seven queries past the window whose
+    #     dedup operators changed (one verify tail, lazy checkpoints,
+    #     one components loop) swap slots with seven unchanged
+    #     r16-green entries (q_embed_pca, q_embed_mahalanobis,
+    #     q_pipeline_probe_gate, q_validate_schema_drift, q_cdc_vacuum,
+    #     q_embed_hard_negatives, q_events_stream_late). ---
+    "q_dedup_containment": (q_dedup_containment, _DEDUP_CONTAINMENT_SQL),
+    "q_decontaminate_score": (q_decontaminate_score, _DECONTAMINATE_SCORE_SQL),
+    "q_decontaminate": (q_decontaminate, _DECONTAMINATE_SQL),
+    "q_dedup_clusters": (q_dedup_clusters, _clusters_sql()),
+    "q_dedup_keep_best": (q_dedup_keep_best, _keep_best_sql()),
     # --- pipeline-pass rotation: the four queries whose operators the
     #     one-pass pipeline change touched (q_translate_distributed,
     #     q_clean_placeholders, q_clean_numeric_cast, q_distinct_values)
@@ -13224,9 +13230,9 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "q_clean_numeric_cast": (q_clean_numeric_cast, _CLEAN_NUMERIC_SQL),
     "q_distinct_values": (q_distinct_values, _DISTINCT_VALUES_SQL),
     "q_cdc_time_travel": (q_cdc_time_travel, _CDC_TIME_TRAVEL_SQL),
-    "q_embed_hard_negatives": (q_embed_hard_negatives, _EMBED_HARD_NEG_SQL),
+    "q_graph_triangles": (q_graph_triangles, _graph_triangles_sql()),
     "q_knn_rank_eval": (q_knn_rank_eval, _knn_rank_eval_sql()),
-    "q_events_stream_late": (q_events_stream_late, _EVENTS_STREAM_LATE_SQL),
+    "q_dedup_ngram_jaccard": (q_dedup_ngram_jaccard, _NGRAM_JACCARD_SQL),
     "q_events_stream_upsert": (q_events_stream_upsert, _EVENTS_STREAM_UPSERT_SQL),
     "q_dedup_lsh_recall": (q_dedup_lsh_recall, _lsh_recall_sql()),
     "q_graph_components": (q_graph_components, _graph_components_sql()),
@@ -13358,9 +13364,9 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "q_media_png_decode": (q_media_png_decode, _MEDIA_BMP_SQL),
     "q_media_gif_decode": (q_media_gif_decode, _MEDIA_BMP_SQL),
     "q_media_features": (q_media_features, _MEDIA_FEATURES_SQL),
-    "q_dedup_containment": (q_dedup_containment, _DEDUP_CONTAINMENT_SQL),
+    "q_embed_pca": (q_embed_pca, _EMBED_PCA_SQL),
     "q_graph_copurchase": (q_graph_copurchase, _GRAPH_COPURCHASE_SQL),
-    "q_decontaminate_score": (q_decontaminate_score, _DECONTAMINATE_SCORE_SQL),
+    "q_embed_mahalanobis": (q_embed_mahalanobis, _EMBED_MAHALANOBIS_SQL),
     "q_validate_psi": (q_validate_psi, _VALIDATE_PSI_SQL),
     "q_join_auto": (q_join_auto, _JOIN_AUTO_SQL),
     "q_pipeline_curation_scale": (
@@ -13406,7 +13412,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "q_media_frame_sample": (q_media_frame_sample, _MEDIA_FRAME_SQL),
     "q_sample_topk_stratum": (q_sample_topk_stratum, _SAMPLE_TOPK_SQL),
     "q_pack_overlap_chunks": (q_pack_overlap_chunks, _PACK_OVERLAP_SQL),
-    "q_decontaminate": (q_decontaminate, _DECONTAMINATE_SQL),
+    "q_pipeline_probe_gate": (q_pipeline_probe_gate, _PIPELINE_PROBE_GATE_SQL),
     "q_corpus_profile": (q_corpus_profile, _CORPUS_PROFILE_SQL),
     "q_sample_mixture": (q_sample_mixture, _SAMPLE_MIXTURE_SQL),
     "q_pipeline_curation": (q_pipeline_curation, _PIPELINE_CURATION_SQL),
@@ -13416,8 +13422,8 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "q_text_repetition": (q_text_repetition, _TEXT_REPETITION_SQL),
     "q_dedup_passages": (q_dedup_passages, _DEDUP_PASSAGES_SQL),
     "q_text_normalize": (q_text_normalize, _TEXT_NORMALIZE_SQL),
-    "q_dedup_clusters": (q_dedup_clusters, _clusters_sql()),
-    "q_dedup_keep_best": (q_dedup_keep_best, _keep_best_sql()),
+    "q_validate_schema_drift": (q_validate_schema_drift, _VALIDATE_SCHEMA_DRIFT_SQL),
+    "q_cdc_vacuum": (q_cdc_vacuum, _CDC_VACUUM_SQL),
     "q_top_supplier_revenue": (q_top_supplier_revenue, _TOP_SUPPLIER_REVENUE_SQL),
     "q_bulk_part_suppliers": (q_bulk_part_suppliers, _BULK_PART_SUPPLIERS_SQL),
     "q_last_shipper": (q_last_shipper, _LAST_SHIPPER_SQL),
@@ -13450,10 +13456,10 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "q_text_oov_rate": (q_text_oov_rate, _TEXT_OOV_RATE_SQL),
     "q_sample_weighted": (q_sample_weighted, _SAMPLE_WEIGHTED_SQL),
     "q_split_group_holdout": (q_split_group_holdout, _SPLIT_GROUP_SQL),
-    "q_graph_triangles": (q_graph_triangles, _graph_triangles_sql()),
+    "q_embed_hard_negatives": (q_embed_hard_negatives, _EMBED_HARD_NEG_SQL),
     "q_knn_pq": (q_knn_pq, _knn_pq_sql()),
     "q_agg_hll_overlap": (q_agg_hll_overlap, _AGG_HLL_OVERLAP_SQL),
-    "q_dedup_ngram_jaccard": (q_dedup_ngram_jaccard, _NGRAM_JACCARD_SQL),
+    "q_events_stream_late": (q_events_stream_late, _EVENTS_STREAM_LATE_SQL),
     "q_source_synthetic_docs": (q_source_synthetic_docs, _synthetic_docs_sql()),
     "q_map_split_tables": (q_map_split_tables, _MAP_SPLIT_SQL),
     "q_local_supplier_volume": (q_local_supplier_volume, _LOCAL_SUPPLIER_SQL),

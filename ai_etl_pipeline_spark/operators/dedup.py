@@ -13,6 +13,16 @@ Every operator is shuffle-shaped for 100 TB:
 
 Hashes are the portable md5-based family (functions/portable.py) so the
 DuckDB oracle can replay them bit-for-bit.
+
+Persistence rule: corpus-sized relations are never cached, and every
+candidate-sized frame read more than once (candidate pairs, the delta's
+band probe, containment's cold intersections) is a LAZY
+``localCheckpoint`` — never ``persist()``. A lazy checkpoint truncates
+the plan at once (under AQE the shuffle stages below it run when it is
+made; its last stage runs with the first action that reads it) and
+leaves no DataFrame cache entry; its blocks go when the caller drops
+the result. The one exception is :func:`near_duplicate_clusters`' input
+pairs, persisted eagerly and unpersisted before it returns (see there).
 """
 
 from __future__ import annotations
@@ -42,6 +52,17 @@ def doc_tokens(df: DataFrame, id_col: str, text_col: str) -> DataFrame:
     )
 
 
+def _shingle_array(toks: "F.Column", k: int) -> "F.Column":
+    """The k-word shingles of a token array column, in-row; a doc shorter
+    than k tokens is one whole-doc shingle."""
+    n = F.size(toks)
+    idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
+    return F.when(
+        n >= k,
+        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " ")),
+    ).otherwise(F.array(F.array_join(toks, " ")))
+
+
 def doc_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataFrame:
     """(id, shingle) distinct pairs, k-word shingles.
 
@@ -59,13 +80,7 @@ def doc_shingles(df: DataFrame, id_col: str, text_col: str, k: int = 3) -> DataF
     toked = df.repartition(F.col(id_col)).select(  # repartition: see doc_tokens
         F.col(id_col), tokens_col(F.col(text_col)).alias("__toks")
     )
-    toks = F.col("__toks")
-    n = F.size(toks)
-    idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
-    shingles = F.when(
-        n >= k,
-        F.transform(idx, lambda i: F.array_join(F.slice(toks, i + 1, k), " ")),
-    ).otherwise(F.array(F.array_join(toks, " ")))
+    shingles = _shingle_array(F.col("__toks"), k)
     # shingle dedup is PER-DOCUMENT, so it happens in-row
     # (array_distinct before the explode) — a row-level .distinct()
     # here would shuffle the entire exploded corpus (~tokens× the
@@ -87,20 +102,40 @@ def _doc_gram_sizes(
     exploded shuffle. The set-similarity denominators' 100 TB shape."""
     toks = tokens_col(F.col(text_col))
     if k == 1:
-        arr = F.array_distinct(toks)
-    else:
-        t = F.col("__toks")
-        n = F.size(t)
-        idx = F.sequence(F.lit(0), F.greatest(n - F.lit(k), F.lit(0)))
-        shingles = F.when(
-            n >= k,
-            F.transform(idx, lambda i: F.array_join(F.slice(t, i + 1, k), " ")),
-        ).otherwise(F.array(F.array_join(t, " ")))
-        arr = F.filter(F.array_distinct(shingles), lambda s: s != "")
-        return df.select(F.col(id_col), toks.alias("__toks")).select(
-            F.col(id_col), F.size(arr).cast("long").alias("sz")
+        return df.select(
+            F.col(id_col), F.size(F.array_distinct(toks)).cast("long").alias("sz")
         )
-    return df.select(F.col(id_col), F.size(arr).cast("long").alias("sz"))
+    shingles = _shingle_array(F.col("__toks"), k)
+    arr = F.filter(F.array_distinct(shingles), lambda s: s != "")
+    return df.select(F.col(id_col), toks.alias("__toks")).select(
+        F.col(id_col), F.size(arr).cast("long").alias("sz")
+    )
+
+
+def _doc_grams(df: DataFrame, id_col: str, text_col: str, k: int) -> DataFrame:
+    """(id, token) distinct gram pairs: :func:`doc_tokens` for k == 1,
+    else :func:`doc_shingles`' k-word shingles under the name ``token``."""
+    if k == 1:
+        return doc_tokens(df, id_col, text_col)
+    return doc_shingles(df, id_col, text_col, k).withColumnRenamed("shingle", "token")
+
+
+def _drop_hot_grams(
+    df: DataFrame, items: DataFrame, id_col: str, max_df: float | None
+) -> tuple[DataFrame, DataFrame | None]:
+    """``(cold, hot)``: ``items`` without its hot grams, and the hot
+    grams — those in more than ``max_df`` of the docs (one driver count
+    of the docs). ``(items, None)`` when ``max_df`` is None."""
+    if max_df is None:
+        return items, None
+    n_docs = df.select(id_col).distinct().count()
+    hot = (
+        items.groupBy("token")
+        .agg(F.count("*").alias("df"))
+        .where(F.col("df") > max_df * n_docs)
+        .select("token")
+    )
+    return items.join(F.broadcast(hot), "token", "left_anti"), hot
 
 
 def minhash_signatures(
@@ -189,6 +224,31 @@ def _split_oversized_buckets(
     )
 
 
+def _band_rows(
+    signatures: DataFrame, id_col: str, num_hashes: int, bands: int
+) -> DataFrame:
+    """(id, band, sig): one row per doc and band, ``sig`` the portable
+    60-bit md5 int over the band's signature rows."""
+    rows_per_band = num_hashes // bands
+    band_cols = []
+    for b in range(bands):
+        parts = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
+        band_cols.append(
+            # sig as the portable 60-bit md5 int, not the 32-char hex
+            # string: the band self-join shuffles TWO corpus x bands
+            # relations on this key, and an 8-byte long quarters the
+            # shuffle/spill bytes vs the hex rendering (measured: the
+            # 5.5M-doc scale bench overflowed 77 GB of spill on strings)
+            F.struct(
+                F.lit(b).alias("band"),
+                md5_i64(F.concat_ws("_", *parts)).alias("sig"),
+            )
+        )
+    return signatures.select(
+        F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
+    ).select(id_col, "bk.band", "bk.sig")
+
+
 def lsh_candidate_pairs(
     signatures: DataFrame,
     id_col: str,
@@ -206,24 +266,7 @@ def lsh_candidate_pairs(
     sub-buckets before the self-join (see _split_oversized_buckets for
     the shuffle shape and the documented recall trade). None = uncapped
     (the pre-r14 behavior)."""
-    rows_per_band = num_hashes // bands
-    band_cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        band_cols.append(
-            # sig as the portable 60-bit md5 int, not the 32-char hex
-            # string: the band self-join shuffles TWO corpus x bands
-            # relations on this key, and an 8-byte long quarters the
-            # shuffle/spill bytes vs the hex rendering (measured: the
-            # 5.5M-doc scale bench overflowed 77 GB of spill on strings)
-            F.struct(
-                F.lit(b).alias("band"),
-                md5_i64(F.concat_ws("_", *parts)).alias("sig"),
-            )
-        )
-    banded = signatures.select(
-        F.col(id_col), F.explode(F.array(*band_cols)).alias("bk")
-    ).select(id_col, "bk.band", "bk.sig")
+    banded = _band_rows(signatures, id_col, num_hashes, bands)
     join_cols = ["band", "sig"]
     if max_bucket is not None:
         banded = _split_oversized_buckets(banded, id_col, max_bucket)
@@ -237,6 +280,15 @@ def lsh_candidate_pairs(
             + [F.col(f"a.{id_col}") < F.col(f"b.{id_col}")],
         )
         .select(F.col(f"a.{id_col}").alias("id_a"), F.col(f"b.{id_col}").alias("id_b"))
+        .distinct()
+    )
+
+
+def _pair_ids(pairs: DataFrame, id_col: str) -> DataFrame:
+    """The distinct ids on either side of (id_a, id_b) pairs, named ``id_col``."""
+    return (
+        pairs.select(F.col("id_a").alias(id_col))
+        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
         .distinct()
     )
 
@@ -268,12 +320,7 @@ def jaccard_verify(
     must fit a row (fine for shingle/token sets of real documents;
     a pathological doc with 10^8 distinct items would need the old
     row-per-item shape instead)."""
-    cand_ids = (
-        pairs.select(F.col("id_a").alias(id_col))
-        .unionByName(pairs.select(F.col("id_b").alias(id_col)))
-        .distinct()
-    )
-    items = items.join(F.broadcast(cand_ids), id_col, "left_semi")
+    items = items.join(F.broadcast(_pair_ids(pairs, id_col)), id_col, "left_semi")
     # collect_set = the per-doc item SET (inputs are already distinct
     # (id, item) pairs from doc_tokens/doc_shingles; collect_set keeps
     # the set semantics even if a caller ever passes duplicates)
@@ -304,6 +351,25 @@ def jaccard_verify(
     )
 
 
+def _verify_candidates(
+    cands: DataFrame,
+    docs: DataFrame,
+    id_col: str,
+    items_of,
+    item_col: str,
+    threshold: float,
+) -> DataFrame:
+    """The candidate → verify tail every pair generator shares: the
+    candidate pairs (id_a, id_b) become a lazy local checkpoint (they
+    feed the candidate-id list and the verify join), ``docs`` is
+    semi-joined to the candidate ids, ``items_of`` re-derives only those
+    docs' items — a broadcast-pruned second scan, never cached — and
+    :func:`jaccard_verify` scores them."""
+    cands = cands.localCheckpoint(eager=False)
+    cand_docs = docs.join(F.broadcast(_pair_ids(cands, id_col)), id_col, "left_semi")
+    return jaccard_verify(cands, items_of(cand_docs), id_col, item_col, threshold)
+
+
 def minhash_lsh_near_duplicates(
     df: DataFrame,
     id_col: str,
@@ -319,26 +385,21 @@ def minhash_lsh_near_duplicates(
     ``max_bucket`` caps the per-bucket candidate quadratic (see
     lsh_candidate_pairs / _split_oversized_buckets).
 
-    Persistence strategy (the 100 TB posture): the corpus-sized shingle
-    relation is NEVER cached — it flows through exactly one
-    shuffle (the signature groupBy), and the band self-join reuses that
-    exchange (ReusedExchange). Only the two candidate-sized frames are
-    persisted: the pair list and the re-shingled candidate docs (a
-    broadcast-semi-join-pruned second scan). Caching the full shingle
-    relation instead costs corpus-sized executor memory and, across
-    repeated calls, accumulates un-evictable copies."""
+    The corpus-sized shingle relation is never cached: it flows through
+    exactly one shuffle (the signature groupBy), and the band self-join
+    reuses that exchange (ReusedExchange). Verification re-shingles only
+    the candidate docs (:func:`_verify_candidates`)."""
     sigs = minhash_signatures(
         doc_shingles(df, id_col, text_col, shingle_k), id_col, "shingle", num_hashes
     )
-    cands = lsh_candidate_pairs(sigs, id_col, num_hashes, bands, max_bucket).persist()
-    cand_ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .unionByName(cands.select(F.col("id_b").alias(id_col)))
-        .distinct()
+    return _verify_candidates(
+        lsh_candidate_pairs(sigs, id_col, num_hashes, bands, max_bucket),
+        df,
+        id_col,
+        lambda docs: doc_shingles(docs, id_col, text_col, shingle_k),
+        "shingle",
+        threshold,
     )
-    cand_docs = df.join(F.broadcast(cand_ids), id_col, "left_semi")
-    cand_shingles = doc_shingles(cand_docs, id_col, text_col, shingle_k).persist()
-    return jaccard_verify(cands, cand_shingles, id_col, "shingle", threshold)
 
 
 def simhash(df: DataFrame, id_col: str, text_col: str, bits: int = 16) -> DataFrame:
@@ -380,31 +441,10 @@ def ngram_jaccard_pairs(
     only (verification still uses the full sets, so the similarity value
     is exact; only recall of pairs sharing solely stop-grams is traded).
     For large corpora prefer minhash_lsh_near_duplicates outright."""
-
-    def items_of(frame: DataFrame) -> DataFrame:
-        return (
-            doc_tokens(frame, id_col, text_col)
-            if ngram == 1
-            else doc_shingles(frame, id_col, text_col, ngram).withColumnRenamed(
-                "shingle", "token"
-            )
-        )
-
-    # corpus-sized item relation: never cached (see
-    # minhash_lsh_near_duplicates) — the inverted-index self-join reuses
-    # one exchange, and verification re-derives items for candidate docs
-    # only via a broadcast-semi-join-pruned second scan
-    items = items_of(df)
-    cand_items = items
-    if max_df is not None:
-        n_docs = df.select(id_col).distinct().count()
-        hot = (
-            items.groupBy("token")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") > max_df * n_docs)
-            .select("token")
-        )
-        cand_items = items.join(F.broadcast(hot), "token", "left_anti")
+    # corpus-sized item relation: never cached — the inverted-index
+    # self-join reuses one exchange
+    items = _doc_grams(df, id_col, text_col, ngram)
+    cand_items, _ = _drop_hot_grams(df, items, id_col, max_df)
     a = cand_items.withColumnRenamed(id_col, "id_a")
     b = cand_items.withColumnRenamed(id_col, "id_b")
     cands = (
@@ -412,16 +452,15 @@ def ngram_jaccard_pairs(
         .where(F.col("id_a") < F.col("id_b"))
         .select("id_a", "id_b")
         .distinct()
-        .persist()  # candidate-sized, feeds cand_ids + the verify join
     )
-    cand_ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .unionByName(cands.select(F.col("id_b").alias(id_col)))
-        .distinct()
+    return _verify_candidates(
+        cands,
+        df,
+        id_col,
+        lambda docs: _doc_grams(docs, id_col, text_col, ngram),
+        "token",
+        threshold,
     )
-    cand_docs = df.join(F.broadcast(cand_ids), id_col, "left_semi")
-    verify_items = items_of(cand_docs).persist()
-    return jaccard_verify(cands, verify_items, id_col, "token", threshold)
 
 
 def embedding_near_duplicates(
@@ -490,19 +529,22 @@ def near_duplicate_clusters(
     ``localCheckpoint``-ed: persist alone does NOT truncate the logical
     plan, so Catalyst would re-optimize a lineage that grows by one
     join+agg per round — checkpointing keeps every round's plan O(1),
-    and LAZY checkpoints let the per-round ``edges.count()`` (the
-    termination probe: contracted edge set empty ⟺ labels stationary)
-    be the single job that materializes the whole round. A final
-    pointer-doubling pass resolves the label forest to the exact
-    component minimum, with stationarity detected by a
-    TYPE-INDEPENDENT check: the exact decimal sum of md5 hashes over
-    (id, label) pairs. (Summing raw ids cast to decimal was
-    type-DEPENDENT: STRING ids cast to NULL on both sides and the loop
-    exited after one round with wrong clusters. Labels are
-    monotonically non-increasing, so any change flips at least one
-    row's hash; a cancelling collision across rows needs a 60-bit
-    multi-row coincidence — negligible, and the sum is decimal(38,0) so
-    it never overflows at any corpus size.)
+    and the round's stop probe is its only action.
+
+    Stop rule, the loop's only one: the contracted edge set is EMPTY
+    and every label is a ROOT, ``lab(lab(x)) == lab(x)``, both counted
+    by one action per round. Empty edges mean every connected pair
+    shares a representative, but a node's label can still point at an
+    intermediate representative whose own label moved later (forest
+    depth grows by ≤ 1 per round and halving compresses one level).
+    Once the edges are empty, propagation and contraction are no-ops
+    and are skipped, so further rounds are pure pointer doubling until
+    every label is a root, i.e. the component minimum. The root test
+    costs no join of its own: the round's halving join already pairs
+    ``lab(x)`` with ``lab(lab(x))``, and a halving that moves no label
+    found every label a root and left the labels unchanged. The test
+    compares ids with ids, so it is exact for every id type.
+    ``max_iter`` caps the loop at ``2 * max_iter`` rounds.
 
     Returns (id_col, cluster_id, cluster_size) for EVERY doc in
     ``all_ids``.
@@ -510,14 +552,18 @@ def near_duplicate_clusters(
     # eager-persist the pair relation BEFORE symmetrizing: the union has
     # two branches over `pairs`, which would otherwise evaluate the whole
     # upstream pair generator (minhash/LSH/verify) twice in one job.
-    # Candidate-sized by contract, so materializing it is cheap.
+    # Candidate-sized by contract, so materializing it is cheap. The one
+    # persist() of this module: a lazy localCheckpoint here instead ran
+    # more jobs (at sf0.001 q_entity_resolution 18 → 19, q_dedup_clusters
+    # 26 → 28).
     pairs = pairs.select(F.col(src_col).alias("a"), F.col(dst_col).alias("b")).persist()
     pairs.count()
     # LAZY localCheckpoints throughout the loop: localCheckpoint(False)
     # truncates the LOGICAL plan immediately (the returned frame is a
-    # LogicalRDD leaf) but defers materialization to the next action, so
-    # two propagation rounds + the convergence aggregate all ride ONE
-    # job. The eager variant cost 2 jobs per round (checkpoint + sum);
+    # LogicalRDD leaf). Under AQE the shuffle stages below it still run
+    # when it is made (1-7 jobs per checkpoint in a traced sf0.01
+    # q_entity_resolution); only its last stage waits for the round's
+    # stop probe. The eager variant cost one more job per checkpoint;
     # on small graphs the fixed per-job driver overhead dominated the
     # candidate-sized shuffles 4:1.
     edges = (
@@ -532,13 +578,12 @@ def near_duplicate_clusters(
     # round starts from what used to be its own propagation output and
     # the loop converges one round earlier. Equivalence: this IS the
     # round-1 neighbor-min from identity labels (labels are monotone
-    # non-increasing ids within the component, fixpoint unchanged, and
-    # the final pointer-doubling pass still resolves the exact
-    # component minimum). Per round at sf0.1 ≈ 0.7-1.6 s of fixed
-    # driver/stage overhead on a geometrically-shrinking edge set —
-    # the saved round is pure overhead (measured: 5 rounds → 4 on the
-    # sf0.1 entity-resolution match graph, edge trajectory
-    # 5634→738→64→4→0 before vs 2468→264→14→0 after, same output).
+    # non-increasing ids within the component, fixpoint unchanged).
+    # Per round at sf0.1 ≈ 0.7-1.6 s of fixed driver/stage overhead on
+    # a geometrically-shrinking edge set — the saved round is pure
+    # overhead (measured: 5 rounds → 4 on the sf0.1 entity-resolution
+    # match graph, edge trajectory 5634→738→64→4→0 before vs
+    # 2468→264→14→0 after, same output).
     labels = (
         edges.groupBy(F.col("a").alias("id"))
         .agg(F.min("b").alias("__nbrmin"))
@@ -547,11 +592,6 @@ def near_duplicate_clusters(
             F.least(F.col("id"), F.col("__nbrmin")).alias("lab"),
         )
         .localCheckpoint(eager=False)
-    )
-    state_sum = F.sum(
-        md5_i64(
-            F.concat_ws("|", F.col("id").cast("string"), F.col("lab").cast("string"))
-        ).cast("decimal(38,0)")
     )
     # Each round: (1) neighbor-min propagation, (2) pointer halving
     # lab <- lab(lab) (every label is itself a node id in the same
@@ -564,79 +604,59 @@ def near_duplicate_clusters(
     # component minimum hops between far-apart regions in one round
     # instead of flooding node by node (measured on the sf0.1 customer
     # match graph: 28 rounds without contraction, 5 with; the edge set
-    # shrank 5634 -> 738 -> 64 -> 4 -> 0). Termination = contracted
-    # edge set EMPTY: every connected pair shares a label, which makes
-    # labels stationary — no separate convergence aggregate, the
-    # edges.count() that drives the loop is the only action per round
-    # (one job: all checkpoints are lazy).
-    rounds = 0
+    # shrank 5634 -> 738 -> 64 -> 4 -> 0). The stop probe (edges left,
+    # labels the halving moved) is the only action per round; it runs
+    # the last stage of the round's lazy checkpoints.
+    rounds, n_edges = 0, None
     while True:
         rounds += 1
         if rounds > 2 * max_iter:
             raise RuntimeError(
                 f"connected components did not converge in {2 * max_iter} rounds"
             )
-        msgs = edges.join(labels, edges["a"] == labels["id"]).select(
-            F.col("b").alias("id"), F.col("lab")
-        )
-        propagated = (
-            labels.unionByName(msgs)
-            .groupBy("id")
-            .agg(F.min("lab").alias("lab"))
-        )
+        propagated = labels
+        if n_edges != 0:  # with no edges left, propagation is a no-op
+            msgs = edges.join(labels, edges["a"] == labels["id"]).select(
+                F.col("b").alias("id"), F.col("lab")
+            )
+            propagated = (
+                labels.unionByName(msgs)
+                .groupBy("id")
+                .agg(F.min("lab").alias("lab"))
+            )
         lablab = propagated.select(
             F.col("id").alias("__lid"), F.col("lab").alias("__llab")
         )
-        labels = (
+        halved = (
             propagated.join(lablab, propagated["lab"] == lablab["__lid"], "left")
             .select(
                 F.col("id"),
                 F.coalesce(F.col("__llab"), F.col("lab")).alias("lab"),
+                # halving moved x ⟺ its propagated label is not a root
+                (F.col("__llab") != F.col("lab")).alias("__moved"),
             )
             .localCheckpoint(eager=False)
         )
-        la = labels.select(F.col("id").alias("__ea"), F.col("lab").alias("__la"))
-        lb = labels.select(F.col("id").alias("__eb"), F.col("lab").alias("__lb"))
-        edges = (
-            edges.join(la, edges["a"] == la["__ea"])
-            .join(lb, edges["b"] == lb["__eb"])
-            .select(F.col("__la").alias("a"), F.col("__lb").alias("b"))
-            .where(F.col("a") != F.col("b"))
-            .distinct()
-            .localCheckpoint(eager=False)
-        )
-        if edges.count() == 0:
-            break
-    # RESOLUTION: contraction terminates on edge emptiness, which
-    # guarantees agreement among CURRENT representatives but can leave a
-    # node's label pointing at an intermediate representative whose own
-    # label moved later (forest depth grows ≤ 1 per round, halving only
-    # compresses one level). Pointer-double lab <- lab(lab) to the exact
-    # fixpoint — O(log depth) candidate-sized self-joins, stationarity
-    # by the same type-independent decimal hash sum as before (labels
-    # only decrease; a cancelling multi-row md5 collision is the same
-    # negligible 60-bit coincidence).
-    prev_sum = labels.agg(state_sum).first()[0]
-    for _ in range(max_iter):
-        lablab = labels.select(
-            F.col("id").alias("__lid"), F.col("lab").alias("__llab")
-        )
-        labels = (
-            labels.join(lablab, labels["lab"] == lablab["__lid"], "left")
-            .select(
-                F.col("id"),
-                F.coalesce(F.col("__llab"), F.col("lab")).alias("lab"),
+        labels = halved.select("id", "lab")
+        if n_edges != 0:  # ... and so is contraction
+            la = labels.select(F.col("id").alias("__ea"), F.col("lab").alias("__la"))
+            lb = labels.select(F.col("id").alias("__eb"), F.col("lab").alias("__lb"))
+            edges = (
+                edges.join(la, edges["a"] == la["__ea"])
+                .join(lb, edges["b"] == lb["__eb"])
+                .select(F.col("__la").alias("a"), F.col("__lb").alias("b"))
+                .where(F.col("a") != F.col("b"))
+                .distinct()
+                .localCheckpoint(eager=False)
             )
-            .localCheckpoint(eager=False)
+        left = edges.select(F.lit(1).alias("__e")).unionByName(
+            halved.where(F.col("__moved")).select(F.lit(0).alias("__e"))
         )
-        new_sum = labels.agg(state_sum).first()[0]
-        if new_sum == prev_sum:
+        n_left, n_edges = left.agg(
+            F.count(F.lit(1)), F.coalesce(F.sum("__e"), F.lit(0))
+        ).first()
+        if n_left == 0:
             break
-        prev_sum = new_sum
-    else:
-        raise RuntimeError(
-            f"label resolution did not converge in {max_iter} iterations"
-        )
     # internal label columns renamed before the final join so a caller
     # id column literally named "id"/"lab" never collides
     final_labels = labels.select(
@@ -839,20 +859,7 @@ def minhash_band_relation(
     sigs = minhash_signatures(
         doc_shingles(df, id_col, text_col, shingle_k), id_col, "shingle", num_hashes
     )
-    rows_per_band = num_hashes // bands
-    cols = []
-    for b in range(bands):
-        parts = [F.col(f"mh{b * rows_per_band + r}") for r in range(rows_per_band)]
-        cols.append(
-            # portable 60-bit int sig — see lsh_candidate_pairs
-            F.struct(
-                F.lit(b).alias("band"),
-                md5_i64(F.concat_ws("_", *parts)).alias("sig"),
-            )
-        )
-    return sigs.select(
-        F.col(id_col), F.explode(F.array(*cols)).alias("bk")
-    ).select(id_col, "bk.band", "bk.sig")
+    return _band_rows(sigs, id_col, num_hashes, bands)
 
 
 def minhash_band_counts(bands: DataFrame) -> DataFrame:
@@ -961,11 +968,14 @@ def minhash_lsh_incremental(
                 "md5 hex strings and would match zero candidates — "
                 "re-index the corpus with minhash_band_relation."
             )
-    # delta-sized by contract: persist so the corpus-probe join and the
-    # delta self-join don't each recompute the delta's signatures
-    probe = minhash_band_relation(
-        delta, id_col, text_col, shingle_k, num_hashes, bands
-    ).withColumnRenamed(id_col, "__id_d").persist()
+    # delta-sized by contract: a lazy local checkpoint, so the corpus-probe
+    # join and the delta self-join don't each recompute the delta's
+    # signatures
+    probe = (
+        minhash_band_relation(delta, id_col, text_col, shingle_k, num_hashes, bands)
+        .withColumnRenamed(id_col, "__id_d")
+        .localCheckpoint(eager=False)
+    )
     # the corpus probe and the delta self-probe are SEPARATE joins (not a
     # union of the index sides): a union would discard the corpus index's
     # bucketed output partitioning and force the corpus side to shuffle
@@ -1067,12 +1077,6 @@ def minhash_lsh_incremental(
             .join(probe_slow, ["band", "sig", "__sub"])
             .drop("__sub")
         )
-    # candidate pairs are delta-sized by contract: materialize them once
-    # (eager localCheckpoint truncates lineage, so the probe frames can
-    # be released NOW instead of leaking for the session's lifetime —
-    # checkpoint blocks are reclaimed by the ContextCleaner when the
-    # caller drops the result, unlike persist() which pins until an
-    # explicit unpersist)
     cands = (
         cand_corpus.unionByName(cand_delta)
         .where(F.col("__id_d") != F.col("__id_x"))
@@ -1081,21 +1085,15 @@ def minhash_lsh_incremental(
             F.greatest("__id_d", "__id_x").alias("id_b"),
         )
         .distinct()
-        .localCheckpoint(eager=True)
     )
-    probe.unpersist()
-    cand_ids = (
-        cands.select(F.col("id_a").alias(id_col))
-        .unionByName(cands.select(F.col("id_b").alias(id_col)))
-        .distinct()
+    return _verify_candidates(
+        cands,
+        corpus.unionByName(delta),
+        id_col,
+        lambda docs: doc_shingles(docs, id_col, text_col, shingle_k),
+        "shingle",
+        threshold,
     )
-    full = corpus.unionByName(delta)
-    cand_docs = full.join(F.broadcast(cand_ids), id_col, "left_semi")
-    # candidate-sized: recomputing the shingles for each side of the
-    # verify join is cheaper than pinning another persisted frame
-    cand_shingles = doc_shingles(cand_docs, id_col, text_col, shingle_k)
-    out = jaccard_verify(cands, cand_shingles, id_col, "shingle", threshold)
-    return out
 
 
 def containment_pairs(
@@ -1134,28 +1132,8 @@ def containment_pairs(
     containment = near-dup). The intersection is counted once per
     unordered pair and reused for both directions.
     """
-
-    def items_of(frame: DataFrame) -> DataFrame:
-        return (
-            doc_tokens(frame, id_col, text_col)
-            if ngram == 1
-            else doc_shingles(frame, id_col, text_col, ngram).withColumnRenamed(
-                "shingle", "token"
-            )
-        )
-
-    items = items_of(df)
-    cand_items = items
-    hot = None
-    if max_df is not None:
-        n_docs = df.select(id_col).distinct().count()
-        hot = (
-            items.groupBy("token")
-            .agg(F.count("*").alias("df"))
-            .where(F.col("df") > max_df * n_docs)
-            .select("token")
-        )
-        cand_items = items.join(F.broadcast(hot), "token", "left_anti")
+    items = _doc_grams(df, id_col, text_col, ngram)
+    cand_items, hot = _drop_hot_grams(df, items, id_col, max_df)
     # SELF-join through aliases of the SAME plan (not two renamed
     # copies): Catalyst's exchange reuse then shuffles the gram
     # relation ONCE and feeds both join sides from it — the r8
@@ -1173,9 +1151,8 @@ def containment_pairs(
         .agg(F.count("*").alias("inter"))
     )
     if hot is not None:
-        # candidate-pair-sized; referenced twice below (pair list + final
-        # join), so materialize once
-        inter_cold = inter_cold.persist()
+        # candidate-pair-sized; read twice below (pair list + final join)
+        inter_cold = inter_cold.localCheckpoint(eager=False)
         hot_items = items.join(F.broadcast(hot), "token", "left_semi")
         ha = hot_items.withColumnRenamed(id_col, "id_a")
         hb = hot_items.withColumnRenamed(id_col, "id_b")
@@ -1509,15 +1486,11 @@ def prefix_filter_join(
     """
     from pyspark.sql.window import Window
 
-    base = (
-        doc_shingles(df, id_col, text_col, k=shingle_k)
-        if shingle_k > 1
-        else doc_tokens(df, id_col, text_col)
+    toks = (
+        _doc_grams(df, id_col, text_col, shingle_k)
+        .select(F.col(id_col).alias("__id"), F.col("token").alias("__tok"))
+        .localCheckpoint(eager=False)
     )
-    item = "shingle" if shingle_k > 1 else "token"
-    toks = base.select(
-        F.col(id_col).alias("__id"), F.col(item).alias("__tok")
-    ).localCheckpoint(eager=False)
     freq = toks.groupBy("__tok").agg(F.count(F.lit(1)).alias("__f"))
     # canonical total order = (ascending corpus frequency, token) — but
     # NEVER materialized as a global dense rank: a vocab-wide

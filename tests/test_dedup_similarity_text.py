@@ -351,6 +351,30 @@ def test_near_duplicate_clusters_string_ids(spark):
     }
 
 
+@pytest.mark.parametrize(
+    "op",
+    [
+        lambda d: dedup.minhash_lsh_near_duplicates(d, "doc_id", "text", threshold=0.5),
+        lambda d: dedup.ngram_jaccard_pairs(d, "doc_id", "text", 0.5),
+        lambda d: dedup.containment_pairs(d, "doc_id", "text", 0.8, max_df=0.5),
+        lambda d: dedup.minhash_lsh_incremental(
+            d.where(F.col("doc_id") % 5 != 0), d.where(F.col("doc_id") % 5 == 0)
+        ),
+        lambda d: dedup.near_duplicate_clusters(
+            dedup.minhash_lsh_near_duplicates(d, "doc_id", "text"), d.select("doc_id")
+        ),
+    ],
+    ids=["minhash_lsh", "ngram_jaccard", "containment_max_df", "incremental", "clusters"],
+)
+def test_dedup_operators_leave_no_cached_frame(spark, documents, op):
+    """Candidate-sized frames are lazy local checkpoints, and the one
+    persist (the components input) is released before the operator
+    returns: nothing stays in the session's DataFrame cache."""
+    spark.catalog.clearCache()
+    op(documents).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 def test_gopher_flags_rules(spark):
     from ai_etl_pipeline_spark.operators import textstats as ts
 

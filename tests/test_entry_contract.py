@@ -1,10 +1,14 @@
 """Driver-contract smoke: entry() runs on a bare-config session, every
 queries() entry has a callable signature, oracle keys are a subset, and a
 representative sample — plus the paper's pipeline queries and every
-graph, k-NN and k-means query — hash-matches DuckDB under the parity
-tool's canonicalizer (the FULL sweep lives in tools/check_parity.py —
-this keeps CI fast)."""
+graph, k-NN, k-means and dedup query — hash-matches DuckDB under the
+parity tool's canonicalizer (the FULL sweep lives in tools/check_parity.py —
+this keeps CI fast). At sf0.001, a sample query listed in
+``JOBS_sf0001.json`` must also run exactly its recorded number of Spark
+jobs, counted by job id from the call to the end of ``toPandas`` with
+the DataFrame cache cleared first."""
 
+import json
 import os
 import sys
 
@@ -13,8 +17,12 @@ import pytest
 
 import __spark_entry__ as entrymod
 
-sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(__file__)), "tools"))
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, os.path.join(ROOT, "tools"))
 from check_parity import TABLES, frame_signature  # noqa: E402
+
+with open(os.path.join(ROOT, "JOBS_sf0001.json")) as _fh:
+    JOBS = json.load(_fh)["jobs"]
 
 SAMPLE = [
     "q_pricing_summary",
@@ -34,7 +42,17 @@ SAMPLE = [
     "q_clean_placeholders",
 ] + sorted(q for q in entrymod.queries() if q.startswith("q_graph_")) + sorted(
     q for q in entrymod.queries() if q.startswith("q_knn_")
-) + ["q_embed_kmeans", "q_semantic_dedup"]
+) + ["q_embed_kmeans", "q_semantic_dedup"] + sorted(
+    q
+    for q in entrymod.queries()
+    if q.startswith("q_dedup_") and q != "q_dedup_docs_exact"
+) + [
+    "q_entity_resolution",
+    "q_pipeline_curation_v2",
+    "q_pipeline_pretrain",
+    "q_decontaminate",
+    "q_decontaminate_score",
+]
 
 
 def test_entry_smoke(spark):
@@ -63,5 +81,13 @@ def duck(sf_dir):
 
 @pytest.mark.parametrize("name", SAMPLE)
 def test_sample_oracle_parity(spark, sf_dir, duck, name):
+    gated = name in JOBS and os.path.basename(os.path.normpath(sf_dir)) == "sf0.001"
+    if gated:
+        spark.catalog.clearCache()
+    dag = spark.sparkContext._jsc.sc().dagScheduler()
+    j0 = dag.nextJobId()
     got = frame_signature(entrymod.queries()[name](spark, sf_dir).toPandas())
+    jobs = dag.nextJobId() - j0
     assert got == frame_signature(duck.sql(entrymod.oracle_sql()[name]).df())
+    if gated:
+        assert jobs == JOBS[name], f"{name}: {jobs} jobs, JOBS_sf0001.json: {JOBS[name]}"
