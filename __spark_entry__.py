@@ -7084,7 +7084,7 @@ def q_dedup_incremental_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
         corpus, delta, "doc_id", "text", shingle_k=3, num_hashes=16, bands=8,
         threshold=0.5, corpus_bands=spark.table("__band_index_documents"),
         max_bucket=_LSH_MAX_BUCKET,
-        corpus_band_counts=spark.read.parquet(counts_path),
+        corpus_band_counts=read_parquet(spark, counts_path),
         check_disjoint=False,
     )
 
@@ -10548,7 +10548,7 @@ def q_source_partitioned(spark: SparkSession, sf_dir: str) -> DataFrame:
     from ai_etl_pipeline_spark.sources.writers import write_parquet
 
     write_parquet(li, out, partition_by=["l_returnflag"])
-    back = spark.read.parquet(out).where(F.col("l_returnflag") == "R")
+    back = read_parquet(spark, out).where(F.col("l_returnflag") == "R")
     return (
         back.groupBy("l_linestatus")
         .agg(
@@ -11294,12 +11294,12 @@ def q_events_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
                 .drop("__rn")
             )
             try:
-                snap = batch_df.sparkSession.read.parquet(state_dir)
+                snap = read_parquet(batch_df.sparkSession, state_dir)
             except Exception:
                 snap = changes.limit(0)
             merged = _cdc.merge_upsert(snap, changes, ["user_id"], "ts")
             merged.write.mode("overwrite").parquet(state_dir + ".tmp")
-            batch_df.sparkSession.read.parquet(state_dir + ".tmp").write.mode(
+            read_parquet(batch_df.sparkSession, state_dir + ".tmp").write.mode(
                 "overwrite"
             ).parquet(state_dir)
 
@@ -11312,7 +11312,7 @@ def q_events_stream_upsert(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         q.awaitTermination()
         out = (
-            spark.read.parquet(state_dir)
+            read_parquet(spark, state_dir)
             .select("user_id", "event_id", "ts", "event_type", "value")
             # snapshot is user-sized by construction; pin it before the
             # temp dir disappears
@@ -13281,7 +13281,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "q_dedup_prefix_filter": (q_dedup_prefix_filter, _DEDUP_PREFIX_FILTER_SQL),
     "q_graph_khop": (q_graph_khop, _graph_khop_sql()),
     "q_pipeline_pretrain": (q_pipeline_pretrain, _pipeline_pretrain_sql()),
-    "q_clean_mad_outliers": (q_clean_mad_outliers, _CLEAN_MAD_OUTLIERS_SQL),
+    "q_graph_link_prediction": (q_graph_link_prediction, _GRAPH_LINK_PREDICTION_SQL),
     "q_semantic_dedup": (q_semantic_dedup, _semantic_dedup_sql()),
     "q_knn_ivf": (q_knn_ivf, _knn_ivf_sql()),
     "q_events_stream_tumbling": (q_events_stream_tumbling, _EVENTS_TUMBLING_SQL),
@@ -13297,7 +13297,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "q_embed_whitening": (q_embed_whitening, _EMBED_WHITENING_SQL),
     "q_embed_mislabeled": (q_embed_mislabeled, _EMBED_MISLABELED_SQL),
     "q_media_phash_dedup": (q_media_phash_dedup, _MEDIA_PHASH_SQL),
-    "q_graph_link_prediction": (q_graph_link_prediction, _GRAPH_LINK_PREDICTION_SQL),
+    "q_clean_mad_outliers": (q_clean_mad_outliers, _CLEAN_MAD_OUTLIERS_SQL),
     "q_validate_referential": (q_validate_referential, _VALIDATE_REFERENTIAL_SQL),
     # --- unchanged entries (evidence from prior driver rounds stands) ---
     "q_text_language_mix": (q_text_language_mix, _TEXT_LANGUAGE_MIX_SQL),

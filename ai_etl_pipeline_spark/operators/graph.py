@@ -507,9 +507,16 @@ def k_core(
             keep.withColumnRenamed("n", "b"), "b", "left_semi"
         )
 
-    alive_e = _undirected(edges, src_col, dst_col).cache()
+    # cached for round 1 only: the round's checkpoint runs its shuffle
+    # stages here, and the cache's measured size lets AQE broadcast where
+    # a checkpoint's estimate would sort-merge (q_graph_kcore: 28 jobs;
+    # 36 with a lazy checkpoint, 40 with neither). Released once the
+    # rounds are planned, so no cache entry outlives the call; round 1's
+    # last stage, which runs with the caller's action, recomputes it.
+    first = alive_e = _undirected(edges, src_col, dst_col).cache()
     for _ in range(iterations):
         alive_e = peel(alive_e).localCheckpoint(eager=False)
+    first.unpersist()
     # convergence certificate: one extra peel round — the peel is a
     # monotone contraction (next_e ⊆ alive_e), so equal EDGE COUNTS
     # prove the fixpoint; one scalar-only broadcast crossJoin
@@ -810,11 +817,17 @@ def link_prediction(
         .where(F.col("__s").isNotNull() & F.col("__d").isNotNull())
         .distinct()
     )
-    sdeg = e.groupBy("__s").agg(F.count(F.lit(1)).cast("bigint").alias("__sd"))
+    from pyspark.sql import Window
+
     ddeg = e.groupBy("__d").agg(F.count(F.lit(1)).cast("bigint").alias("__dd"))
-    wedge = e.join(sdeg, "__s").where(
-        (F.col("__sd") >= 2) & (F.col("__sd") <= max_src_degree)
-    )
+    # src degree as a window over e's own __s clustering, not a join to a
+    # degree aggregate: AQE turned both wedge joins into broadcasts of e
+    # at runtime, and the finished plan built that broadcast once or
+    # twice from call to call (9 or 10 jobs per q_graph_link_prediction
+    # on one-partition reads); the window leaves no such join
+    wedge = e.withColumn(
+        "__sd", F.count(F.lit(1)).over(Window.partitionBy("__s")).cast("bigint")
+    ).where((F.col("__sd") >= 2) & (F.col("__sd") <= max_src_degree))
     a = wedge.select("__s", F.col("__d").alias("node_a"), "__sd")
     b = wedge.select("__s", F.col("__d").alias("node_b"))
     scored = (

@@ -77,6 +77,7 @@ from ..semantic.providers import (
     detect_column_languages,
     propose_column_mapping,
 )
+from ..sources.readers import read_parquet
 
 
 # Stage 1's record of each translated frame it returns, keyed by that
@@ -147,7 +148,7 @@ class ParquetCheckpointer:
         if not os.path.exists(os.path.join(path, "_SUCCESS")):
             build().write.mode("overwrite").parquet(path)
             self.computed.append(name)
-        return self.spark.read.parquet(path)
+        return read_parquet(self.spark, path)
 
 
 def run_curation_pipeline_checkpointed(

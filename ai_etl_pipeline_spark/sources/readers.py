@@ -26,6 +26,39 @@ directories, paths that are not local files, nanosecond timestamps
 (INT96 included, which Arrow reads as nanoseconds), unsigned integers
 and any type outside the set, footers that disagree, and duplicate
 column names.
+
+A local directory counts as its data files: every file in it whose name
+does not start with ``_`` or ``.`` (Spark skips those too), one footer
+each. The frame is still read from the directory, so Spark lists it
+itself. A directory that holds a directory (a ``k=v/`` partitioned
+layout, or a write in progress) and a ``mergeSchema`` read keep Spark's
+own inference.
+
+One partition, planned as one. A file scan reports
+``UnknownPartitioning``, so even when Spark plans a source as one
+partition it puts a hash exchange before every dedup, distinct, window,
+grouped or global aggregate and sort over it: one more stage, and one
+more Spark job under AQE, to move rows that already sit together. So
+every batch frame a reader here returns goes through ``_one_partition``:
+when the scan Spark plans for it has exactly one partition, the frame is
+``coalesce(1)`` over that scan. ``CoalesceExec(1)`` reports
+``SinglePartition``, which satisfies every clustered, ordered and
+all-tuples distribution, so those exchanges go. A join still shuffles
+where Spark estimates a side above ``spark.sql.maxSinglePartitionBytes``. The count is read from the input RDD of the scan in the
+frame's physical plan, so the rule keeps Spark's own row-to-partition
+assignment and results cannot change. Reading it starts no job and
+compiles no code; it costs about 25 ms per read warm on a 4-core box,
+and 0.6–0.7 s on the first read of a process, most of it class loading
+the first scan pays anyway (after a scan, the first check took 60 ms).
+
+Several non-empty files, or one splittable file larger than
+``spark.sql.files.openCostInBytes`` (4 MB), never plan as one partition
+on a session with more than one core: split packing charges each file
+that open cost, and the split size is the larger of the open cost and
+the total, open costs included, over the cores. One unsplittable file (a gzipped CSV or JSON) is one
+partition at any size, so it takes the rule: what follows the scan then
+runs in the scan's one task up to the first operator that plans its own
+exchange.
 """
 
 from __future__ import annotations
@@ -49,7 +82,17 @@ def read_parquet(spark: SparkSession, *paths: str) -> DataFrame:
     module docstring), so building the frame starts no Spark job."""
     schema = footer_schema(spark, paths)
     reader = spark.read if schema is None else spark.read.schema(schema)
-    return reader.parquet(*paths)
+    return _one_partition(reader.parquet(*paths))
+
+
+def _one_partition(df: DataFrame) -> DataFrame:
+    """``df``, a bare scan, as ``coalesce(1)`` when the scan Spark plans
+    for it has exactly one partition; otherwise ``df`` itself (see the
+    module docstring)."""
+    leaves = df._jdf.queryExecution().sparkPlan().collectLeaves()
+    if leaves.length() == 1 and leaves.head().inputRDD().getNumPartitions() == 1:
+        return df.coalesce(1)
+    return df
 
 
 def local_path(path: str) -> str:
@@ -64,13 +107,14 @@ def local_path(path: str) -> str:
 def footer_schema(spark: SparkSession, paths) -> StructType | None:
     """The schema Spark would infer for ``paths``, read from their
     footers on the driver; None where only Spark's inference can say."""
-    if not paths or not all(os.path.isfile(p) for p in paths):
+    files = _data_files(paths)
+    if not files:
         return None
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     schema = None
-    for p in paths:
+    for p in files:
         try:
             arrow = pq.read_schema(p)
         except (OSError, pa.ArrowException):
@@ -81,6 +125,25 @@ def footer_schema(spark: SparkSession, paths) -> StructType | None:
         schema = one
     names = [f.name.lower() for f in schema.fields]
     return schema if len(set(names)) == len(names) else None
+
+
+def _data_files(paths) -> list[str]:
+    """The local files behind ``paths``: a file is itself, a directory of
+    files is its files not named ``_*`` or ``.*``; empty when any path is
+    neither (a directory holding a directory included)."""
+    files = []
+    for p in paths:
+        if os.path.isfile(p):
+            files.append(p)
+            continue
+        if not os.path.isdir(p):
+            return []
+        with os.scandir(p) as entries:
+            entries = list(entries)
+        if any(e.is_dir() for e in entries):
+            return []
+        files += sorted(e.path for e in entries if not e.name.startswith(("_", ".")))
+    return files
 
 
 def _spark_schema(spark: SparkSession, arrow) -> StructType | None:
@@ -152,7 +215,7 @@ def read_parquet_nanos_ts(spark: SparkSession, path: str, ts_cols: tuple[str, ..
 def read_csv(spark: SparkSession, path: str, infer_schema: bool = True) -> DataFrame:
     """S1: header + whole-file dtype inference, mirroring
     ``pd.read_csv(low_memory=False)`` semantics declaratively."""
-    return spark.read.csv(path, header=True, inferSchema=infer_schema)
+    return _one_partition(spark.read.csv(path, header=True, inferSchema=infer_schema))
 
 
 def read_excel_sheets(spark: SparkSession, path: str) -> dict[str, DataFrame]:
@@ -212,7 +275,7 @@ def read_jsonl(spark: SparkSession, path: str, schema=None) -> DataFrame:
     reader = spark.read
     if schema is not None:
         reader = reader.schema(schema)
-    return reader.json(path)
+    return _one_partition(reader.json(path))
 
 
 def zone_map_manifest(spark: SparkSession, path: str, cols: list[str]) -> DataFrame:
@@ -226,7 +289,7 @@ def zone_map_manifest(spark: SparkSession, path: str, cols: list[str]) -> DataFr
 
     Returns ``(file_path, n_rows, min_<c>, max_<c>, nulls_<c>, ...)``.
     """
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     aggs: list = [F.count(F.lit(1)).alias("n_rows")]
     for c in cols:
         aggs.append(F.min(c).alias(f"min_{c}"))
@@ -277,7 +340,7 @@ def zone_map_pruned_scan(
     if hi is not None:
         pred = pred & (F.col(col) <= hi)
     if not files:
-        return spark.read.parquet(path).where(F.lit(False))
+        return read_parquet(spark, path).where(F.lit(False))
     return read_parquet(spark, *files).where(pred)
 
 
@@ -313,7 +376,7 @@ def bloom_index_manifest(
         raise ValueError(f"m_bits must be a positive multiple of 64, got {m_bits}")
     if not (1 <= num_hashes <= 16):
         raise ValueError(f"num_hashes must be in [1,16], got {num_hashes}")
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     pos = F.explode(
         F.array(
             *[
@@ -397,7 +460,7 @@ def bloom_index_pruned_scan(
         for r in probed.where(probe).select("file_path").collect()
     ]
     if not files:
-        return spark.read.parquet(path).where(F.lit(False))
+        return read_parquet(spark, path).where(F.lit(False))
     return read_parquet(spark, *files).where(F.col(col) == value)
 
 
@@ -409,7 +472,7 @@ def read_parquet_evolved(spark: SparkSession, path: str) -> DataFrame:
     columns over years and no one rewrites old partitions. Merging
     reads one footer per file at planning time (not the data), and the
     per-file scans remain pushdown-capable columnar scans."""
-    return spark.read.option("mergeSchema", True).parquet(path)
+    return _one_partition(spark.read.option("mergeSchema", True).parquet(path))
 
 
 def read_orc(spark: SparkSession, path: str, columns: list[str] | None = None) -> DataFrame:
@@ -420,7 +483,7 @@ def read_orc(spark: SparkSession, path: str, columns: list[str] | None = None) -
     parallelism per stripe — so an ORC-shaped upstream needs no convert
     step before querying. ``columns`` applies an explicit projection at
     the scan."""
-    df = spark.read.orc(path)
+    df = _one_partition(spark.read.orc(path))
     return df.select(*columns) if columns else df
 
 
@@ -447,7 +510,7 @@ def read_fixed_width(
     ``writers.write_fixed_width``)."""
     if not fields:
         raise ValueError("read_fixed_width: need at least one field")
-    raw = spark.read.text(path)
+    raw = _one_partition(spark.read.text(path))
     cols = []
     pos = 1
     for name, width, typ in fields:

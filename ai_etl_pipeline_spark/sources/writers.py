@@ -17,6 +17,8 @@ import os
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .readers import read_parquet
+
 
 def write_parquet(df: DataFrame, path: str, mode: str = "overwrite", partition_by: list[str] | None = None) -> None:
     """The scale-path sink. ``partition_by`` enables partition pruning for
@@ -106,7 +108,7 @@ def compact_parquet(
     import glob
     import shutil
 
-    df = spark.read.parquet(path)
+    df = read_parquet(spark, path)
     if target_files is None:
         total = sum(
             os.path.getsize(f) for f in glob.glob(os.path.join(path, "*.parquet"))

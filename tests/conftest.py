@@ -1,3 +1,4 @@
+import contextlib
 import os
 import sys
 
@@ -29,6 +30,30 @@ def default_partitions(spark):
         yield DEFAULT_SHUFFLE_PARTITIONS
     finally:
         spark.conf.set("spark.sql.shuffle.partitions", prev)
+
+
+@contextlib.contextmanager
+def split_file_reads(spark):
+    """File reads planned inside the block split even a small file into
+    several partitions: the split size falls to a few KB."""
+    confs = {"spark.sql.files.maxPartitionBytes": "4096", "spark.sql.files.openCostInBytes": "1024"}
+    prev = {k: spark.conf.get(k) for k in confs}
+    for k, v in confs.items():
+        spark.conf.set(k, v)
+    try:
+        yield
+    finally:
+        for k, v in prev.items():
+            spark.conf.set(k, v)
+
+
+@pytest.fixture
+def split_reads(spark):
+    """``split_file_reads`` for one test: its reads keep Spark's
+    multi-partition plan instead of the one-partition rule of
+    ``sources.readers``."""
+    with split_file_reads(spark):
+        yield
 
 
 @pytest.fixture(scope="session")

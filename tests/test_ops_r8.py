@@ -275,6 +275,16 @@ def test_k_core_star_is_empty_at_k2(spark):
     assert graph.k_core(e, 2, iterations=3).count() == 0
 
 
+def test_q_graph_kcore_leaves_no_cached_frame(spark, sf_dir):
+    # k_core caches its first edge set for round 1 and releases it
+    # before returning: nothing stays in the session's DataFrame cache
+    import __spark_entry__ as entry
+
+    spark.catalog.clearCache()
+    entry.q_graph_kcore(spark, sf_dir).collect()
+    assert spark._jsparkSession.sharedState().cacheManager().isEmpty()
+
+
 # ---------------------------------------------------------------- count-min
 
 def test_countmin_rollup_merge_equals_direct_and_overestimates(spark):

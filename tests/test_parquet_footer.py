@@ -23,7 +23,10 @@ SPARK_TYPES = """select cast(1.5 as decimal(10, 2)) d, date'2024-01-05' dt,
   array(1, 2) arr, named_struct('a', 1L, 'b', 'x') st, map('k', 1.5D) m,
   cast(null as string) s"""
 # footer-path cases, then the ones Spark must infer itself
-WRITTEN = {"spark_types": True, "spark_int96": True, "uint32": False, "nanos": False, "directory": False}
+WRITTEN = {
+    "spark_types": True, "spark_int96": True, "directory": True,
+    "uint32": False, "nanos": False, "partitioned": False,
+}
 
 
 @pytest.fixture(scope="module")
@@ -37,6 +40,7 @@ def written(spark, tmp_path_factory):
             spark.sql(SPARK_TYPES).coalesce(1).write.parquet(str(root / case))
     finally:
         spark.conf.set("spark.sql.parquet.outputTimestampType", prev)
+    spark.sql(SPARK_TYPES).write.partitionBy("s").parquet(str(root / "partitioned"))
     pq.write_table(
         pa.table({"k": pa.array([1, 2], pa.int64()), "u": pa.array([3, 4], pa.uint32())}),
         root / "uint32.parquet",
@@ -49,6 +53,7 @@ def written(spark, tmp_path_factory):
         "uint32": str(root / "uint32.parquet"),
         "nanos": str(root / "nanos.parquet"),
         "directory": str(root / "spark_types"),
+        "partitioned": str(root / "partitioned"),
     }
 
 
@@ -89,9 +94,12 @@ def _max_job_id(spark) -> int:
 def test_local_parquet_reads_start_no_job(spark, sf_dir, tmp_path):
     base = str(tmp_path / "store")
     versioned.versioned_write(entry._t(spark, sf_dir, "nation"), base, n_files=2)
+    directory = str(tmp_path / "region")
+    entry._t(spark, sf_dir, "region").write.parquet(directory)
     before = _max_job_id(spark)
     assert entry._t(spark, sf_dir, "lineitem").schema.names[0] == "l_orderkey"
     assert versioned.snapshot_read(spark, base, 1).schema.names[0] == "n_nationkey"
+    assert read_parquet(spark, directory).schema.names[0] == "r_regionkey"
     assert _max_job_id(spark) == before
 
 

@@ -37,10 +37,11 @@ from ai_etl_pipeline_spark.plans import pipeline
 from ai_etl_pipeline_spark.operators import distinct
 from ai_etl_pipeline_spark.semantic import HeuristicProvider
 from ai_etl_pipeline_spark.sources import readers, writers
+from conftest import split_file_reads
 
-JOB_BUDGET = 16
-MERGE_JOB_BUDGET = 18
-RECLEAN_JOB_BUDGET = 23
+JOB_BUDGET = 12
+MERGE_JOB_BUDGET = 13
+RECLEAN_JOB_BUDGET = 16
 _GROUPS = itertools.count()
 
 
@@ -184,16 +185,24 @@ def _shuffle_writing_stages(spark, group: str) -> int:
 
 
 def test_translation_builds_distinct_values_once(spark, tmp_path):
-    df, _, _ = _inputs(spark, tmp_path, 2)
-    padded = F.concat(F.lit("  "), F.col("Merchant"), F.lit(" "))
-    df = df.withColumn("Merchant", F.when(F.col("Code") == "C01", padded).otherwise(F.col("Merchant")))
-    provider = HeuristicProvider(translation_overlay={v: f"EN {v}" for v in _GERMAN + _TRIPS})
-    with _job_group(spark) as group:
-        translated, stage1 = plans.run_translation_pipeline(df, provider)
+    for split in (True, False):
+        _builds_distinct_values_once(spark, tmp_path / ("split" if split else "one"), split)
+
+
+def _builds_distinct_values_once(spark, tmp_path, split: bool):
+    with split_file_reads(spark) if split else contextlib.nullcontext():
+        df, _, _ = _inputs(spark, tmp_path, 2)
+        padded = F.concat(F.lit("  "), F.col("Merchant"), F.lit(" "))
+        df = df.withColumn("Merchant", F.when(F.col("Code") == "C01", padded).otherwise(F.col("Merchant")))
+        provider = HeuristicProvider(translation_overlay={v: f"EN {v}" for v in _GERMAN + _TRIPS})
+        with _job_group(spark) as group:
+            translated, stage1 = plans.run_translation_pipeline(df, provider)
     try:
-        # the numeric probe, the dedup, the distinct and the samples' window;
-        # the translator's values are a filter of the cached distinct relation
-        assert _shuffle_writing_stages(spark, group) == 4
+        # over a CSV read in several partitions: the numeric probe, the
+        # dedup, the distinct and the samples' window; the translator's
+        # values are a filter of the cached distinct relation. Over one
+        # partition none of them shuffles.
+        assert _shuffle_writing_stages(spark, group) == (4 if split else 0)
         cleaned = stage1["cleaned"]
         targets = stage1["translated_columns"]
         assert targets == ["merchant", "trip_name"]
@@ -340,7 +349,7 @@ def test_pipeline_mapping_error_releases_its_caches(spark, tmp_path):
     assert _persisted(spark) == before
 
 
-def test_pipeline_sinks_are_sized_by_aqe(spark, tmp_path, default_partitions):
+def test_pipeline_sinks_are_sized_by_aqe(spark, tmp_path, default_partitions, split_reads):
     df, dest, _ = _inputs(spark, tmp_path, 2)
     translated, stage1 = plans.run_translation_pipeline(df, HeuristicProvider())
     try:

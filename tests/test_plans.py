@@ -7,6 +7,7 @@ covers the pipelines.
 """
 
 import __spark_entry__ as entrymod
+from conftest import split_file_reads
 
 
 def _plan(spark, sf_dir, name, execute: bool = False) -> str:
@@ -14,6 +15,14 @@ def _plan(spark, sf_dir, name, execute: bool = False) -> str:
     if execute:  # AQE finalizes (and codegens) only on execution
         df.collect()
     return df._jdf.queryExecution().executedPlan().toString()
+
+
+def _split_plan(spark, sf_dir, name) -> str:
+    """``name``'s physical plan over tables read in several partitions,
+    where Spark plans every exchange itself (a table read as one
+    partition is planned as one, see ``sources.readers``)."""
+    with split_file_reads(spark):
+        return _plan(spark, sf_dir, name)
 
 
 def _optimized(spark, sf_dir, name) -> str:
@@ -135,9 +144,11 @@ def test_minhash_band_join_reuses_exchange(spark, sf_dir):
 
 def test_sessionize_single_shuffle(spark, sf_dir):
     # repartition(user_id) + both window functions must share ONE
-    # hash(user_id) exchange
-    plan = _plan(spark, sf_dir, "q_events_sessionize")
+    # hash(user_id) exchange; the explicit repartition keeps it over a
+    # one-partition read too
+    plan = _split_plan(spark, sf_dir, "q_events_sessionize")
     assert plan.count("Exchange hashpartitioning") == 1
+    assert _plan(spark, sf_dir, "q_events_sessionize").count("Exchange") == 1
 
 
 def test_asof_join_single_shuffle_no_range_explosion(spark):
@@ -183,20 +194,24 @@ def test_cluster_iteration_plans_stay_constant(spark):
 
 def test_chunk_pack_single_shuffle(spark, sf_dir):
     # concat-and-chunk packing: one exchange (the shard key), then pure
-    # window + explode arithmetic — the whole packing stage is codegen-able
-    plan = _plan(spark, sf_dir, "q_pack_chunks")
+    # window + explode arithmetic — the whole packing stage is codegen-able;
+    # no exchange at all over a one-partition read
+    plan = _split_plan(spark, sf_dir, "q_pack_chunks")
     assert plan.count("Exchange hashpartitioning") == 1
+    assert _plan(spark, sf_dir, "q_pack_chunks").count("Exchange") == 0
     assert "Generate explode" in plan  # sequence/explode, not a UDF
     assert "ArrowEvalPython" not in plan and "BatchEvalPython" not in plan
 
 
 def test_next_fit_pack_is_arrow_grouped(spark, sf_dir):
     # the sequential packing variant runs as ONE grouped Arrow stage on
-    # the shard key — no row-at-a-time Python, no second shuffle
-    plan = _plan(spark, sf_dir, "q_pack_sequences")
+    # the shard key — no row-at-a-time Python, no second shuffle; no
+    # exchange at all over a one-partition read
+    plan = _split_plan(spark, sf_dir, "q_pack_sequences")
     assert "FlatMapGroupsInPandas" in plan
     assert "BatchEvalPython" not in plan
     assert plan.count("Exchange hashpartitioning") == 1
+    assert _plan(spark, sf_dir, "q_pack_sequences").count("Exchange") == 0
 
 
 def test_quantile_filter_broadcasts_thresholds(spark, sf_dir):
@@ -208,9 +223,11 @@ def test_quantile_filter_broadcasts_thresholds(spark, sf_dir):
 
 
 def test_merge_upsert_single_shuffle(spark, sf_dir):
-    # union + key window: one exchange total, regardless of source count
-    plan = _plan(spark, sf_dir, "q_merge_upsert")
+    # union + key window: one exchange total, regardless of source count;
+    # none over one-partition reads
+    plan = _split_plan(spark, sf_dir, "q_merge_upsert")
     assert plan.count("Exchange hashpartitioning") == 1
+    assert _plan(spark, sf_dir, "q_merge_upsert").count("Exchange") == 0
     assert "Union" in plan
 
 
@@ -500,10 +517,12 @@ def test_link_prediction_wedges_are_filtered_before_selfjoin(spark, sf_dir):
         for i, ln in enumerate(lines)
         if "Join Inner" in ln and "node_a" in ln and "node_b" in ln and "__s" in ln
     ]
+    # the cap filters the src-degree window's column, which the optimizer
+    # renames from __sd to the window's own output name
     cap = [
         i
         for i, ln in enumerate(lines)
-        if "Filter" in ln and "__sd" in ln and "<= 64" in ln
+        if "Filter" in ln and "<= 64)" in ln and ("__sd" in ln or "_we" in ln)
     ]
     assert wedge, f"wedge self-join not found in plan:\n{plan}"
     assert cap, f"degree-cap filter (__sd <= 64) not found in plan:\n{plan}"
