@@ -2294,6 +2294,24 @@ FROM (
 """
 
 
+def _sample_quantizers(emb: DataFrame):
+    """The IVF centroids (8 cells) and PQ codebooks (4×16) the sampled
+    k-NN queries share: the top-256 hash-ranked sample, collected ONCE
+    (256 × 64 doubles — bounded by contract) and trained DRIVER-SIDE
+    (kmeans_centroids_local / pq_train_local, bit-identical to the
+    distributed path — asserted in tests/test_guards_r12.py): a 256-row
+    Lloyd round through Spark is ~6 AQE jobs of pure scheduling
+    overhead per index. Returns ``(cents, books)``."""
+    rows = [
+        (r["vec_id"], [float(x) for x in r["embedding"]])
+        for r in similarity.hash_ranked_sample(emb, "vec_id", 256).collect()
+    ]
+    return (
+        similarity.kmeans_centroids_local(rows, k=8, iterations=2),
+        similarity.pq_train_local(rows, m=4, codebook_k=16, iterations=2),
+    )
+
+
 def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF + PQ composed (IVFADC, r13 verdict missing #1): the coarse
     quantizer (8 cells, kmeans_centroids_local) prunes to nprobe=2
@@ -2305,12 +2323,7 @@ def q_knn_ivfpq(spark: SparkSession, sf_dir: str) -> DataFrame:
     probes (_ivf_cells_sql), all four codebook chains
     (_pq_kmeans_chain_sql) and the ADC arithmetic in lockstep."""
     emb = _t(spark, sf_dir, "embeddings")
-    rows = [
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in similarity.hash_ranked_sample(emb, "vec_id", 256).collect()
-    ]
-    cents = similarity.kmeans_centroids_local(rows, k=8, iterations=2)
-    books = similarity.pq_train_local(rows, m=4, codebook_k=16, iterations=2)
+    cents, books = _sample_quantizers(emb)
     return similarity.ivfpq_knn(
         emb, emb.where(F.col("vec_id") < 5), k=5, nprobe=2,
         centroids=cents, codebooks=books,
@@ -2325,12 +2338,7 @@ def q_knn_ivfpq_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     composed index). The oracle replays the ADC candidate tier and the
     exact-cosine rescoring."""
     emb = _t(spark, sf_dir, "embeddings")
-    rows = [
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in similarity.hash_ranked_sample(emb, "vec_id", 256).collect()
-    ]
-    cents = similarity.kmeans_centroids_local(rows, k=8, iterations=2)
-    books = similarity.pq_train_local(rows, m=4, codebook_k=16, iterations=2)
+    cents, books = _sample_quantizers(emb)
     return similarity.ivfpq_knn(
         emb, emb.where(F.col("vec_id") < 5), k=5, nprobe=2,
         centroids=cents, codebooks=books, rerank_candidates=15,
@@ -2351,12 +2359,7 @@ def q_knn_ivfpq_incremental(spark: SparkSession, sf_dir: str) -> DataFrame:
     quantizers train on the full-corpus top-256 hash-ranked sample
     BEFORE the split (frozen means frozen)."""
     emb = _t(spark, sf_dir, "embeddings")
-    rows = [
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in similarity.hash_ranked_sample(emb, "vec_id", 256).collect()
-    ]
-    cents = similarity.kmeans_centroids_local(rows, k=8, iterations=2)
-    books = similarity.pq_train_local(rows, m=4, codebook_k=16, iterations=2)
+    cents, books = _sample_quantizers(emb)
     base = emb.where(F.col("vec_id") % 10 != 7)
     delta = emb.where(F.col("vec_id") % 10 == 7)
     # base lists enter UNCACHED (single-use inside one registry query —
@@ -2491,18 +2494,7 @@ def q_knn_recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
         # contract, so the checkpoint is panel-sized, never corpus-sized)
         .localCheckpoint()
     )
-    # one shared training sample for both trained tiers, collected ONCE
-    # (256 × 64 doubles — bounded by contract) and trained DRIVER-SIDE
-    # (kmeans_centroids_local / pq_train_local, bit-identical to the
-    # distributed path — asserted in tests/test_guards_r12.py): a
-    # 256-row Lloyd round through Spark is ~6 AQE jobs of pure
-    # scheduling overhead per index
-    rows = [
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in similarity.hash_ranked_sample(emb, "vec_id", 256).collect()
-    ]
-    cents = similarity.kmeans_centroids_local(rows, k=8, iterations=2)
-    books = similarity.pq_train_local(rows, m=4, codebook_k=16, iterations=2)
+    cents, books = _sample_quantizers(emb)
     exact = similarity.brute_force_knn(emb, qs, k=5)
     tiers = {
         # r15: auto-sized bits (lsh_bits_for); the spliced _KNN_LSH_SQL
@@ -12134,13 +12126,7 @@ def q_knn_rank_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     cost does not grow with the corpus (r11 verdict #1)."""
     emb = _t(spark, sf_dir, "embeddings")
     qs = emb.where(F.col("vec_id") < 5)
-    # collect-once + driver-side training, like q_knn_recall_report
-    rows = [
-        (r["vec_id"], [float(x) for x in r["embedding"]])
-        for r in similarity.hash_ranked_sample(emb, "vec_id", 256).collect()
-    ]
-    cents = similarity.kmeans_centroids_local(rows, k=8, iterations=2)
-    books = similarity.pq_train_local(rows, m=4, codebook_k=16, iterations=2)
+    cents, books = _sample_quantizers(emb)
     exact = similarity.brute_force_knn(emb, qs, k=5)
     tiers = {
         # r15: auto-sized bits (lsh_bits_for); the spliced _KNN_LSH_SQL
@@ -13226,7 +13212,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "q_translate_distributed": (q_translate_distributed, _translate_distributed_sql()),
     "q_graph_pagerank_weighted": (q_graph_pagerank_weighted, _pagerank_weighted_sql()),
     "q_entity_resolution": (q_entity_resolution, _ENTITY_RESOLUTION_SQL),
-    "q_clean_placeholders": (q_clean_placeholders, _CLEAN_PLACEHOLDERS_SQL),
+    "q_semantic_dedup": (q_semantic_dedup, _semantic_dedup_sql()),
     "q_clean_numeric_cast": (q_clean_numeric_cast, _CLEAN_NUMERIC_SQL),
     "q_distinct_values": (q_distinct_values, _DISTINCT_VALUES_SQL),
     "q_cdc_time_travel": (q_cdc_time_travel, _CDC_TIME_TRAVEL_SQL),
@@ -13259,8 +13245,8 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     #     and broadcast-join sizes) whose applier the one trimmed key
     #     contract changed swap slots with two unchanged r16-green
     #     entries (q_dedup_clusters, q_dedup_keep_best). ---
-    "q_map_values_literal": (q_map_values_literal, _MAP_LITERAL_SQL),
-    "q_map_values_broadcast": (q_map_values_broadcast, _MAP_BROADCAST_SQL),
+    "q_knn_ivf": (q_knn_ivf, _knn_ivf_sql()),
+    "q_knn_pq": (q_knn_pq, _knn_pq_sql()),
     "q_events_stream_ewma": (q_events_stream_ewma, _EVENTS_STREAM_EWMA_SQL),
     "q_graph_pagerank_directed_personalized": (
         q_graph_pagerank_directed_personalized,
@@ -13282,8 +13268,8 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "q_graph_khop": (q_graph_khop, _graph_khop_sql()),
     "q_pipeline_pretrain": (q_pipeline_pretrain, _pipeline_pretrain_sql()),
     "q_graph_link_prediction": (q_graph_link_prediction, _GRAPH_LINK_PREDICTION_SQL),
-    "q_semantic_dedup": (q_semantic_dedup, _semantic_dedup_sql()),
-    "q_knn_ivf": (q_knn_ivf, _knn_ivf_sql()),
+    "q_clean_placeholders": (q_clean_placeholders, _CLEAN_PLACEHOLDERS_SQL),
+    "q_map_values_literal": (q_map_values_literal, _MAP_LITERAL_SQL),
     "q_events_stream_tumbling": (q_events_stream_tumbling, _EVENTS_TUMBLING_SQL),
     "q_events_stream_dedup": (q_events_stream_dedup, _EVENTS_STREAM_DEDUP_SQL),
     "q_events_stream_enrich": (q_events_stream_enrich, _EVENTS_STREAM_ENRICH_SQL),
@@ -13457,7 +13443,7 @@ _REGISTRY: dict[str, tuple[Callable[[SparkSession, str], DataFrame], str | None]
     "q_sample_weighted": (q_sample_weighted, _SAMPLE_WEIGHTED_SQL),
     "q_split_group_holdout": (q_split_group_holdout, _SPLIT_GROUP_SQL),
     "q_embed_hard_negatives": (q_embed_hard_negatives, _EMBED_HARD_NEG_SQL),
-    "q_knn_pq": (q_knn_pq, _knn_pq_sql()),
+    "q_map_values_broadcast": (q_map_values_broadcast, _MAP_BROADCAST_SQL),
     "q_agg_hll_overlap": (q_agg_hll_overlap, _AGG_HLL_OVERLAP_SQL),
     "q_events_stream_late": (q_events_stream_late, _EVENTS_STREAM_LATE_SQL),
     "q_source_synthetic_docs": (q_source_synthetic_docs, _synthetic_docs_sql()),

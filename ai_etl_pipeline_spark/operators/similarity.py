@@ -3,13 +3,25 @@ ABSENT in the reference — nearest public analog is Spark MLlib's
 BucketedRandomProjectionLSH, re-expressed here without the ML pipeline
 dependency so plans stay pure DataFrame).
 
-Two tiers:
-- brute-force cosine top-k: exact, cross-join + per-query heap
-  (TakeOrdered per group). Right answer for ≤10^5 corpus or for
-  verifying the approximate tier.
-- LSH-bucketed ANN: deterministic sign-bucket per vector, candidates =
-  same-bucket (or neighboring-bucket) pairs. The bucket key shuffles a
-  100 TB corpus once; queries probe only their bucket.
+Every k-NN tier is one pipeline shape: candidates → score → ``_top_k``.
+- candidates: the whole corpus (brute_force_knn, pq_knn), the query's
+  sign-LSH buckets (lsh_knn), or the corpus rows in the query's
+  ``nprobe`` nearest IVF cells (ivf_knn, ivfpq_knn; ``_probe`` picks the
+  cells, ``_assign_cell`` fills them);
+- score: the 6-dp cosine, exact over the float vectors (``_cos6``) or
+  asymmetric (ADC) over PQ codes (``_adc_table``, ``_recon_sq``);
+- ``_top_k``: ``row_number() over (partition by query_id order by
+  cosine desc, neighbor_id) <= k``.
+A compressed tier may add one exact rerank on top (``_exact_rerank``:
+pq_rerank_knn, ``ivfpq_knn(rerank_candidates=)``).
+
+Cache rule: only the index constructors — :func:`ivf_index`,
+:func:`lsh_index` and :func:`ivfpq_index` — cache, and the caller owns
+(and unpersists) what they return. An operator that returns
+a lazy frame caches nothing: a frame that feeds one plan needs no
+cache, and one read several times inside a plan is a LAZY
+``localCheckpoint`` (semantic_dedup), which leaves no DataFrame cache
+entry; its blocks go when the caller drops the result.
 
 All arithmetic in double via higher-order functions (zip_with /
 aggregate) — JVM codegen, no Python, engine-portable results.
@@ -17,14 +29,23 @@ aggregate) — JVM codegen, no Python, engine-portable results.
 
 from __future__ import annotations
 
+from functools import reduce
 from typing import NamedTuple
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 
 def _dbl(vec_col: str) -> str:
     return f"transform({vec_col}, x -> cast(x as double))"
+
+
+def _vecs(
+    df: DataFrame, id_col: str, vec_col: str,
+    ids: str = "neighbor_id", vecs: str = "cv", *extra: Column,
+) -> DataFrame:
+    """One side of a k-NN join: ``(ids, vecs as array<double>, *extra)``."""
+    return df.select(F.col(id_col).alias(ids), F.expr(_dbl(vec_col)).alias(vecs), *extra)
 
 
 def dot_expr(a: str, b: str) -> Column:
@@ -49,6 +70,31 @@ def cosine_expr(a: str, b: str) -> Column:
     return dot_expr(a, b) / (norm_expr(a) * norm_expr(b))
 
 
+def _cos6(a: str, b: str, na: str, nb: str) -> Column:
+    """``round(a·b / (‖a‖·‖b‖), 6)`` from norms projected once per side
+    (r12): higher-order-function folds are interpreted (CodegenFallback),
+    so re-folding a norm per pair — 2 of the 3 folds cosine_expr pays —
+    dominated a |Q|×n scan. ``sqrt(fold)`` per row then one multiply per
+    pair is the same arithmetic in the same order as cosine_expr."""
+    return F.round(dot_expr(a, b) / (F.col(na) * F.col(nb)), 6)
+
+
+def _top_k(scored: DataFrame, k: int, rank: str = "rn", *cols) -> DataFrame:
+    """The one top-k tail of every k-NN tier: ``rank = row_number() over
+    (partition by query_id order by cosine desc, neighbor_id)``, kept
+    while ``rank <= k``, projected to ``cols`` (default ``(query_id,
+    neighbor_id, cosine, rank)``). Ties break by neighbor id, so the
+    lists are deterministic."""
+    w = Window.partitionBy("query_id").orderBy(
+        F.col("cosine").desc(), F.col("neighbor_id").asc()
+    )
+    return (
+        scored.withColumn(rank, F.row_number().over(w))
+        .where(F.col(rank) <= k)
+        .select(*(cols or ("query_id", "neighbor_id", "cosine", rank)))
+    )
+
+
 def brute_force_knn(
     corpus: DataFrame,
     queries: DataFrame,
@@ -60,40 +106,20 @@ def brute_force_knn(
 
     Plan shape: broadcast(queries) × corpus → window top-k per query.
     At scale the query side is the small side — broadcast it, never the
-    corpus. Ties broken by neighbor id for determinism.
-
-    Norms are projected ONCE PER SIDE before the pair join (r12):
-    higher-order-function folds are interpreted (CodegenFallback), so
-    re-folding ‖q‖ per corpus row and ‖c‖ per query — 2 of the 3 folds
-    cosine_expr pays per pair — was the dominant cost of a |Q|×n scan.
-    ``sqrt(fold)`` per row then one multiply per pair is the same
-    arithmetic in the same order: values and hashes unchanged."""
-    from pyspark.sql import Window
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.expr(_dbl(vec_col)).alias("qv")
-    ).withColumn("__qn", norm_expr("qv"))
+    corpus. Ties broken by neighbor id for determinism; norms projected
+    once per side (``_cos6``)."""
+    q = _vecs(queries, id_col, vec_col, "query_id", "qv").withColumn("__qn", norm_expr("qv"))
     # repartition the corpus: a few-file corpus would otherwise score all
     # query×corpus pairs on as many cores as it has files
-    c = corpus.repartition(F.col(id_col)).select(
-        F.col(id_col).alias("neighbor_id"), F.expr(_dbl(vec_col)).alias("cv")
-    ).withColumn("__cn", norm_expr("cv"))
+    c = _vecs(corpus.repartition(F.col(id_col)), id_col, vec_col).withColumn(
+        "__cn", norm_expr("cv")
+    )
     scored = (
         c.crossJoin(F.broadcast(q))
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(dot_expr("qv", "cv") / (F.col("__qn") * F.col("__cn")), 6),
-        )
+        .withColumn("cosine", _cos6("qv", "cv", "__qn", "__cn"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rn")
-    )
+    return _top_k(scored, k)
 
 
 def sign_lsh_bucket(vec_col: str, num_bits: int = 8) -> Column:
@@ -261,13 +287,66 @@ def ivf_index(
     amortizes over every query batch — pass the result to
     :func:`ivf_knn` via ``index=`` so repeated query batches never
     re-run the O(n·cells) assignment. Columns: (neighbor_id, cv, __cn,
-    cell)."""
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.expr(_dbl(vec_col)).alias("cv")
-    )
+    cell). The cache is CALLER-owned: unpersist it when the query
+    batches are done."""
     return ivf_assign_cells(
-        c, "cv", centroids, nprobe=1, out_col="cell", norm_col="__cn"
+        _vecs(corpus, id_col, vec_col), "cv", centroids, nprobe=1, out_col="cell",
+        norm_col="__cn",
     ).select("neighbor_id", "cv", "__cn", "cell").cache()
+
+
+def _centroid_frame(spark, centroids: list[tuple[int, list[float]]]) -> DataFrame:
+    """A driver-side centroid list as ``(centroid_id, centroid_vec,
+    __ctn)``, its norms projected once."""
+    return spark.createDataFrame(
+        [(label, [float(x) for x in vec]) for label, vec in centroids],
+        "centroid_id int, centroid_vec array<double>",
+    ).withColumn("__ctn", norm_expr("centroid_vec"))
+
+
+def _nearest_cells(
+    df: DataFrame, key: str, vec: str, norm: str, cents: DataFrame, n: int
+) -> DataFrame:
+    """The ``n`` cells nearest each row of ``df`` (``df``'s columns plus
+    ``cell``, one row per cell): the broadcast centroid frame crossed in,
+    the 6-dp cosine, and ``row_number() over (partition by key order by
+    cosine desc, centroid_id) <= n`` — ties to the smallest centroid id,
+    so a SQL oracle replays it."""
+    w = Window.partitionBy(key).orderBy(F.col("__cos").desc(), F.col("centroid_id").asc())
+    return (
+        df.crossJoin(F.broadcast(cents))
+        .withColumn("__cos", _cos6(vec, "centroid_vec", norm, "__ctn"))
+        .withColumn("__rank", F.row_number().over(w))
+        .where(F.col("__rank") <= n)
+        .select(*df.columns, F.col("centroid_id").alias("cell"))
+    )
+
+
+def _probe(q: DataFrame, cents: DataFrame, centroids, nprobe: int) -> DataFrame:
+    """The one probe: ``q`` (query_id, qv, __qn, …) plus ``cell``, one
+    row per each query's ``nprobe`` nearest cells. At ≥ 64 pretrained
+    ``centroids`` one Arrow/BLAS pass (:func:`ivf_assign_cells`, same
+    rounding and tie-break), else the SQL-replayable window over
+    ``cents``."""
+    if centroids is not None and len(centroids) >= 64:
+        return ivf_assign_cells(
+            q, "qv", centroids, nprobe=nprobe, out_col="cell"
+        ).drop("probe_rank")
+    return _nearest_cells(q, "query_id", "qv", "__qn", cents, nprobe)
+
+
+def _assign_cell(c: DataFrame, cents: DataFrame, centroids) -> DataFrame:
+    """The one cell assignment: corpus rows ``(neighbor_id, cv)`` →
+    ``(neighbor_id, cv, __cn, cell)``, each in its nearest cell. At ≥ 64
+    pretrained ``centroids`` one Arrow/BLAS pass computes the cell and
+    the norm together (the broadcast-crossJoin argmax would materialize
+    n·cells rows and fold every dot interpreted — O(n^1.5) once cells ~
+    √n); else the SQL-replayable window over ``cents``."""
+    if centroids is not None and len(centroids) >= 64:
+        return ivf_assign_cells(c, "cv", centroids, out_col="cell", norm_col="__cn")
+    return _nearest_cells(
+        c.withColumn("__cn", norm_expr("cv")), "neighbor_id", "cv", "__cn", cents, 1
+    )
 
 
 def ivf_knn(
@@ -305,26 +384,21 @@ def ivf_knn(
 
     Scale story (100 TB corpus): the centroid frame is tiny and
     BROADCAST everywhere — the corpus is never shuffled by a cross
-    join. Cell assignment is one broadcast-join + per-row argmax pass;
-    materialize ``assigned`` partitioned by ``cell`` once, and each
-    query batch probes only nprobe/num_centroids of the data via a
-    broadcast equi-join on cell. Recall is tunable via nprobe.
+    join. Cell assignment is one broadcast-join + per-row argmax pass,
+    and each query batch probes only nprobe/num_centroids of the data
+    via a broadcast equi-join on cell. Recall is tunable via nprobe.
 
     SIZE the cell count with :func:`ivf_cells_for` (cells ~ √n,
     nprobe fixed) — a fixed cell count makes the probe a constant
     FRACTION of the corpus (the r12 receipt measured ~25% at every
     size), while √n cells shrink the fraction every decade. At ≥ 64
-    pretrained centroids the assignment flips from the broadcast-
-    crossJoin argmax (O(n·cells) interpreted rows) to one Arrow/BLAS
-    pass per batch (:func:`ivf_assign_cells`) — same rounding and
-    tie-break, dgemm speed. BUILD ONCE, QUERY MANY: pass a prebuilt
-    :func:`ivf_index` via ``index=`` and a query batch pays only its
-    probe + scoring — assignment is index-build cost, paid once per
-    corpus, exactly like a real deployment's persisted cell-partitioned
-    table.
+    pretrained centroids assignment and probe run as one Arrow/BLAS
+    pass per batch (:func:`ivf_assign_cells`). BUILD ONCE, QUERY MANY:
+    pass a prebuilt :func:`ivf_index` via ``index=`` and a query batch
+    pays only its probe + scoring — assignment is index-build cost,
+    paid once per corpus, exactly like a real deployment's persisted
+    cell-partitioned table.
     """
-    from pyspark.sql import Window
-
     if index is not None and centroids is None:
         # r14 (ADVICE): a prebuilt index encodes the BUILD-time quantizer;
         # training fresh probe-side centroids here would probe cell ids
@@ -336,151 +410,32 @@ def ivf_knn(
             "the index was built with); training a fresh quantizer for the "
             "probe side would diverge from the index's cell assignment"
         )
-    if centroids is not None:
-        # pretrained quantizer (e.g. kmeans_centroids_local over a
-        # collected hash-ranked sample) — skip training entirely
-        cents = corpus.sparkSession.createDataFrame(
-            [(label, [float(x) for x in vec]) for label, vec in centroids],
-            "centroid_id int, centroid_vec array<double>",
-        )
-    elif train_iterations:
-        cent_list = kmeans_centroids(
-            train_corpus if train_corpus is not None else corpus,
-            id_col,
-            vec_col,
-            num_centroids,
-            train_iterations,
-        )
-        cents = corpus.sparkSession.createDataFrame(
-            [(label, [float(x) for x in vec]) for label, vec in cent_list],
-            "centroid_id int, centroid_vec array<double>",
+    if centroids is not None or train_iterations:
+        # a pretrained quantizer (e.g. kmeans_centroids_local over a
+        # collected hash-ranked sample) skips training entirely
+        cents = _centroid_frame(
+            corpus.sparkSession,
+            centroids if centroids is not None else kmeans_centroids(
+                train_corpus if train_corpus is not None else corpus,
+                id_col, vec_col, num_centroids, train_iterations,
+            ),
         )
     else:
-        cents = ivf_centroids(corpus, id_col, vec_col, num_centroids)
-
-    # norms projected once per relation (the brute_force_knn r12 note:
-    # HOF folds are interpreted — never re-fold a norm per pair)
-    cents = cents.withColumn("__ctn", norm_expr("centroid_vec"))
-
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.expr(_dbl(vec_col)).alias("cv")
-    ).withColumn("__cn", norm_expr("cv"))
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.expr(_dbl(vec_col)).alias("qv")
-    ).withColumn("__qn", norm_expr("qv"))
-
-    if index is not None:
-        # prebuilt inverted lists (ivf_index) — the amortized path: a
-        # query batch pays ONLY its probe + scoring, never the
-        # O(n·cells) assignment
-        assigned = index
-        if centroids is not None and len(centroids) >= 64:
-            probes = ivf_assign_cells(
-                q, "qv", centroids, nprobe=nprobe, out_col="cell"
-            ).drop("probe_rank")
-        else:
-            w_probe = Window.partitionBy("query_id").orderBy(
-                F.col("cos_q").desc(), F.col("centroid_id").asc()
-            )
-            probes = (
-                q.crossJoin(F.broadcast(cents))
-                .withColumn(
-                    "cos_q",
-                    F.round(
-                        dot_expr("qv", "centroid_vec")
-                        / (F.col("__qn") * F.col("__ctn")),
-                        6,
-                    ),
-                )
-                .withColumn("prn", F.row_number().over(w_probe))
-                .where(F.col("prn") <= nprobe)
-                .select(
-                    "query_id", "qv", "__qn", F.col("centroid_id").alias("cell")
-                )
-            )
-    elif centroids is not None and len(centroids) >= 64:
-        # LARGE cell counts (the √n sizing rule, ivf_cells_for): the
-        # broadcast-crossJoin argmax below materializes n·cells rows
-        # and folds every dot interpreted — O(n^1.5) interpreted work
-        # once cells ~ √n. One Arrow/BLAS pass assigns cells instead
-        # (same 6dp rounding + smallest-id tie-break; see
-        # ivf_assign_cells), norms in the same pass (norm_col) so no
-        # second interpreted fold over the corpus. Only reachable on
-        # the pretrained-quantizer path, so the small-cell
-        # SQL-replayable plans stay bit-exact.
-        assigned = ivf_assign_cells(
-            c.drop("__cn"), "cv", centroids, nprobe=1, out_col="cell",
-            norm_col="__cn",
-        ).select("neighbor_id", "cv", "__cn", "cell").cache()
-        probes = ivf_assign_cells(
-            q, "qv", centroids, nprobe=nprobe, out_col="cell"
-        ).drop("probe_rank")
-    else:
-        # inverted lists: nearest centroid per corpus vector (argmax
-        # cosine, ties to the smallest centroid_id for engine-portable
-        # determinism)
-        w_assign = Window.partitionBy("neighbor_id").orderBy(
-            F.col("cos_c").desc(), F.col("centroid_id").asc()
+        cents = ivf_centroids(corpus, id_col, vec_col, num_centroids).withColumn(
+            "__ctn", norm_expr("centroid_vec")
         )
-        assigned = (
-            c.crossJoin(F.broadcast(cents))
-            .withColumn(
-                "cos_c",
-                F.round(
-                    dot_expr("cv", "centroid_vec")
-                    / (F.col("__cn") * F.col("__ctn")),
-                    6,
-                ),
-            )
-            .withColumn("arn", F.row_number().over(w_assign))
-            .where(F.col("arn") == 1)
-            .select(
-                "neighbor_id", "cv", "__cn", F.col("centroid_id").alias("cell")
-            )
-            # the inverted lists ARE the IVF index — materialize once
-            # (cache) so probes hit an InMemoryRelation leaf instead of
-            # re-planning/re-running the assignment pass (r12; at
-            # cluster scale this is the `assigned` table a real
-            # deployment persists partitioned by cell)
-            .cache()
-        )
-
-        # probe set: nprobe nearest centroids per query
-        w_probe = Window.partitionBy("query_id").orderBy(
-            F.col("cos_q").desc(), F.col("centroid_id").asc()
-        )
-        probes = (
-            q.crossJoin(F.broadcast(cents))
-            .withColumn(
-                "cos_q",
-                F.round(
-                    dot_expr("qv", "centroid_vec")
-                    / (F.col("__qn") * F.col("__ctn")),
-                    6,
-                ),
-            )
-            .withColumn("prn", F.row_number().over(w_probe))
-            .where(F.col("prn") <= nprobe)
-            .select("query_id", "qv", "__qn", F.col("centroid_id").alias("cell"))
-        )
-
-    # search only the probed cells: broadcast equi-join on cell
+    q = _vecs(queries, id_col, vec_col, "query_id", "qv").withColumn("__qn", norm_expr("qv"))
+    # a prebuilt index (ivf_index) is the amortized path: the batch pays
+    # only its probe + scoring, never the O(n·cells) assignment
+    assigned = index if index is not None else _assign_cell(
+        _vecs(corpus, id_col, vec_col), cents, centroids
+    )
     scored = (
-        assigned.join(F.broadcast(probes), on="cell")
+        assigned.join(F.broadcast(_probe(q, cents, centroids, nprobe)), on="cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(dot_expr("qv", "cv") / (F.col("__qn") * F.col("__cn")), 6),
-        )
+        .withColumn("cosine", _cos6("qv", "cv", "__qn", "__cn"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rn")
-    )
+    return _top_k(scored, k)
 
 
 class LshIndex(NamedTuple):
@@ -490,7 +445,7 @@ class LshIndex(NamedTuple):
     index/centroids contract, enforced structurally instead of by a
     required second argument)."""
 
-    buckets: DataFrame  # (neighbor_id, cv, __cn, bucket), cached
+    buckets: DataFrame  # (neighbor_id, cv, bucket, __cn), cached
     num_bits: int
 
 
@@ -533,12 +488,7 @@ def lsh_index(
     if num_bits is None:
         num_bits = _lsh_auto_bits(corpus, vec_col, target_bucket)
     buckets = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.expr(_dbl(vec_col)).alias("cv"),
-            sign_lsh_bucket(vec_col, num_bits).alias("bucket"),
-        )
-        .withColumn("__cn", norm_expr("cv"))
+        _lsh_rows(corpus, id_col, vec_col, num_bits)
         .repartition(F.col("bucket"))
         .sortWithinPartitions("bucket")
         .cache()
@@ -576,16 +526,9 @@ def lsh_index_write(
 
     if num_bits is None:
         num_bits = _lsh_auto_bits(corpus, vec_col, target_bucket)
-    rows = (
-        corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.expr(_dbl(vec_col)).alias("cv"),
-            sign_lsh_bucket(vec_col, num_bits).alias("bucket"),
-        )
-        .withColumn("__cn", norm_expr("cv"))
-    )
     write_bucketed_table(
-        rows, table, ["bucket"], num_buckets=num_buckets,
+        _lsh_rows(corpus, id_col, vec_col, num_bits), table, ["bucket"],
+        num_buckets=num_buckets,
         sort_cols=["bucket"], path=path,
     )
     corpus.sparkSession.sql(
@@ -616,6 +559,15 @@ def lsh_index_read(spark, table: str) -> LshIndex:
             "silently return wrong neighbors"
         )
     return LshIndex(spark.table(table), int(bits))
+
+
+def _lsh_rows(corpus: DataFrame, id_col: str, vec_col: str, num_bits: int) -> DataFrame:
+    """The bucketed corpus side of the sign-LSH tier: ``(neighbor_id,
+    cv, bucket, __cn)``."""
+    return _vecs(
+        corpus, id_col, vec_col, "neighbor_id", "cv",
+        sign_lsh_bucket(vec_col, num_bits).alias("bucket"),
+    ).withColumn("__cn", norm_expr("cv"))
 
 
 def _lsh_auto_bits(corpus: DataFrame, vec_col: str, target_bucket: int) -> int:
@@ -675,8 +627,6 @@ def lsh_knn(
     index-build cost, paid once per corpus. The index carries its own
     bit width; an explicit ``num_bits`` that disagrees raises (the
     probe key and the inverted lists must be the same key)."""
-    from pyspark.sql import Window
-
     if index is not None:
         if num_bits is not None and num_bits != index.num_bits:
             raise ValueError(
@@ -698,9 +648,8 @@ def lsh_knn(
         raise ValueError(
             f"lsh_knn: multiprobe must be in [0, num_bits], got {multiprobe}"
         )
-    q = queries.select(
-        F.col(id_col).alias("query_id"),
-        F.expr(_dbl(vec_col)).alias("qv"),
+    q = _vecs(
+        queries, id_col, vec_col, "query_id", "qv",
         sign_lsh_bucket(vec_col, num_bits).alias("bucket"),
     ).withColumn("__qn", norm_expr("qv"))
     if multiprobe:
@@ -734,29 +683,13 @@ def lsh_knn(
         else:
             c = index.buckets
     else:
-        c = corpus.select(
-            F.col(id_col).alias("neighbor_id"),
-            F.expr(_dbl(vec_col)).alias("cv"),
-            sign_lsh_bucket(vec_col, num_bits).alias("bucket"),
-        ).withColumn("__cn", norm_expr("cv"))
-    # per-side norms (r12, the brute_force_knn note): same fold, same
-    # multiply order as cosine_expr — values and hashes unchanged
+        c = _lsh_rows(corpus, id_col, vec_col, num_bits)
     scored = (
         c.join(F.broadcast(q), on="bucket")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(dot_expr("qv", "cv") / (F.col("__qn") * F.col("__cn")), 6),
-        )
+        .withColumn("cosine", _cos6("qv", "cv", "__qn", "__cn"))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rn")
-    )
+    return _top_k(scored, k)
 
 
 def bounded_bucket_pairs(
@@ -1467,23 +1400,83 @@ def pq_encode(
     """Encode each vector as ``m`` codebook labels — the compressed ANN
     storage tier: m small ints per vector (m bytes at k ≤ 256) instead
     of 4·d float bytes, a ~d·4/m× memory/shuffle reduction below the
-    int8 tier. ONE map-only projection (sub-slices materialized first —
-    lambda-inlining rule), no shuffle, no Python."""
-    m = len(codebooks)
-    sub = len(codebooks[0][0][1])
-    sliced = corpus.select(
-        F.col(id_col),
-        *[
-            F.slice(F.expr(_dbl(vec_col)), j * sub + 1, sub).alias(f"__s{j}")
-            for j in range(m)
-        ],
+    int8 tier. ONE map-only projection, no shuffle, no Python."""
+    return _encode(corpus, codebooks, F.expr(_dbl(vec_col)), [F.col(id_col)], out_col)
+
+
+def _encode(
+    df: DataFrame, books, vec: Column, keep: list, out_col: str = "pq_codes"
+) -> DataFrame:
+    """``keep`` plus the m per-subspace argmin codes of ``vec`` as
+    ``out_col``. The sub-slices are materialized first: referenced
+    inside the argmin they would be re-sliced per centroid."""
+    sub = len(books[0][0][1])
+    sliced = df.select(
+        *keep, *[F.slice(vec, j * sub + 1, sub).alias(f"__s{j}") for j in range(len(books))]
     )
     return sliced.select(
-        F.col(id_col),
-        F.array(
-            *[_argmin_code(f"__s{j}", codebooks[j]) for j in range(m)]
-        ).alias(out_col),
+        *keep,
+        F.array(*[_argmin_code(f"__s{j}", b) for j, b in enumerate(books)]).alias(out_col),
     )
+
+
+def _recon_sq(books) -> Column:
+    """``__rr = ‖recon‖²`` of a row's ``pq_codes``: m code lookups over
+    m·k literal doubles (‖c‖² per centroid in label order — _seq_dot,
+    the driver-side precompute the assignment paths use), summed in
+    subspace order."""
+    terms = []
+    for j, book in enumerate(books):
+        ccs = ",".join(f"cast({_seq_dot(vec, vec)!r} as double)" for _, vec in sorted(book))
+        terms.append(f"element_at(array({ccs}), element_at(pq_codes, {j + 1}) + 1)")
+    return F.expr(" + ".join(terms)).alias("__rr")
+
+
+def _adc_table(q: DataFrame, books) -> DataFrame:
+    """The one ADC query table: ``q``'s columns plus ``__qq = ‖qv‖²`` and
+    ``__qd[j][label] = qv_j · c`` (the sequential zip_with fold). The
+    codebooks travel once as broadcast DATA onto the query panel only —
+    m·k·(d/m) doubles per panel row, never per corpus row."""
+    sub = len(books[0][0][1])
+    packed = q.sparkSession.createDataFrame(
+        [([[(label, vec) for label, vec in sorted(book)] for book in books],)],
+        "books array<array<struct<c:int,v:array<double>>>>",
+    )
+    qd = _dot_sql(f"slice(qv, j * {sub} + 1, {sub})", "s.v")
+    return q.crossJoin(F.broadcast(packed)).select(
+        *q.columns,
+        F.expr(_sq_sql("qv")).alias("__qq"),
+        F.expr(f"transform(books, (bk, j) -> transform(bk, s -> {qd}))").alias("__qd"),
+    )
+
+
+def _adc_cosine(m: int) -> Column:
+    """cosine = Σ_j __qd[j][code_j] / (√__qq · √__rr), rounded at 6 dp."""
+    dot = " + ".join(
+        f"element_at(element_at(__qd, {j + 1}), element_at(pq_codes, {j + 1}) + 1)"
+        for j in range(m)
+    )
+    return F.round(F.expr(f"({dot}) / (sqrt(__qq) * sqrt(__rr))"), 6)
+
+
+def _exact_rerank(
+    cand: DataFrame, corpus: DataFrame, queries: DataFrame, id_col: str, vec_col: str,
+    k: int,
+) -> DataFrame:
+    """The one exact rerank: re-score the ``(query_id, neighbor_id)``
+    candidates a compressed tier returned against the float vectors and
+    keep the top ``k``. The candidate list (|Q| × candidates ids —
+    retrieval output, small by construction) is BROADCAST into the
+    corpus scan to fetch exact vectors and the queries broadcast on
+    top, so the exact arithmetic touches candidate-sized data only and
+    the corpus never shuffles."""
+    exact = (
+        _vecs(corpus, id_col, vec_col)
+        .join(F.broadcast(cand.select("query_id", "neighbor_id")), "neighbor_id")
+        .join(F.broadcast(_vecs(queries, id_col, vec_col, "query_id", "qv")), "query_id")
+        .withColumn("cosine", F.round(cosine_expr("qv", "cv"), 6))
+    )
+    return _top_k(exact, k)
 
 
 def pq_knn(
@@ -1501,18 +1494,15 @@ def pq_knn(
     """Compressed-tier ANN via asymmetric distance (ADC), the REAL
     table-lookup rendering (r11; Jégou et al. 2011 §IV): per query the
     m × codebook_k dot products ``q_j · c`` are computed ONCE into a
-    lookup table (a query-panel-sized crossJoin with the codebooks as
-    broadcast DATA — the codebooks never ride the corpus), and each
-    corpus vector is scored with m table lookups on its codes plus a
-    precomputed ``‖recon‖²`` (m literal-array lookups at encode time):
+    lookup table (``_adc_table``: a query-panel-sized crossJoin with the
+    codebooks as broadcast DATA — the codebooks never ride the corpus),
+    and each corpus vector is scored with m table lookups on its codes
+    plus a precomputed ``‖recon‖²`` (``_recon_sq``):
 
         cosine = Σ_j qd[j][code_j] / (√(q·q) · √(Σ_j cc_j[code_j]))
 
-    The previous shape reconstructed the full d-dim vector per pair
-    and re-folded a d-term cosine — d/m× more per-pair arithmetic and
-    a ~m·k·(d/m)-literal codegen'd plan. Per-pair payload is the
-    query's m×k table (same bytes as the exact query vector), per-pair
-    compute is 2m lookups + 3 scalar ops.
+    Per-pair compute is 2m lookups + 3 scalar ops, against a d-term
+    fold for a reconstructed vector.
 
     Scale story: the scan side carries m bytes per vector instead of
     4·d (the 100 TB memory tier under int8); query ADC tables
@@ -1531,78 +1521,18 @@ def pq_knn(
         train_corpus if train_corpus is not None else corpus,
         id_col, vec_col, m, codebook_k, iterations,
     )
-    from pyspark.sql import Window
-
-    m_eff = len(books)
-    sub = len(books[0][0][1])
-    enc = pq_encode(corpus, books, id_col, vec_col)
-    # ‖recon‖² per corpus row: m code lookups over m·k literal doubles
-    # (‖c‖² per centroid in label order — _seq_dot, the same driver-side
-    # precompute the assignment paths use), summed in subspace order
-    rr_terms = []
-    for j, book in enumerate(books):
-        ccs = ",".join(
-            f"cast({_seq_dot(vec, vec)!r} as double)" for _, vec in sorted(book)
-        )
-        rr_terms.append(
-            f"element_at(array({ccs}), element_at(pq_codes, {j + 1}) + 1)"
-        )
-    recon = enc.select(
-        F.col(id_col).alias("neighbor_id"),
-        F.col("pq_codes"),
-        F.expr(" + ".join(rr_terms)).alias("__rr"),
+    recon = pq_encode(corpus, books, id_col, vec_col).select(
+        F.col(id_col).alias("neighbor_id"), F.col("pq_codes"), _recon_sq(books)
     )
     # same repartition guard as brute_force_knn: a few-file corpus would
-    # otherwise score every pair on as many cores as it has files.
-    # cache(): the encoded corpus IS the PQ index — materialize it once
-    # and probe the InMemoryRelation. Besides the obvious reuse, this
-    # makes the encode's m·k·(d/m)-literal argmin a LEAF to the outer
-    # optimizer: without it AQE re-optimizes that tree at every query
-    # stage boundary (r12 — ~2.5 s of pure re-planning per receipt).
-    recon = recon.repartition(F.col("neighbor_id")).cache()
-    # ADC tables: codebooks travel once as broadcast DATA onto the
-    # query panel only (m·k·(d/m) doubles per panel row, never per
-    # corpus row); qd[j][label] = q_j · c, the sequential zip_with fold
-    spark = corpus.sparkSession
-    packed = spark.createDataFrame(
-        [([[(label, vec) for label, vec in sorted(book)] for book in books],)],
-        f"books array<array<struct<c:int,v:array<double>>>>",
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.expr(_dbl(vec_col)).alias("qv")
-    )
-    qtab = q.crossJoin(F.broadcast(packed)).select(
-        "query_id",
-        F.expr(
-            "aggregate(transform(qv, x -> x * x), cast(0.0 as double),"
-            " (acc, v) -> acc + v)"
-        ).alias("__qq"),
-        F.expr(
-            f"transform(books, (bk, j) -> transform(bk, s -> "
-            f"aggregate(zip_with(slice(qv, j * {sub} + 1, {sub}), s.v,"
-            " (x, y) -> x * y), cast(0.0 as double), (acc, v) -> acc + v)))"
-        ).alias("__qd"),
-    )
-    adc_dot = " + ".join(
-        f"element_at(element_at(__qd, {j + 1}), element_at(pq_codes, {j + 1}) + 1)"
-        for j in range(m_eff)
-    )
+    # otherwise score every pair on as many cores as it has files
     scored = (
-        recon.crossJoin(F.broadcast(qtab))
+        recon.repartition(F.col("neighbor_id"))
+        .crossJoin(F.broadcast(_adc_table(_vecs(queries, id_col, vec_col, "query_id", "qv"), books)))
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(F.expr(f"({adc_dot}) / (sqrt(__qq) * sqrt(__rr))"), 6),
-        )
+        .withColumn("cosine", _adc_cosine(len(books)))
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rn")
-    )
+    return _top_k(scored, k)
 
 
 def pq_rerank_knn(
@@ -1619,50 +1549,22 @@ def pq_rerank_knn(
 ) -> DataFrame:
     """Two-tier retrieval: the COMPRESSED tier (:func:`pq_knn`, ADC over
     PQ codes) generates ``candidates`` neighbors per query, then the
-    EXACT tier re-scores just that candidate set against the float
-    vectors and keeps the top ``k`` — the standard retrieve-then-rerank
-    shape that buys back the recall the quantization error costs, while
-    the expensive exact arithmetic touches only |Q| × candidates rows.
-
-    Scale shape: tier 1 scans m-byte codes (pq_knn's plan, corpus never
-    shuffled); the candidate list (|Q| × candidates ids — retrieval
-    output, small by construction) is BROADCAST into the corpus scan to
-    fetch exact vectors, queries broadcast on top, and the final top-k
-    is one candidate-sized window. The corpus is never shuffled in
+    EXACT tier (``_exact_rerank``) re-scores just that candidate set
+    against the float vectors and keeps the top ``k`` — the standard
+    retrieve-then-rerank shape that buys back the recall the
+    quantization error costs, while the expensive exact arithmetic
+    touches only |Q| × candidates rows. The corpus is never shuffled in
     either tier.
     """
     if candidates < k:
         raise ValueError(
             f"pq_rerank_knn: candidates ({candidates}) must be >= k ({k})"
         )
-    from pyspark.sql import Window
-
     books = codebooks if codebooks is not None else pq_train(
         corpus, id_col, vec_col, m, codebook_k, iterations
     )
-    cand = pq_knn(
-        corpus, queries, id_col, vec_col,
-        k=candidates, codebooks=books,
-    ).select("query_id", "neighbor_id")
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.expr(_dbl(vec_col)).alias("cv")
-    )
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.expr(_dbl(vec_col)).alias("qv")
-    )
-    exact = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cosine", F.round(cosine_expr("qv", "cv"), 6))
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rn")
-    )
+    cand = pq_knn(corpus, queries, id_col, vec_col, k=candidates, codebooks=books)
+    return _exact_rerank(cand, corpus, queries, id_col, vec_col, k)
 
 
 def _ivfpq_rows(
@@ -1682,72 +1584,18 @@ def _ivfpq_rows(
     consumes these rows directly so nothing leaks into the cache
     (r14 ADVICE).
 
-    - ``cell``: nearest coarse centroid, the exact semantics of
-      :func:`ivf_knn`'s assignment (6-dp rounded cosine, ties to the
-      smallest centroid_id); one Arrow/BLAS pass at ≥ 64 centroids
-      (:func:`ivf_assign_cells`, the √n sizing tier), else the
-      SQL-replayable broadcast-crossJoin argmax.
+    - ``cell``: nearest coarse centroid (``_assign_cell``, the
+      :func:`ivf_knn` assignment).
     - ``pq_codes``: m per-subspace argmin codes (:func:`pq_encode`'s
-      projection, inlined on the assigned frame so no self-join).
-    - ``__rr``: ‖recon‖² via m literal lookups (pq_knn's precompute).
+      projection, on the assigned frame so no self-join).
+    - ``__rr``: ‖recon‖² (``_recon_sq``).
     """
-    from pyspark.sql import Window
-
-    m = len(codebooks)
-    sub = len(codebooks[0][0][1])
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.expr(_dbl(vec_col)).alias("cv")
+    assigned = _assign_cell(
+        _vecs(corpus, id_col, vec_col), _centroid_frame(corpus.sparkSession, centroids),
+        centroids,
     )
-    if len(centroids) >= 64:
-        assigned = ivf_assign_cells(
-            c, "cv", centroids, nprobe=1, out_col="cell"
-        ).select("neighbor_id", "cv", "cell")
-    else:
-        cents = corpus.sparkSession.createDataFrame(
-            [(label, [float(x) for x in vec]) for label, vec in centroids],
-            "centroid_id int, centroid_vec array<double>",
-        ).withColumn("__ctn", norm_expr("centroid_vec"))
-        w_assign = Window.partitionBy("neighbor_id").orderBy(
-            F.col("cos_c").desc(), F.col("centroid_id").asc()
-        )
-        assigned = (
-            c.withColumn("__cn", norm_expr("cv"))
-            .crossJoin(F.broadcast(cents))
-            .withColumn(
-                "cos_c",
-                F.round(
-                    dot_expr("cv", "centroid_vec")
-                    / (F.col("__cn") * F.col("__ctn")),
-                    6,
-                ),
-            )
-            .withColumn("arn", F.row_number().over(w_assign))
-            .where(F.col("arn") == 1)
-            .select("neighbor_id", "cv", F.col("centroid_id").alias("cell"))
-        )
-    sliced = assigned.select(
-        "neighbor_id",
-        "cell",
-        *[F.slice(F.col("cv"), j * sub + 1, sub).alias(f"__s{j}") for j in range(m)],
-    )
-    enc = sliced.select(
-        "neighbor_id",
-        "cell",
-        F.array(*[_argmin_code(f"__s{j}", codebooks[j]) for j in range(m)]).alias(
-            "pq_codes"
-        ),
-    )
-    rr_terms = []
-    for j, book in enumerate(codebooks):
-        ccs = ",".join(
-            f"cast({_seq_dot(vec, vec)!r} as double)" for _, vec in sorted(book)
-        )
-        rr_terms.append(
-            f"element_at(array({ccs}), element_at(pq_codes, {j + 1}) + 1)"
-        )
-    return enc.select(
-        "neighbor_id", "cell", "pq_codes", F.expr(" + ".join(rr_terms)).alias("__rr")
-    )
+    enc = _encode(assigned, codebooks, F.col("cv"), ["neighbor_id", "cell"])
+    return enc.select("neighbor_id", "cell", "pq_codes", _recon_sq(codebooks))
 
 
 def ivfpq_index(
@@ -1859,15 +1707,15 @@ def ivfpq_knn(
     encode+assign pass across query batches.
 
     Scoring is pq_knn's ADC bit-for-bit: per query one m×k lookup
-    table (codebooks broadcast onto the query panel only), per pair
-    m lookups + 3 scalar ops, cosine = Σ qd[code] / (‖q‖·√‖recon‖²)
-    rounded at 6 dp — so the DuckDB oracle replays cells, codes and
-    ADC in lockstep. ``rerank_candidates`` adds the exact-tier rerank
-    on top (pq_rerank_knn's shape): ADC retrieves that many, the float
-    column rescores candidate-sized data only.
+    table (``_adc_table``), per pair m lookups + 3 scalar ops, cosine =
+    Σ qd[code] / (‖q‖·√‖recon‖²) rounded at 6 dp — so the DuckDB oracle
+    replays cells, codes and ADC in lockstep. The probe runs on that
+    same table, carrying ``__qq``/``__qd`` to the probed cells, so the
+    query panel is one plan branch, not two joined back on query_id.
+    ``rerank_candidates`` adds the exact rerank on top
+    (``_exact_rerank``): ADC retrieves that many, the float column
+    rescores candidate-sized data only.
     """
-    from pyspark.sql import Window
-
     if centroids is None or codebooks is None:
         raise ValueError(
             "ivfpq_knn: centroids= and codebooks= are required (build-time "
@@ -1879,102 +1727,25 @@ def ivfpq_knn(
             f"ivfpq_knn: rerank_candidates ({rerank_candidates}) must be >= k ({k})"
         )
     if index is None:
-        # single-use path: plain rows, NO cache/repartition — a cached
-        # index here outlived the query and leaked for the session's
-        # lifetime (r14 ADVICE); callers who reuse an index across
-        # query batches own it via ivfpq_index(...)
+        # single-use path: plain rows, no cache — callers who reuse an
+        # index across query batches own it via ivfpq_index(...)
         index = _ivfpq_rows(corpus, centroids, codebooks, id_col, vec_col)
-    m_eff = len(codebooks)
-    sub = len(codebooks[0][0][1])
-
-    q = queries.select(
-        F.col(id_col).alias("query_id"), F.expr(_dbl(vec_col)).alias("qv")
-    )
-    if len(centroids) >= 64:
-        probes = ivf_assign_cells(
-            q, "qv", centroids, nprobe=nprobe, out_col="cell"
-        ).select("query_id", "qv", "cell")
-    else:
-        cents = corpus.sparkSession.createDataFrame(
-            [(label, [float(x) for x in vec]) for label, vec in centroids],
-            "centroid_id int, centroid_vec array<double>",
-        ).withColumn("__ctn", norm_expr("centroid_vec"))
-        w_probe = Window.partitionBy("query_id").orderBy(
-            F.col("cos_q").desc(), F.col("centroid_id").asc()
-        )
-        probes = (
-            q.withColumn("__qn", norm_expr("qv"))
-            .crossJoin(F.broadcast(cents))
-            .withColumn(
-                "cos_q",
-                F.round(
-                    dot_expr("qv", "centroid_vec")
-                    / (F.col("__qn") * F.col("__ctn")),
-                    6,
-                ),
-            )
-            .withColumn("prn", F.row_number().over(w_probe))
-            .where(F.col("prn") <= nprobe)
-            .select("query_id", "qv", F.col("centroid_id").alias("cell"))
-        )
-
-    # ADC lookup tables on the query panel (pq_knn's rendering: the
-    # codebooks ride as broadcast DATA on |Q| rows, never the corpus)
-    spark = corpus.sparkSession
-    packed = spark.createDataFrame(
-        [([[(label, vec) for label, vec in sorted(book)] for book in codebooks],)],
-        "books array<array<struct<c:int,v:array<double>>>>",
-    )
-    qtab = q.crossJoin(F.broadcast(packed)).select(
-        "query_id",
-        F.expr(
-            "aggregate(transform(qv, x -> x * x), cast(0.0 as double),"
-            " (acc, v) -> acc + v)"
-        ).alias("__qq"),
-        F.expr(
-            f"transform(books, (bk, j) -> transform(bk, s -> "
-            f"aggregate(zip_with(slice(qv, j * {sub} + 1, {sub}), s.v,"
-            " (x, y) -> x * y), cast(0.0 as double), (acc, v) -> acc + v)))"
-        ).alias("__qd"),
-    )
-    probe_tab = probes.select("query_id", "cell").join(qtab, "query_id")
-    adc_dot = " + ".join(
-        f"element_at(element_at(__qd, {j + 1}), element_at(pq_codes, {j + 1}) + 1)"
-        for j in range(m_eff)
-    )
+    # ‖q‖ for the probe cosine from the table's ‖q‖²: the same fold
+    qtab = _adc_table(
+        _vecs(queries, id_col, vec_col, "query_id", "qv"), codebooks
+    ).withColumn("__qn", F.sqrt("__qq"))
+    probes = _probe(
+        qtab, _centroid_frame(corpus.sparkSession, centroids), centroids, nprobe
+    ).select("query_id", "cell", "__qq", "__qd")
     scored = (
-        index.join(F.broadcast(probe_tab), "cell")
+        index.join(F.broadcast(probes), "cell")
         .where(F.col("query_id") != F.col("neighbor_id"))
-        .withColumn(
-            "cosine",
-            F.round(F.expr(f"({adc_dot}) / (sqrt(__qq) * sqrt(__rr))"), 6),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    n_keep = rerank_candidates if rerank_candidates is not None else k
-    top = (
-        scored.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= n_keep)
-        .select("query_id", "neighbor_id", "cosine", "rn")
+        .withColumn("cosine", _adc_cosine(len(codebooks)))
     )
     if rerank_candidates is None:
-        return top
-    # exact rerank tier (pq_rerank_knn's shape): candidate-sized only
-    cand = top.select("query_id", "neighbor_id")
-    c = corpus.select(
-        F.col(id_col).alias("neighbor_id"), F.expr(_dbl(vec_col)).alias("cv")
-    )
-    exact = (
-        c.join(F.broadcast(cand), "neighbor_id")
-        .join(F.broadcast(q), "query_id")
-        .withColumn("cosine", F.round(cosine_expr("qv", "cv"), 6))
-    )
-    return (
-        exact.withColumn("rn", F.row_number().over(w))
-        .where(F.col("rn") <= k)
-        .select("query_id", "neighbor_id", "cosine", "rn")
+        return _top_k(scored, k)
+    return _exact_rerank(
+        _top_k(scored, rerank_candidates), corpus, queries, id_col, vec_col, k
     )
 
 
@@ -2029,19 +1800,16 @@ def semantic_dedup(
     # the join condition they would be re-folded for every candidate
     # pair (3 array folds per pair instead of 1)
     #
-    # persist: the assignment frame is consumed up to four times (the
-    # size-guard aggregate, both pair-join sides, the keep-side
+    # lazy checkpoint: the assignment frame is consumed up to four times
+    # (the size-guard aggregate, both pair-join sides, the keep-side
     # anti-join) and its defining expression — the k×d argmin distance
     # CASE — is the operator's dominant per-row cost; recomputing it
     # per consumer measured +35% on the whole operator at sf0.1. This
     # is the SemDeDup pipeline's standard materialize-the-assignments
     # step (at cluster scale: written to storage once, reused by every
-    # block pass); kmeans training has already run eager jobs by this
-    # point, so the persist does not change the operator's laziness
-    # class. Released via an unpersist hook on the returned plan's
-    # first materialization? No — Spark offers none; the cache ages out
-    # LRU like every persisted frame in the engine.
-    base = full.withColumn("__n", norm_expr("__v")).persist()
+    # block pass). Unlike persist() it leaves no DataFrame cache entry:
+    # the ContextCleaner reclaims its blocks once the result is dropped.
+    base = full.withColumn("__n", norm_expr("__v")).localCheckpoint(eager=False)
     vecs = base
     if max_block_rows is not None:
         if max_block_rows < 1:
@@ -2077,17 +1845,12 @@ def semantic_dedup(
     twins = (
         a.join(b, ["cluster", "__sub"])
         .where(F.col("__id_a") > F.col("__id_b"))
-        .where(
-            F.round(
-                dot_expr("__va", "__vb") / (F.col("__na") * F.col("__nb")), 6
-            )
-            >= threshold
-        )
+        .where(_cos6("__va", "__vb", "__na", "__nb") >= threshold)
         .select(F.col("__id_a").alias(id_col))
         .distinct()
     )
-    # keep-side consumes the SAME persisted frame (a cache hit; `full`
-    # would be a different plan subtree and recompute the assignment)
+    # keep-side consumes the SAME checkpointed frame (`full` would be a
+    # different plan subtree and recompute the assignment)
     return base.join(twins, id_col, "left_anti").drop("__v", "sq_dist", "__n")
 
 
@@ -2261,37 +2024,20 @@ def recall_report(
     ``recall_micro = hits·1e6 div n_truth`` — EXACT integer ratios, so
     the whole report sits under the full hash gate (no float recall).
 
-    Plan (r12): the truth pairs are cached once — ``cache()``, NOT
-    ``localCheckpoint(eager=False)``: a lazy local checkpoint still
-    physically plans its frame AT BUILD TIME (the df→RDD conversion
-    runs analysis+codegen per tier — 4+ seconds of double-planning for
-    literal-heavy ANN tiers), while an InMemoryRelation defers
-    planning to the single final job and dedupes execution the same
-    way. The report itself is ONE labeled union → one broadcast
-    hit-flag join → one ``groupBy(tier)``: the previous per-tier shape
-    (a semi-join plus TWO scalar aggregates and two broadcast
-    crossJoins per tier) planned ~13 query stages, and AQE's per-stage
-    re-optimization of the remaining plan cost multiples of the actual
-    execution. Hits are the same integers — truth pairs are unique by
-    construction (top-k per query), so the flag join cannot fan out."""
+    Plan: ONE labeled union of the tiers (``_labeled_tiers``) → one
+    broadcast hit-flag join against the truth → one ``groupBy(tier)``:
+    a per-tier shape (a semi-join plus two scalar aggregates and two
+    broadcast crossJoins per tier) planned ~13 query stages, and AQE's
+    per-stage re-optimization of the remaining plan cost multiples of
+    the actual execution. The truth pairs feed this one plan, so they
+    are not cached. Hits are the same integers — truth pairs are unique
+    by construction (top-k per query), so the flag join cannot fan
+    out."""
     if not tiers:
         raise ValueError("recall_report: need at least one tier")
-    truth = (
-        exact.select(
-            F.col(query_col).alias("__q"), F.col(neighbor_col).alias("__n")
-        )
-        .cache()
-    )
+    truth = exact.select(F.col(query_col).alias("__q"), F.col(neighbor_col).alias("__n"))
     n_truth = truth.agg(F.count(F.lit(1)).cast("bigint").alias("n_truth"))
-    labeled = None
-    for name, t in sorted(tiers.items()):
-        cand = t.select(
-            F.lit(name).alias("tier"),
-            F.col(query_col).alias("__q"),
-            F.col(neighbor_col).alias("__n"),
-        )
-        labeled = cand if labeled is None else labeled.unionByName(cand)
-    flagged = labeled.join(
+    flagged = _labeled_tiers(tiers, query_col, neighbor_col).join(
         F.broadcast(truth.withColumn("__hit", F.lit(1))), ["__q", "__n"], "left"
     )
     per_tier = flagged.groupBy("tier").agg(
@@ -2308,6 +2054,25 @@ def recall_report(
             F.expr("hits * 1000000 div n_truth").alias("recall_micro"),
         )
         .orderBy("tier")
+    )
+
+
+def _labeled_tiers(
+    tiers: dict[str, DataFrame], query_col: str, neighbor_col: str, *extra: str
+) -> DataFrame:
+    """Every tier's list as one ``(tier, __q, __n, *extra)`` union, in
+    tier-name order — the one input both ANN receipts score."""
+    return reduce(
+        DataFrame.unionByName,
+        [
+            t.select(
+                F.lit(name).alias("tier"),
+                F.col(query_col).alias("__q"),
+                F.col(neighbor_col).alias("__n"),
+                *extra,
+            )
+            for name, t in sorted(tiers.items())
+        ],
     )
 
 
@@ -2347,18 +2112,13 @@ def random_projection(
     Returns the input frame + ``proj`` (array<double>, components
     rounded to 6 dp).
     """
-    import hashlib
     import math
 
     if in_dim < 1:
         raise ValueError(f"random_projection: in_dim must be >= 1, got {in_dim}")
     if out_dim < 1:
         raise ValueError(f"random_projection: out_dim must be >= 1, got {out_dim}")
-
-    def _sign(i: int, j: int) -> int:
-        h = hashlib.md5(f"{salt}|{i}|{j}".encode()).hexdigest()[:15]
-        return 1 if int(h, 16) % 2 == 0 else -1
-
+    signs = random_projection_signs(in_dim, out_dim, salt)
     scale = repr(1.0 / math.sqrt(float(out_dim)))
     guarded = df.withColumn(
         "__dv",
@@ -2370,10 +2130,9 @@ def random_projection(
         ).otherwise(F.expr(_dbl(vec_col))),
     )
     comps = []
-    for j in range(out_dim):
+    for row in signs:
         terms = "".join(
-            (" + " if _sign(i, j) > 0 else " - ") + f"__dv[{i}]"
-            for i in range(in_dim)
+            (" + " if sgn > 0 else " - ") + f"__dv[{i}]" for i, sgn in enumerate(row)
         )
         comps.append(F.expr(f"round(({scale}) * (cast(0 as double){terms}), 6)"))
     return guarded.withColumn("proj", F.array(*comps)).drop("__dv")
@@ -2556,85 +2315,56 @@ def retrieval_eval_report(
 
     if not tiers:
         raise ValueError("retrieval_eval_report: need at least one tier")
-    # cache(), not a lazy localCheckpoint: the df→RDD conversion a
-    # checkpoint does physically plans the exact tier at build time
-    # (the r12 recall_report finding) — the cache defers to the one
-    # final job and still dedupes the per-tier re-reads. Its layout on
-    # the query id is pinned to the session's partition count (AQE may
-    # resize a cached plan, session.py): every tier's per-query join
-    # reuses it instead of re-shuffling truth once per tier.
-    n_parts = int(exact.sparkSession.conf.get("spark.sql.shuffle.partitions"))
-    truth = (
-        exact.select(
-            F.col("query_id").alias("__q"),
-            F.col("neighbor_id").alias("__n"),
-            F.col("rn").alias("__er"),
-        )
-        .repartition(n_parts, F.col("__q"))
-        .cache()
+    # recall_report's shape: one labeled union, one broadcast join
+    # against the truth, then groupBy(tier, query); the tier × query grid
+    # comes from the truth's query set crossed with the tier names
+    truth = exact.select(
+        F.col("query_id").alias("__q"),
+        F.col("neighbor_id").alias("__n"),
+        F.col("rn").alias("__er"),
     )
-    qset = truth.select("__q").distinct()
+    scored = _labeled_tiers(tiers, "query_id", "neighbor_id", "rn").join(
+        F.broadcast(truth), ["__q", "__n"], "left"
+    ).select(
+        "tier", "__q", "rn", F.coalesce(F.lit(k + 1) - F.col("__er"), F.lit(0)).alias("__rel")
+    )
+    per_q = scored.groupBy("tier", "__q").agg(
+        *[
+            F.max(F.when(F.col("rn") == r, F.col("__rel"))).alias(f"__rel{r}")
+            for r in range(1, k + 1)
+        ],
+        # MRR honors the same @k cutoff as the nDCG pivots: a hit past
+        # rank k earns no reciprocal credit (r11 ADVICE — without the
+        # rn <= k term a tier frame carrying more than k rows per query
+        # scored inconsistently with nDCG@k)
+        F.min(F.when((F.col("__rel") > 0) & (F.col("rn") <= k), F.col("rn"))).alias(
+            "__first"
+        ),
+    )
+    grid = truth.select("__q").distinct().select(
+        "__q", F.explode(F.array(*[F.lit(n) for n in sorted(tiers)])).alias("tier")
+    )
     idcg = sum((k + 1 - i) * (1.0 / math.log2(i + 1)) for i in range(1, k + 1))
     dcg_terms = " + ".join(
         f"cast(coalesce(__rel{r}, 0) as double) * {1.0 / math.log2(r + 1)!r}"
         for r in range(1, k + 1)
     )
-    reports = []
-    for name, t in sorted(tiers.items()):
-        scored = (
-            t.select("query_id", "neighbor_id", "rn")
-            .join(
-                truth,
-                (F.col("query_id") == F.col("__q"))
-                & (F.col("neighbor_id") == F.col("__n")),
-                "left",
-            )
-            .select(
-                "query_id",
-                "rn",
-                F.coalesce(F.lit(k + 1) - F.col("__er"), F.lit(0)).alias("__rel"),
-            )
-        )
-        per_q = scored.groupBy("query_id").agg(
-            *[
-                F.max(F.when(F.col("rn") == r, F.col("__rel"))).alias(f"__rel{r}")
-                for r in range(1, k + 1)
-            ],
-            # MRR honors the same @k cutoff as the nDCG pivots: a hit
-            # past rank k earns no reciprocal credit (r11 ADVICE —
-            # without the rn <= k term a tier frame carrying more than
-            # k rows per query scored inconsistently with nDCG@k)
-            F.min(
-                F.when(
-                    (F.col("__rel") > 0) & (F.col("rn") <= k), F.col("rn")
-                )
-            ).alias("__first"),
-        )
-        per_q = qset.join(
-            per_q, qset["__q"] == per_q["query_id"], "left"
-        ).withColumn(
+    return (
+        grid.join(per_q, ["tier", "__q"], "left")
+        .withColumn(
             "__ndcg_micro",
+            F.expr(f"cast(round((({dcg_terms}) / {idcg!r}) * 1000000) as bigint)"),
+        )
+        .groupBy("tier")
+        .agg(
+            F.count(F.lit(1)).cast("bigint").alias("n_queries"),
             F.expr(
-                f"cast(round((({dcg_terms}) / {idcg!r}) * 1000000) as bigint)"
-            ),
+                "sum(CASE WHEN __first IS NULL THEN 0 "
+                "ELSE 1000000 div __first END) div count(1)"
+            ).alias("mrr_micro"),
+            F.expr("sum(coalesce(__ndcg_micro, 0)) div count(1)").alias("ndcg_micro"),
         )
-        reports.append(
-            per_q.agg(
-                F.lit(name).alias("tier"),
-                F.count(F.lit(1)).cast("bigint").alias("n_queries"),
-                F.expr(
-                    "sum(CASE WHEN __first IS NULL THEN 0 "
-                    "ELSE 1000000 div __first END) div count(1)"
-                ).alias("mrr_micro"),
-                F.expr("sum(coalesce(__ndcg_micro, 0)) div count(1)").alias(
-                    "ndcg_micro"
-                ),
-            )
-        )
-    out = reports[0]
-    for r in reports[1:]:
-        out = out.unionByName(r)
-    return out
+    )
 
 
 def standardize_report(
@@ -2736,8 +2466,6 @@ def hard_negatives(
         raise ValueError(
             f"hard_negatives: candidates ({candidates}) must be >= k ({k})"
         )
-    from pyspark.sql import Window
-
     cand = lsh_knn(corpus, queries, k=candidates, num_bits=num_bits)
     ql = corpus.select(
         F.col(id_col).alias("query_id"), F.col(label_col).alias("query_label")
@@ -2745,21 +2473,12 @@ def hard_negatives(
     nl = corpus.select(
         F.col(id_col).alias("neighbor_id"), F.col(label_col).alias("neighbor_label")
     )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cosine").desc(), F.col("neighbor_id").asc()
-    )
-    return (
+    negatives = (
         cand.join(ql, "query_id")
         .join(nl, "neighbor_id")
         .where(F.col("query_label") != F.col("neighbor_label"))
-        .withColumn("hn_rank", F.row_number().over(w))
-        .where(F.col("hn_rank") <= k)
-        .select(
-            "query_id",
-            "neighbor_id",
-            "cosine",
-            F.col("query_label").cast("int").alias("query_label"),
-            F.col("neighbor_label").cast("int").alias("neighbor_label"),
-            F.col("hn_rank").cast("int").alias("hn_rank"),
-        )
+    )
+    return _top_k(
+        negatives, k, "hn_rank", "query_id", "neighbor_id", "cosine",
+        *[F.col(c).cast("int").alias(c) for c in ("query_label", "neighbor_label", "hn_rank")],
     )
